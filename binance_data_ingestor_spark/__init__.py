@@ -13,10 +13,9 @@ Layout:
     config.py     — CLI-parity config object (SURVEY §2.8)
     operators/    — projections, order-book analytics, klines, windows,
                     as-of join, dedup family, similarity search, text ops
-    sources/      — file/fixture sources + Binance WebSocket stream source
+    sources/      — raw-frame fixtures + Binance WebSocket stream source
     sinks/        — JSONL/CSV/Parquet/ORC, console, Redis foreachBatch
     streaming/    — streaming jobs (kline aggregation, sample-bounded runs)
-    functions/    — reusable column expression helpers
 """
 
 __version__ = "0.1.0"

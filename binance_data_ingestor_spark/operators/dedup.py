@@ -30,6 +30,9 @@ from .partitioning import fanout
 from .text import fingerprint, tokens
 
 HEX = "0123456789abcdef"
+# connected_components raises rather than propagate for more rounds
+# than this (25 covers any graph under ~2^25 nodes of pure path)
+CC_MAX_ROUNDS = 25
 
 
 # -- exact ------------------------------------------------------------------
@@ -641,13 +644,8 @@ def incremental_lsh_neardups(
 
 # -- connected components (near-dup clustering) -----------------------------
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    max_iterations: int = 25,
-) -> DataFrame:
-    """Cluster ids for every node of an undirected edge set.
+def connected_components(edges: DataFrame) -> DataFrame:
+    """Cluster ids for every node of an undirected (id_a, id_b) edge set.
 
     Min-label propagation: label(v) starts at min(v, neighbors(v)) and
     each round takes the min over the neighborhood; fixpoint = connected
@@ -667,11 +665,11 @@ def connected_components(
     Convergence piggybacks on a 1-row aggregate: labels only ever
     decrease, so an unchanged sum IS the fixpoint — no extra join.
     Raises rather than returning silently-unconverged labels if
-    ``max_iterations`` is exhausted (25 rounds covers any graph under
-    ~2^25 nodes of pure path).
+    ``CC_MAX_ROUNDS`` is exhausted.
     """
-    sym = edges.select(F.col(src).alias("node"), F.col(dst).alias("nbr")).union(
-        edges.select(F.col(dst).alias("node"), F.col(src).alias("nbr"))
+    a, b = F.col("id_a"), F.col("id_b")
+    sym = edges.select(a.alias("node"), b.alias("nbr")).union(
+        edges.select(b.alias("node"), a.alias("nbr"))
     )
     sym = sym.localCheckpoint(eager=True)
 
@@ -682,7 +680,7 @@ def connected_components(
         .localCheckpoint(eager=True)
     )
     prev = labels.agg(F.sum("label")).collect()[0][0]
-    for _ in range(max_iterations):
+    for _ in range(CC_MAX_ROUNDS):
         nbr_labels = sym.join(
             labels.withColumnRenamed("node", "nbr"), "nbr"
         ).select("node", "label")
@@ -709,7 +707,7 @@ def connected_components(
         prev = cur
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iterations} rounds"
+            f"connected_components did not converge in {CC_MAX_ROUNDS} rounds"
         )
     return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
 

@@ -12,7 +12,7 @@ Scale design (100 TB / 1000 executors):
   length (round-11 measurement): ``localCheckpoint(eager=True)`` comes
   back as ``UnknownPartitioning(0)`` under AQE, forcing every round to
   re-Exchange AND re-Sort the edges, so for short fixed-round runs
-  (``iterations <= checkpoint_interval`` — one final job) the
+  (``iterations <= CHECKPOINT_INTERVAL`` — one final job) the
   repartitioned edge list stays LAZY and AQE shuffle-stage reuse
   materializes its exchange once. For long runs the periodic ranks
   checkpoint splits the run into one job per interval — stage reuse
@@ -23,7 +23,7 @@ Scale design (100 TB / 1000 executors):
 - Out-degrees are folded into the edge list up front
   (``weight = 1/outdeg``), so the per-round join is a single
   equi-join + groupBy — two narrow stages per round.
-- Ranks are localCheckpoint'ed every ``checkpoint_interval`` rounds,
+- Ranks are localCheckpoint'ed every ``CHECKPOINT_INTERVAL`` rounds,
   NOT every round: each round's output feeds exactly one consumer, so
   a lazy chain evaluates each stage once in a single job — eager
   per-round checkpoints would serialize the run into one job per
@@ -41,27 +41,26 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+DAMPING = 0.85
+# rounds between rank/label checkpoints in pagerank and label_propagation
+CHECKPOINT_INTERVAL = 5
+# k_core raises rather than peel for more rounds than this
+K_CORE_MAX_ROUNDS = 64
 
-def pagerank(
-    edges: DataFrame,
-    iterations: int = 3,
-    damping: float = 0.85,
-    src: str = "src",
-    dst: str = "dst",
-    partitions: int | None = None,
-    checkpoint_interval: int = 5,
-) -> DataFrame:
-    """Fixed-iteration PageRank on a directed edge list.
+
+def _shuffle_partitions(df: DataFrame) -> int:
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
+def pagerank(edges: DataFrame, iterations: int = 3) -> DataFrame:
+    """Fixed-iteration PageRank on a directed (src, dst) edge list.
 
     Every node is assumed to have out-degree ≥ 1 (symmetrize the edge
     list for undirected graphs — then dangling-mass redistribution is
     unnecessary and the formula stays the portable
     ``r' = (1-d) + d * Σ_in r/outdeg``). Returns (node, rank).
     """
-    n_part = partitions or edges.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    deg = edges.groupBy(src).agg(F.count("*").alias("outdeg"))
+    deg = edges.groupBy("src").agg(F.count("*").alias("outdeg"))
     # fold 1/outdeg into the edges once; repartition by src so each
     # round's join reuses this layout instead of re-shuffling edges.
     #
@@ -77,17 +76,13 @@ def pagerank(
     # one job per interval and stage reuse does not span jobs, so there
     # the eager checkpoint pays for itself — keep it in that regime.
     weighted = (
-        edges.join(deg, src)
-        .select(
-            F.col(src).alias("src"),
-            F.col(dst).alias("dst"),
-            (F.lit(1.0) / F.col("outdeg")).alias("w"),
-        )
-        .repartition(int(n_part), "src")
+        edges.join(deg, "src")
+        .select("src", "dst", (F.lit(1.0) / F.col("outdeg")).alias("w"))
+        .repartition(_shuffle_partitions(edges), "src")
     )
-    if iterations > checkpoint_interval:
+    if iterations > CHECKPOINT_INTERVAL:
         weighted = weighted.localCheckpoint(eager=True)
-    ranks = deg.select(F.col(src).alias("node"), F.lit(1.0).alias("rank"))
+    ranks = deg.select(F.col("src").alias("node"), F.lit(1.0).alias("rank"))
     for i in range(1, iterations + 1):
         contribs = weighted.join(
             ranks, weighted["src"] == ranks["node"], "inner"
@@ -96,12 +91,12 @@ def pagerank(
             contribs.groupBy("dst")
             .agg(
                 (
-                    F.lit(1.0 - damping) + F.lit(damping) * F.sum("contrib")
+                    F.lit(1.0 - DAMPING) + F.lit(DAMPING) * F.sum("contrib")
                 ).alias("rank")
             )
             .select(F.col("dst").alias("node"), "rank")
         )
-        if i % checkpoint_interval == 0 and i < iterations:
+        if i % CHECKPOINT_INTERVAL == 0 and i < iterations:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks
 
@@ -188,15 +183,10 @@ def triangle_stats(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     )
 
 
-def k_core(
-    edges: DataFrame,
-    k: int,
-    u: str = "u",
-    v: str = "v",
-    max_rounds: int = 64,
-) -> DataFrame:
-    """k-core decomposition by iterative peel: repeatedly drop nodes
-    with degree < k until a fixpoint; return surviving (node, core_deg).
+def k_core(edges: DataFrame, k: int) -> DataFrame:
+    """k-core decomposition of an undirected (u, v) edge list by
+    iterative peel: repeatedly drop nodes with degree < k until a
+    fixpoint; return surviving (n, core_deg).
 
     The third iterative-graph pattern next to PageRank (fixed rounds)
     and connected components (label propagation): here the FRONTIER
@@ -206,26 +196,24 @@ def k_core(
     is two semi-joins against the (node)-keyed survivor set plus a
     degree aggregate; per-round localCheckpoint caps lineage (STATUS
     lesson 9). Peel rounds are data-dependent (worst case O(V)); the
-    `max_rounds` guard turns a pathological chain graph into an error
+    ``K_CORE_MAX_ROUNDS`` guard turns a pathological chain graph into an error
     rather than an endless driver loop.
     """
-    from pyspark.sql import functions as F
-
-    cur = edges.select(u, v).localCheckpoint(eager=True)
+    cur = edges.select("u", "v").localCheckpoint(eager=True)
     n_edges = cur.count()
-    for _ in range(max_rounds):
+    for _ in range(K_CORE_MAX_ROUNDS):
         if n_edges == 0:
             break
         deg = (
-            cur.select(F.col(u).alias("n"))
-            .unionAll(cur.select(F.col(v).alias("n")))
+            cur.select(F.col("u").alias("n"))
+            .unionAll(cur.select(F.col("v").alias("n")))
             .groupBy("n")
             .agg(F.count("*").alias("d"))
         )
         keep = deg.filter(F.col("d") >= k).select("n")
         nxt = (
-            cur.join(keep.withColumnRenamed("n", u), u, "left_semi")
-            .join(keep.withColumnRenamed("n", v), v, "left_semi")
+            cur.join(keep.withColumnRenamed("n", "u"), "u", "left_semi")
+            .join(keep.withColumnRenamed("n", "v"), "v", "left_semi")
             .localCheckpoint(eager=True)
         )
         n_next = nxt.count()
@@ -233,23 +221,16 @@ def k_core(
             break
         cur, n_edges = nxt, n_next
     else:
-        raise RuntimeError(f"k_core did not converge in {max_rounds} rounds")
+        raise RuntimeError(f"k_core did not converge in {K_CORE_MAX_ROUNDS} rounds")
     return (
-        cur.select(F.col(u).alias("n"))
-        .unionAll(cur.select(F.col(v).alias("n")))
+        cur.select(F.col("u").alias("n"))
+        .unionAll(cur.select(F.col("v").alias("n")))
         .groupBy("n")
         .agg(F.count("*").alias("core_deg"))
     )
 
 
-def label_propagation(
-    edges: DataFrame,
-    rounds: int,
-    u: str = "u",
-    v: str = "v",
-    partitions: int | None = None,
-    checkpoint_interval: int = 5,
-) -> DataFrame:
+def label_propagation(edges: DataFrame, rounds: int) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007, made deterministic): every node starts as its own label;
     each round every node adopts the MAJORITY label among its
@@ -260,25 +241,22 @@ def label_propagation(
     oracle-checkable by unrolling the rounds as chained CTEs (the
     q99-PageRank / q158-k-core pattern); classic async LPA with random
     tie-breaks is not reproducible across engines, which is why this
-    variant exists. ``edges`` holds each undirected edge once
-    (canonical u < v); symmetrization happens here.
+    variant exists. ``edges`` holds each undirected edge once as
+    (u, v), canonical u < v; symmetrization happens here.
 
     Scale design: the symmetrized edge list is partitioned by ``src``
     ONCE and localCheckpoint'ed — each round shuffles only the
     O(nodes) label vector (join on src, then a (dst, label)-keyed
     count with map-side partial aggregation, then the per-dst argmax
     as a lexicographic struct-min, also partially aggregable). Labels
-    checkpoint every ``checkpoint_interval`` rounds to bound lineage,
+    checkpoint every ``CHECKPOINT_INTERVAL`` rounds to bound lineage,
     not every round (the pagerank lesson: eager per-round checkpoints
     serialize the job chain).
     """
-    n_part = partitions or edges.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
-    fwd = edges.select(F.col(u).alias("src"), F.col(v).alias("dst"))
+    fwd = edges.select(F.col("u").alias("src"), F.col("v").alias("dst"))
     sym = (
         fwd.unionAll(fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .repartition(int(n_part), "src")
+        .repartition(_shuffle_partitions(edges), "src")
         .localCheckpoint(eager=True)
     )
     labels = sym.select(F.col("src").alias("node")).distinct().select(
@@ -301,23 +279,16 @@ def label_propagation(
             )
             .select(F.col("dst").alias("node"), F.col("s.lab").alias("lab"))
         )
-        if i % checkpoint_interval == 0 and i < rounds:
+        if i % CHECKPOINT_INTERVAL == 0 and i < rounds:
             labels = labels.localCheckpoint(eager=True)
     return labels.select("node", F.col("lab").alias("community"))
 
 
-def bfs_hops(
-    edges: DataFrame,
-    sources: DataFrame,
-    max_hops: int,
-    src: str = "src",
-    dst: str = "dst",
-    partitions: int | None = None,
-) -> DataFrame:
+def bfs_hops(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
     """Multi-source BFS: minimum hop distance (≤ ``max_hops``) from any
-    source node, over a directed edge list (symmetrize outside for
-    undirected graphs). Returns (node, hop) for every node reachable
-    within ``max_hops``; sources themselves carry hop 0. The 5th
+    source node, over a directed (src, dst) edge list (symmetrize
+    outside for undirected graphs). Returns (node, hop) for every node
+    reachable within ``max_hops``; sources themselves carry hop 0. The 5th
     iterative-graph pattern in this engine (PageRank = damped rounds,
     k-core = monotone peel, CC = min fixpoint, LPA = majority fixpoint,
     BFS = frontier expansion).
@@ -338,12 +309,9 @@ def bfs_hops(
 
     ``sources`` must expose a ``node`` column (deduplicated here).
     """
-    n_part = partitions or edges.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions"
-    )
     relations = (
-        edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .repartition(int(n_part), "src")
+        edges.select("src", "dst")
+        .repartition(_shuffle_partitions(edges), "src")
         .localCheckpoint(eager=True)
     )
     frontier = (

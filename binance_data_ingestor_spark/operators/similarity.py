@@ -392,79 +392,6 @@ def codebooks(
     ]
 
 
-def pq_fit(
-    df: DataFrame,
-    *,
-    vec_col: str = "embedding",
-    m: int = 8,
-    n_codes: int = 16,
-    dim: int = 64,
-    iters: int = 4,
-    seed: int = 11,
-) -> list[list[list[float]]]:
-    """Per-subspace k-means (Lloyd's) codebook training, distributed.
-
-    Each iteration is one pass over the vectors: every task assigns its
-    batch to the nearest centroid per subspace (GEMM against the tiny
-    codebook) and emits PARTIAL sums — at most |tasks|·m·n_codes rows of
-    (subspace, code, vector-sum, count) — which the driver reduces into
-    new means (a k·d-sized reduction, never the data). Empty clusters
-    keep their previous centroid. Deterministic: seeded init, fixed
-    iteration count, and the driver-side reduce sorts partials before
-    summing so float addition order is stable run-to-run.
-
-    At 100 TB you train on a deterministic hash-sample of the corpus
-    (codebooks converge on a few million vectors) and only `pq_encode`
-    touches the full data; `df` here is that sample.
-    """
-    ds = dim // m
-    books = [np.array(b, dtype=np.float64) for b in codebooks(dim, m, n_codes, seed)]
-    vecs = df.select(F.col(vec_col).alias("vec"))
-
-    for _ in range(iters):
-        B = [b.copy() for b in books]
-
-        def partial(
-            batches: Iterator[pd.DataFrame], _B: list[np.ndarray] = B
-        ) -> Iterator[pd.DataFrame]:
-            sums = np.zeros((m, n_codes, ds))
-            counts = np.zeros((m, n_codes), dtype=np.int64)
-            for pdf in batches:
-                M = _matrix(pdf["vec"])
-                for j in range(m):
-                    S = M[:, j * ds : (j + 1) * ds]
-                    d2 = (
-                        (S * S).sum(axis=1)[:, None]
-                        - 2.0 * (S @ _B[j].T)
-                        + (_B[j] * _B[j]).sum(axis=1)[None, :]
-                    )
-                    a = d2.argmin(axis=1)
-                    np.add.at(sums[j], a, S)
-                    np.add.at(counts[j], a, 1)
-            out = [
-                (j, c, list(sums[j, c]), int(counts[j, c]))
-                for j in range(m)
-                for c in range(n_codes)
-                if counts[j, c] > 0
-            ]
-            yield pd.DataFrame(
-                out, columns=["subspace", "code", "vsum", "n"]
-            )
-
-        parts = vecs.mapInPandas(
-            partial, "subspace int, code int, vsum array<double>, n long"
-        ).collect()
-        acc_s = np.zeros((m, n_codes, ds))
-        acc_n = np.zeros((m, n_codes), dtype=np.int64)
-        for r in sorted(parts, key=lambda r: (r["subspace"], r["code"], r["n"], r["vsum"])):
-            acc_s[r["subspace"], r["code"]] += np.asarray(r["vsum"])
-            acc_n[r["subspace"], r["code"]] += r["n"]
-        for j in range(m):
-            nz = acc_n[j] > 0
-            books[j][nz] = acc_s[j][nz] / acc_n[j][nz, None]
-    return [[list(c) for c in b] for b in books]
-
-
 def pq_encode(
     df: DataFrame,
     books: list[list[list[float]]],
@@ -889,9 +816,9 @@ def pq_fit_micro(
     (q67's oracle) — iterative training moves from rows-only checking
     to full hash parity.
 
-    Distribution shape (same as :func:`pq_fit`): each iteration is one
-    pass; tasks emit ≤ |tasks|·m·n_codes partial (sum, count) rows and
-    the driver reduces integers (order-free, no sort needed). Empty
+    Distribution shape: each iteration is one pass; tasks emit
+    ≤ |tasks|·m·n_codes partial (sum, count) rows and the driver
+    reduces integers (order-free, no sort needed). Empty
     clusters keep their previous centroid. At 100 TB you train on a
     deterministic hash-sample; int64 holds exact sums for ~9e6 vectors
     per task batch at µ-scale ±1e6 — far beyond any sane sample.

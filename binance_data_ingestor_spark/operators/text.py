@@ -317,13 +317,11 @@ def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
 BPE_SEP = "\x1f"
 
 
-def bpe_train(
-    df: DataFrame, *, text_col: str = "text", n_merges: int = 20
-) -> DataFrame:
-    """FULL iterative BPE tokenizer training: ``n_merges`` rounds of
-    (count adjacent symbol pairs → pick the most frequent → merge it
-    everywhere), returning the learned merge table — THE tokenizer
-    artifact: (rk, left_sym, right_sym, merged, cnt).
+def bpe_train(df: DataFrame, *, n_merges: int = 20) -> DataFrame:
+    """FULL iterative BPE tokenizer training on ``df.text``:
+    ``n_merges`` rounds of (count adjacent symbol pairs → pick the most
+    frequent → merge it everywhere), returning the learned merge table
+    — THE tokenizer artifact: (rk, left_sym, right_sym, merged, cnt).
 
     Scale shape (the classic BPE trick, one step of which is
     :func:`bpe_pair_counts`): the corpus collapses ONCE to the
@@ -350,8 +348,7 @@ def bpe_train(
     unrolled and hash-match the merge table.
     """
     spark = df.sparkSession
-    t = F.col(text_col)
-    words = df.select(F.explode(F.split(t, " ")).alias("w")).filter(
+    words = df.select(F.explode(F.split("text", " ")).alias("w")).filter(
         (F.length("w") > 0) & (~F.col("w").contains(BPE_SEP))
     )
     vocab = words.groupBy("w").agg(F.count("*").alias("freq"))

@@ -678,7 +678,7 @@ FROM sh
 # matrix alone: tr(C) = Σ C_ii, tr(C²) = Σ_ij C_ij² (C symmetric), so
 # NO eigensolve and no d²-amplified shuffle — sufficient statistics
 # (n, Σx_i, Σx_i·x_j upper triangle) are computed per TASK with the
-# q67 pq_fit partial-sums pattern (one mapInPandas pass, ≤ tasks ×
+# q67 pq_fit_micro partial-sums pattern (one mapInPandas pass, ≤ tasks ×
 # d(d+1)/2 partial rows; the data never shuffles) and reduced by a
 # tiny groupBy. Cross-engine float parity: each C_ij is rounded 6 dp
 # (the q92 convention — partition accumulation order differs from
@@ -686,7 +686,7 @@ FROM sh
 # both engines derive the traces from the IDENTICAL rounded matrix;
 # nullif(tr) guards the all-constant-embedding degenerate (round-7
 # audit discipline). Scale: one pass, task-bounded partials, a
-# 2,080-row reduce — the same contract that lets pq_fit train on
+# 2,080-row reduce — the same contract that lets pq_fit_micro train on
 # 100 TB.
 # --------------------------------------------------------------------------
 _ER_DIM = 64

@@ -2,15 +2,13 @@
 
 The reference keeps schemas implicit in its four projection functions
 (reference binance-di.py:35-67) and lets pandas infer all-string Parquet
-schemas at write time (binance-di.py:196-204).  The engine declares them
-once, typed: DecimalType(38,18) for money (Binance 8-dp strings — never
-Double for prices), TimestampType derivable from epoch-ms longs,
-BooleanType for flags, ArrayType(Struct) for book sides instead of JSON
-strings (SURVEY §1.3-1.4, FIXTURES.md).
-
-Two layers per stream type:
-  RAW_*    — the wire message (Binance short names), used by from_json.
-  NORM_*   — the normalized record the engine's projections emit.
+schemas at write time (binance-di.py:196-204).  The engine declares the
+wire messages once here, typed (RAW_*, Binance short names, used by
+from_json): epoch-ms longs, BooleanType flags.  Money stays a string
+until a consumer casts it to ``DEC`` = DecimalType(38,18) (Binance 8-dp
+strings — never Double for prices); ``operators/projections`` does so
+for book sides, which become ArrayType(Struct) instead of JSON strings
+(SURVEY §1.3-1.4, FIXTURES.md).
 """
 
 from __future__ import annotations
@@ -21,13 +19,6 @@ DEC = T.DecimalType(38, 18)
 
 # price/qty level as it arrives on the wire: ["118050.00", "0.5"]
 RAW_LEVEL = T.ArrayType(T.StringType())
-# typed level the engine keeps internally
-LEVEL = T.StructType(
-    [
-        T.StructField("price", DEC, True),
-        T.StructField("qty", DEC, True),
-    ]
-)
 
 # -- raw wire messages (field evidence: reference binance-di.py:35-67) --
 
@@ -103,56 +94,3 @@ RAW_SCHEMAS = {
     "trades": RAW_TRADE,
     "klines": RAW_KLINE,
 }
-
-# -- normalized records (dict keys at reference binance-di.py:35-67) --
-
-NORM_TICKER = T.StructType(
-    [
-        T.StructField("price_change", T.StringType(), True),
-        T.StructField("price_change_percent", T.StringType(), True),
-        T.StructField("last_price", T.StringType(), True),
-        T.StructField("high_price", T.StringType(), True),
-        T.StructField("low_price", T.StringType(), True),
-        T.StructField("total_volume_asset", T.StringType(), True),
-        T.StructField("total_volume_quote", T.StringType(), True),
-        T.StructField("event_time", T.LongType(), True),
-    ]
-)
-
-NORM_ORDER_BOOK = T.StructType(
-    [
-        T.StructField("lastUpdateId", T.LongType(), True),
-        T.StructField("bids", T.ArrayType(LEVEL), True),
-        T.StructField("asks", T.ArrayType(LEVEL), True),
-    ]
-)
-
-NORM_TRADE = T.StructType(
-    [
-        T.StructField("event_time", T.LongType(), True),
-        T.StructField("price", T.StringType(), True),
-        T.StructField("quantity", T.StringType(), True),
-        T.StructField("trade_time", T.LongType(), True),
-        T.StructField("is_buyer_maker", T.StringType(), True),
-    ]
-)
-
-NORM_KLINE = T.StructType(
-    [
-        T.StructField("event_time", T.LongType(), True),
-        T.StructField("kline_start_time", T.LongType(), True),
-        T.StructField("kline_close_time", T.LongType(), True),
-        T.StructField("symbol", T.StringType(), True),
-        T.StructField("interval", T.StringType(), True),
-        T.StructField("open_price", T.StringType(), True),
-        T.StructField("close_price", T.StringType(), True),
-        T.StructField("high_price", T.StringType(), True),
-        T.StructField("low_price", T.StringType(), True),
-        T.StructField("base_asset_volume", T.StringType(), True),
-        T.StructField("number_of_trades", T.LongType(), True),
-        T.StructField("is_kline_closed", T.StringType(), True),
-        T.StructField("quote_asset_volume", T.StringType(), True),
-    ]
-)
-
-STREAM_KEYS = ("ticker", "order-book", "trades", "klines")

