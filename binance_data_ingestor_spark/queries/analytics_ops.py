@@ -15,7 +15,13 @@ from pyspark.sql import functions as F
 
 from ..operators.funnel import funnel_steps
 from ..operators.text import hash_bucket_sql
-from .util import load, multiset_diff_count, stream_scratch
+from .util import (
+    assert_stream_matches_batch,
+    final_snapshot,
+    load,
+    replay_stream,
+    stagger_replay_mtimes,
+)
 
 
 # --------------------------------------------------------------------------
@@ -1756,7 +1762,7 @@ FROM a
 # Structured Streaming stateful operator
 # (streaming/stateful.flag_counter_stream) over a 3-micro-batch file
 # replay of the customer-grain responder flags, then asserted EXACTLY
-# multiset-equal to the batch counters (exceptAll both ways — integer
+# multiset-equal to the batch counters (one-job multiset diff — integer
 # counts, no tolerance) before the Wilson chain is emitted against
 # q250's own oracle (the q211↔q209 pattern: the streaming twin's
 # ORACLE IS the batch query's from-scratch SQL). The (n, k) monoid is
@@ -1769,13 +1775,7 @@ FROM a
 # longs; output is segment-grained no matter the customer count.
 # --------------------------------------------------------------------------
 def q279_stream_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import contextlib
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.stateful import flag_counter_stream
-    from .util import replay_input, stagger_replay_mtimes
 
     cust = load(spark, sf_dir, "customer").select(
         "c_custkey", F.col("c_mktsegment").alias("seg")
@@ -1809,59 +1809,22 @@ def q279_stream_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stagger_replay_mtimes(f"{w}/in")
 
-    data = replay_input(spark, sf_dir, "q279", _write)
-    work = stream_scratch("q279_")
-    stream = (
-        spark.readStream.schema("seg string, y long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")  # three real micro-batches
-        .parquet(f"{data}/in")
+    out = replay_stream(
+        spark,
+        sf_dir,
+        "q279",
+        _write,
+        {"in": "seg string, y long, ts timestamp"},
+        lambda stream: flag_counter_stream(stream, ["seg"], flag_col="y"),
+        files_per_trigger=1,  # three real micro-batches
     )
-    name = f"out_{_os.path.basename(work)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            flag_counter_stream(stream, ["seg"], flag_col="y")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q279 streaming replay timed out after 600 s")
-        snap = spark.table(name).collect()
-        mx: dict[str, int] = {}
-        fin: dict[str, tuple] = {}
-        for r in snap:
-            if r.n_processed >= mx.get(r.seg, -1):
-                mx[r.seg] = r.n_processed
-                fin[r.seg] = (r.n, r.k)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
-
-    streamed = spark.createDataFrame(
-        sorted((s, n, k) for s, (n, k) in fin.items()),
-        "seg string, n long, k long",
-    )
+    streamed = final_snapshot(out, "seg").select("seg", "n", "k")
     batch = (
         flagged.groupBy("seg")
         .agg(F.count("*").alias("n"), F.sum("y").alias("k"))
         .localCheckpoint(eager=False)  # gate side + emission
     )
-    # multiset-equality gate in ONE job (round-12): same predicate the
-    # two-exceptAll form tested, one shuffle instead of four
-    n_diff = multiset_diff_count(streamed, batch)
-    if n_diff:
-        raise AssertionError(
-            f"q279: streaming Wilson counters diverged from the batch "
-            f"count/sum on {n_diff} rows - refusing to emit either result"
-        )
+    assert_stream_matches_batch("q279", streamed, batch)
     z = F.lit(WILSON_Z)
     n = F.col("n").cast("double")
     p = F.col("k").cast("double") / n
@@ -1899,7 +1862,7 @@ def q279_stream_wilson(spark: SparkSession, sf_dir: str) -> DataFrame:
 # exact state equality is impossible BY DESIGN; what GK guarantees is
 # a RANK bound, and that is what gets certified: (1) the carried
 # per-key counts are asserted EXACTLY multiset-equal to the batch
-# counts (exceptAll both ways — a restarted fold under-counts), then
+# counts (one-job multiset diff — a restarted fold under-counts), then
 # (2) the final sketch's p50/p95 answers are rank-checked against the
 # EXACT data (one broadcast-probe count pass, integer arithmetic,
 # q190's interval-overlap form) within εn + 1. The ORACLE IS Q190's
@@ -1917,13 +1880,7 @@ GK_STREAM_EPS = 0.01
 
 
 def q289_stream_gk_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import contextlib
-    import os as _os
-    import shutil
-    import tempfile
-
     from ..streaming.stateful import gk_quantile_stream
-    from .util import replay_input, stagger_replay_mtimes
 
     o = load(spark, sf_dir, "orders").select(
         F.col("o_orderpriority").alias("grp"),
@@ -1941,59 +1898,23 @@ def q289_stream_gk_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stagger_replay_mtimes(f"{w}/in")
 
-    data = replay_input(spark, sf_dir, "q289", _write)
-    work = stream_scratch("q289_")
-    stream = (
-        spark.readStream.schema("grp string, cents long, ts timestamp")
-        .option("maxFilesPerTrigger", "1")  # three real micro-batches
-        .parquet(f"{data}/in")
-    )
-    name = f"out_{_os.path.basename(work)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            gk_quantile_stream(
+    fin = final_snapshot(
+        replay_stream(
+            spark,
+            sf_dir,
+            "q289",
+            _write,
+            {"in": "grp string, cents long, ts timestamp"},
+            lambda stream: gk_quantile_stream(
                 stream, ["grp"], value_col="cents", eps=GK_STREAM_EPS
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q289 streaming replay timed out after 600 s")
-        snap = spark.table(name).collect()
-        mx: dict[str, int] = {}
-        fin: dict[str, tuple] = {}
-        for r in snap:
-            if r.n_processed >= mx.get(r.grp, -1):
-                mx[r.grp] = r.n_processed
-                fin[r.grp] = (r.n, r.a50, r.a95)
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
-
-    streamed = spark.createDataFrame(
-        sorted((g, n) for g, (n, _a, _b) in fin.items()),
-        "grp string, n long",
+            ),
+            files_per_trigger=1,  # three real micro-batches
+        ),
+        "grp",
     )
     batch_n = o.groupBy("grp").agg(F.count("*").alias("n"))
-    n_diff = multiset_diff_count(streamed, batch_n)
-    if n_diff:
-        raise AssertionError(
-            f"q289: streaming GK carried counts diverged from the batch "
-            f"counts on {n_diff} rows - refusing to emit either result"
-        )
-    probes = spark.createDataFrame(
-        sorted((g, a, b) for g, (_n, a, b) in fin.items()),
-        "grp string, a50 long, a95 long",
-    )
+    assert_stream_matches_batch("q289", fin.select("grp", "n"), batch_n)
+    probes = fin.select("grp", "a50", "a95")
     stats = o.groupBy("grp").agg(
         F.count("*").alias("n"),
         F.expr("percentile(cents, array(0.5D, 0.95D))").alias("ex"),

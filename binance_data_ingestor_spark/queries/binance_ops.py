@@ -31,7 +31,13 @@ from ..operators.projections import (
     with_envelope_json,
 )
 from ..operators.partitioning import fanout, with_row_context
-from .util import load, multiset_diff_count, session_artifact, stream_scratch
+from .util import (
+    assert_stream_matches_batch,
+    load,
+    replay_stream,
+    session_artifact,
+    stagger_replay_mtimes,
+)
 
 SYMBOLS = ["BTCUSDT", "ETHUSDT", "SOLUSDT"]
 
@@ -1395,8 +1401,8 @@ FROM p
 # file stream with one far-future punctuation row per symbol
 # (event_id −1, the q195 sentinel discipline) so the final partial
 # bucket flushes; the emitted bucket rows are then asserted EXACTLY
-# multiset-equal to the fixed-volume batch table (exceptAll both
-# ways — integer counts and sums, no tolerance) before the certified
+# multiset-equal to the fixed-volume batch table (one-job multiset
+# diff — integer counts and sums, no tolerance) before the certified
 # batch result is emitted against the window-cumsum oracle. State per
 # key = one O(1) accumulator + the out-of-watermark buffer; output is
 # bucket-grained no matter the trade count.
@@ -1405,16 +1411,10 @@ VPIN_STREAM_V = 5_000_000  # cents of volume per bucket (fixed contract)
 
 
 def q251_stream_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import contextlib
-    import os as _os
-    import shutil
-    import tempfile
-
     from pyspark.sql import Window as W
 
     from ..operators.partitioning import with_global_cumsum
     from ..streaming.stateful import vpin_stream
-    from .util import replay_input
 
     t = (
         _trades_cents(spark, sf_dir, keep=("symbol", "event_id"))
@@ -1445,7 +1445,6 @@ def q251_stream_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(0).cast("long").alias("qc"),
         F.lit(0).cast("long").alias("bq"),
     )
-    from .util import stagger_replay_mtimes
 
     def _write(w: str) -> None:
         # range-partitioned by ts + STAGGERED part mtimes so replay
@@ -1465,55 +1464,15 @@ def q251_stream_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         stagger_replay_mtimes(f"{w}/in")
 
-    data = replay_input(spark, sf_dir, "q251", _write)
-    work = stream_scratch("q251_")
-    stream = (
-        spark.readStream.schema(
-            "symbol string, ts timestamp, event_id long, qc long, bq long"
-        )
-        .option("maxFilesPerTrigger", "2")  # two real micro-batches
-        .parquet(f"{data}/in")
-    )
-    name = f"out_{_os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    # The tail bucket flushes only when the watermark passes the
-    # punctuation sentinel, and after the LAST file that advance can
-    # only happen in a no-data micro-batch. That behavior is an
-    # ambient default (true) — pin it explicitly so the certificate
-    # cannot start failing with a 600 s timeout if a session ever
-    # disables it (round-8 advice item).
-    prev_nodata = spark.conf.get(
-        "spark.sql.streaming.noDataMicroBatches.enabled", "true"
-    )
-    spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    try:
-        q = (
-            vpin_stream(stream, VPIN_STREAM_V)
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q251 streaming replay timed out after 600 s")
-        streamed = spark.createDataFrame(
-            [r for r in spark.table(name).collect()
-             if r.symbol != "__WM_PUSH__"],
-            "symbol string, bucket long, n_trades long, "
-            "buy_vol long, sell_vol long",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-        spark.conf.set(
-            "spark.sql.streaming.noDataMicroBatches.enabled", prev_nodata
-        )
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
+    streamed = replay_stream(
+        spark,
+        sf_dir,
+        "q251",
+        _write,
+        {"in": "symbol string, ts timestamp, event_id long, qc long, bq long"},
+        lambda stream: vpin_stream(stream, VPIN_STREAM_V),
+        files_per_trigger=2,  # two real micro-batches
+    ).filter(F.col("symbol") != "__WM_PUSH__")
 
     cum = with_global_cumsum(
         t,
@@ -1539,12 +1498,7 @@ def q251_stream_vpin(spark: SparkSession, sf_dir: str) -> DataFrame:
         # feeds the one-job multiset gate AND the emitted result
         .localCheckpoint(eager=False)
     )
-    n_diff = multiset_diff_count(streamed, batch)
-    if n_diff:
-        raise AssertionError(
-            f"q251: streaming VPIN buckets diverged from the fixed-volume "
-            f"batch clock on {n_diff} rows - refusing to emit either result"
-        )
+    assert_stream_matches_batch("q251", streamed, batch)
     ws = W.partitionBy("symbol")  # bucket-summary-sized
     vol = F.col("buy_vol") + F.col("sell_vol")
     imb = F.abs(F.col("buy_vol") - F.col("sell_vol"))

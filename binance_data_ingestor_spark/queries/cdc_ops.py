@@ -13,7 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.merge import latest_snapshot, scd2_intervals, upsert
-from .util import load, multiset_diff_count, stream_scratch
+from .util import (
+    assert_stream_matches_batch,
+    final_snapshot,
+    load,
+    replay_stream,
+)
 
 # Last day of the 30-day event window is the "change batch" for q75 —
 # chosen so a meaningful fraction of users has NO event in the batch and
@@ -508,14 +513,8 @@ Q209_SQL = _q209_sql()
 # audit recomputes.
 # --------------------------------------------------------------------------
 def q211_stream_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import contextlib
-    import os
-    import shutil
-    import tempfile
-
     from ..operators.kmv import u60_sql
     from ..streaming.stateful import xor_digest_stream
-    from .util import replay_input
 
     key = "concat(CAST(doc_id AS STRING), ':', coalesce(text, ''))"
     docs = load(spark, sf_dir, "documents").select(
@@ -526,7 +525,7 @@ def q211_stream_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel = spark.sql(
         "SELECT '__wm__' source, CAST(0 AS BIGINT) h, to_timestamp('2031-01-01') ts"
     )
-    data = replay_input(
+    out = replay_stream(
         spark,
         sf_dir,
         "q211",
@@ -534,61 +533,20 @@ def q211_stream_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(4)
         .write.mode("overwrite")
         .parquet(f"{w}/in"),
+        {"in": "source string, h long, ts timestamp"},
+        lambda stream: xor_digest_stream(
+            stream, ["source"], hash_col="h", watermark="30 minutes"
+        ),
     )
-    work = stream_scratch("q211_")
-    stream = (
-        spark.readStream.schema("source string, h long, ts timestamp")
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(f"{data}/in")
-    )
-    name = f"out_{os.path.basename(work)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            xor_digest_stream(
-                stream, ["source"], hash_col="h", watermark="30 minutes"
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q211 streaming replay timed out after 600 s")
-        # drain eagerly (one row per source per batch by the emission
-        # contract) so the memory table + work dir tear down here; keep
-        # each source's highest-n_processed snapshot
-        snap = spark.table(name).filter(F.col("source") != "__wm__").collect()
-        mx: dict[str, int] = {}
-        fin: dict[str, int] = {}
-        for r in snap:
-            if r.n_processed >= mx.get(r.source, -1):
-                mx[r.source] = r.n_processed
-                fin[r.source] = r.digest
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
-
-    streamed = spark.createDataFrame(
-        sorted((s, d, mx[s]) for s, d in fin.items()),
-        "source string, digest long, n long",
-    )
+    # one row per source per data batch by the emission contract
+    streamed = final_snapshot(
+        out.filter(F.col("source") != "__wm__"), "source"
+    ).select("source", "digest", F.col("n_processed").alias("n"))
     batch = q209_source_digest(spark, sf_dir).localCheckpoint(
         eager=False
     )  # feeds the one-job multiset gate + the emitted result
     bd = batch.select("source", "digest", F.col("n_docs").alias("n"))
-    n_diff = multiset_diff_count(streamed, bd)
-    if n_diff:
-        raise AssertionError(
-            f"q211: streaming digest diverged from the batch bit_xor on "
-            f"{n_diff} sources - refusing to emit either result"
-        )
+    assert_stream_matches_batch("q211", streamed, bd)
     return batch
 
 

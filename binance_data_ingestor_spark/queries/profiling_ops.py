@@ -9,15 +9,16 @@ globally (the classic ntile formulation would — see q85 docstring).
 
 from __future__ import annotations
 
-import contextlib
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.text import HEX_DIGITS, hash_bucket_sql
-from .util import load, multiset_diff_count, stream_scratch
+from .util import (
+    assert_stream_matches_batch,
+    final_snapshot,
+    load,
+    replay_stream,
+)
 
 DEPTH_BINS = 10
 
@@ -211,10 +212,7 @@ WHERE cnt >= tot * {HH_MIN_SHARE}
 # ingestion-order-dependent and deliberately NOT emitted.
 # --------------------------------------------------------------------------
 def q187_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import heavy_hitters_stream
-    from .util import replay_input
 
     capacity = max(int(2.0 / HH_MIN_SHARE), 16)
     toks = (
@@ -229,67 +227,26 @@ def q187_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     sentinel = spark.sql(
         "SELECT '__wm__' grp, 'x' token, to_timestamp('2031-01-01') ts"
     )
-    # input parquet memoized per (session, sf); the checkpoint below is
-    # fresh per invocation (a reused checkpoint would resume, not replay)
-    data = replay_input(
-        spark,
-        sf_dir,
-        "q187",
-        lambda w: base.unionByName(sentinel)
-        .coalesce(4)
-        .write.mode("overwrite")
-        .parquet(f"{w}/in"),
-    )
-    work = stream_scratch("q187_")
-    stream = (
-        spark.readStream.schema("grp string, token string, ts timestamp")
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(f"{data}/in")
-    )
-    # mkdtemp's basename is unique per call and [A-Za-z0-9_] — a valid,
-    # DETERMINISTIC-per-run view name (no per-process hash randomization).
-    name = f"out_{os.path.basename(work)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            heavy_hitters_stream(
+    # ≤ capacity rows per batch: MG retains ≤ capacity items per key
+    # and only grp='all' is kept
+    cand = (
+        replay_stream(
+            spark,
+            sf_dir,
+            "q187",
+            lambda w: base.unionByName(sentinel)
+            .coalesce(4)
+            .write.mode("overwrite")
+            .parquet(f"{w}/in"),
+            {"in": "grp string, token string, ts timestamp"},
+            lambda stream: heavy_hitters_stream(
                 stream, ["grp"], "token",
                 capacity=capacity, watermark="30 minutes",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            ),
         )
-        # availableNow must drain fully before the memory sink is read —
-        # a partial replay voids the MG retention guarantee (candidates
-        # could be missing true heavy hitters). Timeout ⇒ stop + raise,
-        # never proceed on an incomplete candidate set.
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q187 streaming replay timed out after 600 s")
-        # Drain the candidate set eagerly so the memory table and the
-        # work dir (input + checkpoint) can be torn down here. Bounded
-        # collect by contract: MG retains ≤ capacity items per key and
-        # only grp='all' is kept, so this is ≤ capacity rows.
-        cand_tokens = [
-            r[0]
-            for r in spark.table(name)
-            .filter(F.col("grp") == "all")
-            .select("item")
-            .distinct()
-            .collect()
-        ]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
-    cand = spark.createDataFrame(
-        [(t,) for t in cand_tokens], "token string"
+        .filter(F.col("grp") == "all")
+        .select(F.col("item").alias("token"))
+        .distinct()
     )
     counts = (
         toks.join(F.broadcast(cand), "token")
@@ -909,10 +866,7 @@ Q196_SQL = _q196_sql()
 # either side).
 # --------------------------------------------------------------------------
 def q199_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import kmv_stream
-    from .util import replay_input
 
     k = _KMV_K
     # one checkpointed artifact feeds the replay input, the 3 batch-twin
@@ -937,7 +891,7 @@ def q199_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT '__wm__' lab, CAST(0 AS BIGINT) h, 'x' item,"
         " to_timestamp('2031-01-01') ts"
     )
-    data = replay_input(
+    out = replay_stream(
         spark,
         sf_dir,
         "q199",
@@ -945,56 +899,16 @@ def q199_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(4)
         .write.mode("overwrite")
         .parquet(f"{w}/in"),
+        {"in": "lab string, h long, item string, ts timestamp"},
+        lambda stream: kmv_stream(
+            stream, ["lab"], "item",
+            hash_col="h", k=k, watermark="30 minutes",
+        ),
     )
-    work = stream_scratch("q199_")
-    stream = (
-        spark.readStream.schema("lab string, h long, item string, ts timestamp")
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(f"{data}/in")
-    )
-    name = f"out_{os.path.basename(work)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            kmv_stream(
-                stream, ["lab"], "item",
-                hash_col="h", k=k, watermark="30 minutes",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q199 streaming replay timed out after 600 s")
-        # drain the snapshots eagerly (bounded: ≤ k rows per label per
-        # data batch by the state contract) so the memory table + work
-        # dir can be torn down here; keep each label's
-        # highest-n_processed snapshot driver-side (a self-join on the
-        # memory view would be lineage-ambiguous)
-        snap = (
-            spark.table(name)
-            .filter(F.col("lab") != "__wm__")
-            .select("lab", "h", "item", "n_processed")
-            .collect()
-        )
-        mx: dict[str, int] = {}
-        for r in snap:
-            mx[r.lab] = max(mx.get(r.lab, -1), r.n_processed)
-        fin_rows = [
-            (r.lab, r.h, r.item) for r in snap if r.n_processed == mx[r.lab]
-        ]
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
-
-    streamed = spark.createDataFrame(fin_rows, "lab string, h long, item string")
+    # ≤ k rows per label per data batch by the state contract
+    streamed = final_snapshot(
+        out.filter(F.col("lab") != "__wm__"), "lab"
+    ).select("lab", "h", "item")
 
     def sk(df: DataFrame, label: str) -> DataFrame:
         return (
@@ -1013,12 +927,7 @@ def q199_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(sk(base, "u"))
         .localCheckpoint(eager=False)  # feeds the one-job multiset gate
     )
-    n_diff = multiset_diff_count(streamed, batch_sk)
-    if n_diff:
-        raise AssertionError(
-            f"q199: streaming KMV sketch diverged from the batch sketch on "
-            f"{n_diff} rows — refusing to emit either result"
-        )
+    assert_stream_matches_batch("q199", streamed, batch_sk)
     return q196_kmv_set_sketch(spark, sf_dir, base=base)
 
 
@@ -1219,54 +1128,22 @@ FROM d2 GROUP BY pb, db
 # the certificate covers Spark's own incremental HashAggregate state.
 # --------------------------------------------------------------------------
 def q225_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
-    from .util import replay_input
-
     toks = load(spark, sf_dir, "documents").select(
         F.explode(F.split("text", " ")).alias("token")
     )
-    data = replay_input(
+    bcols = [F.expr(_cm_hash("spark", j)).alias(f"b{j}") for j in range(CM_D)]
+    streamed = replay_stream(
         spark,
         sf_dir,
         "q225",
         lambda w: toks.coalesce(4).write.mode("overwrite").parquet(f"{w}/in"),
+        {"in": "token string"},
+        lambda stream: stream.select(*bcols)
+        .groupBy(*[f"b{j}" for j in range(CM_D)])
+        .agg(F.count("*").alias("c")),
+        files_per_trigger=1,  # 4 real micro-batches
+        output_mode="complete",  # final table = the full histogram
     )
-    work = stream_scratch("q225_")
-    stream = (
-        spark.readStream.schema("token string")
-        .option("maxFilesPerTrigger", "1")  # 4 real micro-batches
-        .parquet(f"{data}/in")
-    )
-    bcols = [F.expr(_cm_hash("spark", j)).alias(f"b{j}") for j in range(CM_D)]
-    name = f"out_{os.path.basename(work)}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            stream.select(*bcols)
-            .groupBy(*[f"b{j}" for j in range(CM_D)])
-            .agg(F.count("*").alias("c"))
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("complete")  # final table = the full histogram
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q225 streaming replay timed out after 600 s")
-        # snapshot the terminated sink NOW (≤ w^d rows by construction)
-        streamed = spark.createDataFrame(
-            spark.table(name).collect(),
-            f"{', '.join(f'b{j} int' for j in range(CM_D))}, c long",
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        with contextlib.suppress(Exception):
-            spark.catalog.dropTempView(name)
-        shutil.rmtree(work, ignore_errors=True)
 
     batch = (
         toks.select(*bcols)
@@ -1276,12 +1153,7 @@ def q225_stream_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         # token scan would run once more
         .localCheckpoint(eager=False)
     )
-    n_diff = multiset_diff_count(streamed, batch)
-    if n_diff:
-        raise AssertionError(
-            f"q225: streaming count-min histogram diverged from the batch "
-            f"histogram on {n_diff} buckets - refusing to emit either result"
-        )
+    assert_stream_matches_batch("q225", streamed, batch)
     return q116_countmin(spark, sf_dir)
 
 

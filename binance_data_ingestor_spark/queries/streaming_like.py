@@ -11,15 +11,12 @@ tests/test_streaming.py).
 
 from __future__ import annotations
 
-import os
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
-from .util import load, multiset_diff_count, stream_scratch
+from .util import assert_stream_matches_batch, load, replay_stream
 
 
 # --------------------------------------------------------------------------
@@ -108,7 +105,8 @@ def q22_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         F.col("ts").cast("long").alias("sec"),
     )
-    chunk = F.expr(f"sec div {Q22_CHUNK_SEC}")
+    # floor division: `div` truncates toward zero, wrong before 1970
+    chunk = F.expr(f"(sec - pmod(sec, {Q22_CHUNK_SEC})) div {Q22_CHUNK_SEC}")
     own = base.select(
         "*", chunk.alias("chunk"), F.lit(0).alias("is_ctx")
     )
@@ -175,7 +173,10 @@ def q22_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(1).alias("kind"),
         F.col("event_id").alias("origin_id"),
     )
-    u = data.unionByName(probes).withColumn("bkt", F.expr("sec div 86401"))
+    # floor again: a probe at sec−86400 < 0 must not share bucket 0
+    u = data.unionByName(probes).withColumn(
+        "bkt", F.expr("(sec - pmod(sec, 86401)) div 86401")
+    )
     wpre = (
         W.partitionBy("event_type", "chunk", "bkt")
         .orderBy("sec")
@@ -410,30 +411,13 @@ FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts
 # adversarial replays (out-of-order, multi-batch, timeout-window).
 # --------------------------------------------------------------------------
 def q26_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import sessionize_stream
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events").select("user_id", "ts", "value")
     sentinel = spark.sql(
         "SELECT CAST(-1 AS BIGINT) user_id,"
         " to_timestamp('2031-01-01 00:00:00') ts, CAST(0.0 AS DOUBLE) value"
     )
-    # input parquet memoized per (session, sf) — the checkpoint below
-    # is fresh per invocation (a reused checkpoint would resume, not
-    # replay)
-    data = replay_input(
-        spark,
-        sf_dir,
-        "q26",
-        lambda w: ev.unionByName(sentinel)
-        .coalesce(4)
-        .write.mode("overwrite")
-        .parquet(f"{w}/in"),
-    )
-    work = stream_scratch("q26_")
-
     # one data micro-batch (all files at once), then the engine's own
     # trailing flush batch: after the data batch the watermark sits past
     # every real session (the sentinel rode along), and
@@ -441,57 +425,23 @@ def q26_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     # run one final no-data batch that fires all event-time timeouts.
     # Two batches total instead of one per file — per-trigger state-store
     # setup is the dominant fixed cost of this replay.
-    stream = (
-        spark.readStream.schema("user_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(f"{data}/in")
+    out = replay_stream(
+        spark,
+        sf_dir,
+        "q26",
+        lambda w: ev.unionByName(sentinel)
+        .coalesce(4)
+        .write.mode("overwrite")
+        .parquet(f"{w}/in"),
+        {"in": "user_id long, ts timestamp, value double"},
+        lambda stream: sessionize_stream(stream, watermark="30 minutes"),
     )
-    # mkdtemp's basename is unique per call and [A-Za-z0-9_] — a valid
-    # view name that is DETERMINISTIC within the run (no per-process
-    # Python hash randomization).
-    name = f"out_{os.path.basename(work)}"
-    # state-store instances scale with shuffle partitions; 8 is plenty of
-    # key-parallelism for this replay and cuts per-micro-batch store
-    # setup 4x (a cluster deployment sizes this to executors, not 32)
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            sessionize_stream(stream, watermark="30 minutes")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        # a partial replay would make the stream≡batch assert below
-        # compare against incomplete sessions — timeout ⇒ stop + raise
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q26 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    # the checkpoint dir served only the (now terminated) replay; the
-    # memoized input dir is session-lived (atexit-cleaned); the
-    # memory-sink view must outlive this function (the returned
-    # DataFrame reads it lazily) and is driver-held rows
-    shutil.rmtree(work, ignore_errors=True)
-    # direct snapshot of the (terminated) memory sink's view — no
-    # collect→createDataFrame round-trip through the driver. The view
-    # name is unique per invocation, so later q26 runs can't collide
-    # with a result a caller is still holding; each lingering view
-    # costs one closed-sessions table (KBs) until session end.
-    streamed = (
-        spark.table(name)
-        .filter(F.col("user_id") >= 0)
-        .select(
-            "user_id",
-            "n_events",
-            "sess_value",
-            F.timestamp_micros(F.col("sess_start")).alias("sess_start"),
-            F.timestamp_micros(F.col("sess_end")).alias("sess_end"),
-        )
+    streamed = out.filter(F.col("user_id") >= 0).select(
+        "user_id",
+        "n_events",
+        "sess_value",
+        F.timestamp_micros(F.col("sess_start")).alias("sess_start"),
+        F.timestamp_micros(F.col("sess_end")).alias("sess_end"),
     )
     # batch twin (same gap rule, integer-cent value sums); sess_value
     # compared at cent granularity so the assert is immune to the last-
@@ -514,12 +464,7 @@ def q26_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             "sess_end",
         )
 
-    n_diff = multiset_diff_count(_cents(streamed), _cents(batch))
-    if n_diff:
-        raise AssertionError(
-            f"q26: streaming sessionizer diverged from batch twin on "
-            f"{n_diff} session rows — refusing to emit either result"
-        )
+    assert_stream_matches_batch("q26", _cents(streamed), _cents(batch))
     return batch
 
 
@@ -763,10 +708,7 @@ FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts
 # and out-of-order multi-batch delivery against the batch operator.
 # --------------------------------------------------------------------------
 def q191_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.asof_enrich import asof_enrich_stream
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
@@ -787,50 +729,24 @@ def q191_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).parquet(f"{w}/l")
         purchases.coalesce(4).write.mode("overwrite").parquet(f"{w}/r")
 
-    data = replay_input(spark, sf_dir, "q191", _write)
-    work = stream_scratch("q191_")
-
-    l_stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, value double"
-        )
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(f"{data}/l")
-    )
-    r_stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, purchase_value double"
-        )
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(f"{data}/r")
-    )
-    name = f"out_{os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            asof_enrich_stream(
-                l_stream,
-                r_stream,
-                on="ts",
-                by="user_id",
-                value_cols=["purchase_value"],
-                watermark="30 minutes",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q191 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
-    streamed = spark.table(name).filter(F.col("user_id") >= 0)
+    streamed = replay_stream(
+        spark,
+        sf_dir,
+        "q191",
+        _write,
+        {
+            "l": "user_id long, ts timestamp, event_id long, value double",
+            "r": "user_id long, ts timestamp, purchase_value double",
+        },
+        lambda l_stream, r_stream: asof_enrich_stream(
+            l_stream,
+            r_stream,
+            on="ts",
+            by="user_id",
+            value_cols=["purchase_value"],
+            watermark="30 minutes",
+        ),
+    ).filter(F.col("user_id") >= 0)
     # batch twin; one materialization feeds the multiset gate and
     # the returned result
     batch = asof_join(
@@ -854,12 +770,7 @@ def q191_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("pv"),
         )
 
-    n_diff = multiset_diff_count(_cents(streamed), _cents(batch))
-    if n_diff:
-        raise AssertionError(
-            f"q191: streaming as-of enrichment diverged from batch "
-            f"asof_join on {n_diff} rows — refusing to emit either result"
-        )
+    assert_stream_matches_batch("q191", _cents(streamed), _cents(batch))
     return batch.select(
         "event_id",
         "user_id",
@@ -893,10 +804,7 @@ Q191_SQL = Q25_SQL
 # so the min_by/max_by open/close picks are tie-safe on all fixtures.
 # --------------------------------------------------------------------------
 def q192_stream_klines(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..operators.klines import klines_from_trades
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events").select(
         F.col("event_type").alias("symbol"),
@@ -909,7 +817,7 @@ def q192_stream_klines(spark: SparkSession, sf_dir: str) -> DataFrame:
         " unix_millis(to_timestamp('2031-01-01 00:00:00')) trade_time,"
         " CAST(0.0 AS DOUBLE) price, CAST(0.0 AS DOUBLE) quantity"
     )
-    data = replay_input(
+    out = replay_stream(
         spark,
         sf_dir,
         "q192",
@@ -917,34 +825,9 @@ def q192_stream_klines(spark: SparkSession, sf_dir: str) -> DataFrame:
         .coalesce(4)
         .write.mode("overwrite")
         .parquet(f"{w}/in"),
+        {"in": "symbol string, trade_time long, price double, quantity double"},
+        lambda stream: klines_from_trades(stream, "1h", watermark="30 minutes"),
     )
-    work = stream_scratch("q192_")
-    stream = (
-        spark.readStream.schema(
-            "symbol string, trade_time long, price double, quantity double"
-        )
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(f"{data}/in")
-    )
-    name = f"out_{os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            klines_from_trades(stream, "1h", watermark="30 minutes")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q192 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
 
     def _shape(df: DataFrame) -> DataFrame:
         return df.select(
@@ -958,7 +841,7 @@ def q192_stream_klines(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round("quote_asset_volume", 2).alias("quote_r"),
         )
 
-    streamed = _shape(spark.table(name).filter(F.col("symbol") != "__wm__"))
+    streamed = _shape(out.filter(F.col("symbol") != "__wm__"))
     batch = _shape(klines_from_trades(ev, "1h")).localCheckpoint(eager=False)
 
     def _cents(df: DataFrame) -> DataFrame:
@@ -972,12 +855,7 @@ def q192_stream_klines(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_trades",
         )
 
-    n_diff = multiset_diff_count(_cents(streamed), _cents(batch))
-    if n_diff:
-        raise AssertionError(
-            f"q192: streaming kline aggregation diverged from batch twin "
-            f"on {n_diff} window rows — refusing to emit either result"
-        )
+    assert_stream_matches_batch("q192", _cents(streamed), _cents(batch))
     return batch
 
 
@@ -1014,10 +892,7 @@ GROUP BY event_type, date_trunc('hour', ts)
 # F.round on the raw emitted sums — the exact expression q22 certifies.
 # --------------------------------------------------------------------------
 def q193_stream_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import rolling_window_stream
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events").select(
         "event_type", "ts", "event_id", "value"
@@ -1026,49 +901,23 @@ def q193_stream_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT '__wm__' event_type, to_timestamp('2031-01-01') ts,"
         " CAST(-1 AS BIGINT) event_id, CAST(0.0 AS DOUBLE) value"
     )
-    data = replay_input(
-        spark,
-        sf_dir,
-        "q193",
-        lambda w: ev.unionByName(sentinel)
-        .coalesce(4)
-        .write.mode("overwrite")
-        .parquet(f"{w}/in"),
-    )
-    work = stream_scratch("q193_")
-    stream = (
-        spark.readStream.schema(
-            "event_type string, ts timestamp, event_id long, value double"
-        )
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(f"{data}/in")
-    )
-    name = f"out_{os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            rolling_window_stream(
+    return (
+        replay_stream(
+            spark,
+            sf_dir,
+            "q193",
+            lambda w: ev.unionByName(sentinel)
+            .coalesce(4)
+            .write.mode("overwrite")
+            .parquet(f"{w}/in"),
+            {"in": "event_type string, ts timestamp, event_id long, value double"},
+            lambda stream: rolling_window_stream(
                 stream,
                 key_col="event_type",
                 window_sec=86_400,
                 watermark="30 minutes",
-            )
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+            ),
         )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q193 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
-    return (
-        spark.table(name)
         .filter(F.col("key") != "__wm__")
         .select(
             "event_id",
@@ -1100,10 +949,7 @@ Q193_SQL = Q22_SQL
 # (sessionize q26, MG q187, as-of q191, tumbling q192, rolling q193).
 # --------------------------------------------------------------------------
 def q194_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import dedup_stream
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts", "value")
     doubled = ev.unionAll(ev)
@@ -1111,45 +957,23 @@ def q194_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT CAST(-1 AS BIGINT) event_id,"
         " to_timestamp('2031-01-01') ts, CAST(0.0 AS DOUBLE) value"
     )
-    data = replay_input(
-        spark,
-        sf_dir,
-        "q194",
-        # repartition (not coalesce) so the two copies of a row land in
-        # DIFFERENT files — the dedup must work across the replay, not
-        # within one writer partition
-        lambda w: doubled.unionByName(sentinel)
-        .repartition(4)
-        .write.mode("overwrite")
-        .parquet(f"{w}/in"),
-    )
-    work = stream_scratch("q194_")
-    stream = (
-        spark.readStream.schema("event_id long, ts timestamp, value double")
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(f"{data}/in")
-    )
-    name = f"out_{os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            dedup_stream(stream, ["event_id"], watermark="30 minutes")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q194 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
     return (
-        spark.table(name)
+        replay_stream(
+            spark,
+            sf_dir,
+            "q194",
+            # repartition (not coalesce) so the two copies of a row land
+            # in DIFFERENT files — the dedup must work across the
+            # replay, not within one writer partition
+            lambda w: doubled.unionByName(sentinel)
+            .repartition(4)
+            .write.mode("overwrite")
+            .parquet(f"{w}/in"),
+            {"in": "event_id long, ts timestamp, value double"},
+            lambda stream: dedup_stream(
+                stream, ["event_id"], watermark="30 minutes"
+            ),
+        )
         .filter(F.col("event_id") >= 0)
         .select("event_id", "ts", F.round("value", 2).alias("value_r"))
     )
@@ -1174,10 +998,7 @@ SELECT DISTINCT event_id, ts, round(value, 2) AS value_r FROM events
 # stateful-operator certification set.
 # --------------------------------------------------------------------------
 def q195_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from ..streaming.stateful import transition_counts_stream
-    from .util import replay_input
 
     ev = load(spark, sf_dir, "events").select(
         "user_id", "ts", "event_id", "event_type"
@@ -1186,44 +1007,20 @@ def q195_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
         "SELECT CAST(-1 AS BIGINT) user_id, to_timestamp('2031-01-01') ts,"
         " CAST(-1 AS BIGINT) event_id, 'x' event_type"
     )
-    data = replay_input(
-        spark,
-        sf_dir,
-        "q195",
-        lambda w: ev.unionByName(sentinel)
-        .coalesce(4)
-        .write.mode("overwrite")
-        .parquet(f"{w}/in"),
-    )
-    work = stream_scratch("q195_")
-    stream = (
-        spark.readStream.schema(
-            "user_id long, ts timestamp, event_id long, event_type string"
-        )
-        .option("maxFilesPerTrigger", "1000")
-        .parquet(f"{data}/in")
-    )
-    name = f"out_{os.path.basename(work)}"
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (
-            transition_counts_stream(stream, watermark="30 minutes")
-            .writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .option("checkpointLocation", f"{work}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not q.awaitTermination(600):
-            q.stop()
-            raise RuntimeError("q195 streaming replay timed out after 600 s")
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
-    shutil.rmtree(work, ignore_errors=True)
     trans = (
-        spark.table(name)
+        replay_stream(
+            spark,
+            sf_dir,
+            "q195",
+            lambda w: ev.unionByName(sentinel)
+            .coalesce(4)
+            .write.mode("overwrite")
+            .parquet(f"{w}/in"),
+            {"in": "user_id long, ts timestamp, event_id long, event_type string"},
+            lambda stream: transition_counts_stream(
+                stream, watermark="30 minutes"
+            ),
+        )
         .filter(F.col("user_id") >= 0)
         .groupBy("prev_type", "event_type")
         .agg(F.count("*").alias("n"))

@@ -3,8 +3,10 @@
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -63,13 +65,9 @@ def session_artifact(spark: SparkSession, key, build):
 # pair-count edge list (pairs co-purchased in >= 2 orders) — the two most
 # expensive intermediates either query builds. Computing them once per
 # (session, sf_dir) and localCheckpoint'ing cuts the combined wall time
-# roughly in half; at cluster scale this is the "materialize the edge
-# list once, reuse across graph queries" pattern. Cache holds ONE entry
-# (handles die with the session anyway — keyed by applicationId so a
-# restarted session rebuilds instead of reusing dead checkpoint blocks).
+# roughly in half.
 # ---------------------------------------------------------------------------
 COPURCHASE_MIN_ORDERS = 2
-_COPURCHASE_CACHE: dict[tuple[str, str], tuple[DataFrame, DataFrame]] = {}
 
 
 def copurchase_pairs(
@@ -78,30 +76,29 @@ def copurchase_pairs(
     """Returns (baskets, pairs): baskets = distinct (l_orderkey,
     l_partkey); pairs = (u, v, pc) with u < v and pc >= 2 co-orders.
     Both are localCheckpoint'ed and memoized per (session, sf_dir)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    hit = _COPURCHASE_CACHE.get(key)
-    if hit is not None:
-        return hit
-    baskets = (
-        load(spark, sf_dir, "lineitem")
-        .select("l_orderkey", "l_partkey")
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    a, b = baskets.alias("a"), baskets.alias("b")
-    pairs = (
-        a.join(b, "l_orderkey")
-        .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
-        .groupBy(
-            F.col("a.l_partkey").alias("u"), F.col("b.l_partkey").alias("v")
+
+    def build() -> tuple[DataFrame, DataFrame]:
+        baskets = (
+            load(spark, sf_dir, "lineitem")
+            .select("l_orderkey", "l_partkey")
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-        .agg(F.count("*").alias("pc"))
-        .filter(F.col("pc") >= COPURCHASE_MIN_ORDERS)
-        .localCheckpoint(eager=True)
-    )
-    _COPURCHASE_CACHE.clear()
-    _COPURCHASE_CACHE[key] = (baskets, pairs)
-    return baskets, pairs
+        a, b = baskets.alias("a"), baskets.alias("b")
+        pairs = (
+            a.join(b, "l_orderkey")
+            .filter(F.col("a.l_partkey") < F.col("b.l_partkey"))
+            .groupBy(
+                F.col("a.l_partkey").alias("u"),
+                F.col("b.l_partkey").alias("v"),
+            )
+            .agg(F.count("*").alias("pc"))
+            .filter(F.col("pc") >= COPURCHASE_MIN_ORDERS)
+            .localCheckpoint(eager=True)
+        )
+        return baskets, pairs
+
+    return session_artifact(spark, ("copurchase", sf_dir), build)
 
 
 def stream_scratch(prefix: str) -> str:
@@ -128,38 +125,13 @@ def stream_scratch(prefix: str) -> str:
     return tempfile.mkdtemp(prefix=prefix, dir=root)
 
 
-def multiset_diff_count(a: DataFrame, b: DataFrame) -> int:
-    """Count of distinct rows whose multiplicities differ between ``a``
-    and ``b`` — 0 iff the two frames are multiset-equal, the same
-    predicate the streaming certificates' two-``exceptAll`` gate tested.
-
-    ONE job / one shuffle instead of two jobs that each shuffle both
-    sides (exceptAll plans an aggregate over each input per direction):
-    tag rows ±1, group by every column (NULL-safe, like exceptAll's
-    null-safe equality), keep groups with a non-zero net count. Measured
-    −0.4 s per certificate on the q26 gate (1.04 → 0.61 s min-of-3).
-    """
-    cols = a.columns
-    return (
-        a.withColumn("__sgn", F.lit(1))
-        .unionByName(b.select(*cols).withColumn("__sgn", F.lit(-1)))
-        .groupBy(*cols)
-        .agg(F.sum("__sgn").alias("__d"))
-        .filter(F.col("__d") != 0)
-        .count()
-    )
-
-
 # ---------------------------------------------------------------------------
-# Shared replay-input artifact for the streaming certification queries
-# (q26 / q187 / q191 / q192). Each replays a fixture-derived dataset as
-# a file stream; the INPUT parquet is a pure function of (sf_dir,
-# query), so within one session it is written once and reused across
-# invocations (bench's min-of-2, repeated certification runs). The
-# CHECKPOINT is deliberately NOT shared — reusing a checkpoint would
-# RESUME from stored offsets instead of replaying. Dirs are removed at
-# process exit (atexit), mirroring the rmtree the per-invocation path
-# used to do inline.
+# Shared replay-input artifact for the streaming certification queries.
+# Each replays a fixture-derived dataset as a file stream; the INPUT
+# parquet is a pure function of (sf_dir, query), so within one session
+# it is written once and reused across invocations (bench's min-of-2,
+# repeated certification runs). The CHECKPOINT is deliberately NOT
+# shared (see replay_stream). Dirs are removed at process exit (atexit).
 # ---------------------------------------------------------------------------
 def replay_input(spark: SparkSession, sf_dir: str, name: str, build) -> str:
     """Memoized work dir whose contents ``build(work_dir)`` wrote —
@@ -173,7 +145,6 @@ def replay_input(spark: SparkSession, sf_dir: str, name: str, build) -> str:
     re-staggering.
     """
     import atexit
-    import shutil
 
     def _build() -> str:
         work = stream_scratch(f"replay_{name}_")
@@ -200,7 +171,6 @@ def stagger_replay_mtimes(path: str) -> None:
     realistic regime: a live stream's files arrive roughly in event
     time.
     """
-    import os
     import time
 
     parts = sorted(
@@ -223,3 +193,130 @@ def stagger_replay_mtimes(path: str) -> None:
             f"part order under {path!r} (filesystem ignored utime?): "
             f"{stamped}"
         )
+
+
+# Session settings pinned for, and restored after, every replay_stream.
+_REPLAY_CONF = {
+    "spark.sql.shuffle.partitions": "8",
+    "spark.sql.streaming.noDataMicroBatches.enabled": "true",
+}
+
+
+def replay_stream(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    write,
+    schemas: dict[str, str],
+    build,
+    *,
+    files_per_trigger: int = 1000,
+    output_mode: str = "append",
+) -> DataFrame:
+    """Replay a memoized input through a real stream; return the
+    drained memory sink's view.
+
+    ``write(work_dir)`` builds the input once per (session, sf_dir,
+    name) via :func:`replay_input`. Each ``schemas`` entry (subdirectory
+    → DDL schema) opens one parquet file stream, ``build(*streams)``
+    returns the streaming DataFrame, and it runs into a memory sink
+    with ``availableNow``.
+
+    - **8 shuffle partitions.** State-store instances scale with shuffle
+      partitions; 8 is plenty of key-parallelism for a replay and cuts
+      per-micro-batch store setup 4× against the 32-partition default
+      (a cluster deployment sizes this to executors).
+    - **No-data micro-batches on.** After the last file the watermark
+      can only pass the sentinel rows in a no-data batch, which is what
+      fires the final event-time timeouts and flushes. ``true`` is the
+      ambient default; pinning it keeps a session that disabled it from
+      turning every certificate into a timeout.
+    - **Fresh checkpoint.** A reused checkpoint would RESUME from its
+      stored offsets instead of replaying, so every call gets its own,
+      removed on exit whether or not the replay raised.
+    - **Drain before read.** ``availableNow`` stops once the input
+      present at start is processed; the sink is read only after the
+      query terminated, since a partial replay would certify
+      incomplete state (missing sessions, sketch candidates, buckets).
+    - **Timeout.** A replay still running after 600 s is stopped and
+      raises ``RuntimeError``; no caller ever proceeds on a partial
+      result.
+    - **View naming.** The view is ``out_`` + the checkpoint dir's
+      mkdtemp basename: unique per call and ``[A-Za-z0-9_]``, so later
+      calls never collide with a result a caller is still holding, and
+      deterministic within the run (no per-process hash randomization).
+      Views live until the session ends; each holds a bounded result
+      (closed sessions, per-key snapshots, a sketch histogram).
+    """
+    data = replay_input(spark, sf_dir, name, write)
+    streams = [
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", str(files_per_trigger))
+        .parquet(f"{data}/{sub}")
+        for sub, schema in schemas.items()
+    ]
+    prev = {k: spark.conf.get(k) for k in _REPLAY_CONF}
+    work = stream_scratch(f"{name}_")
+    view = f"out_{os.path.basename(work)}"
+    try:
+        for k, v in _REPLAY_CONF.items():
+            spark.conf.set(k, v)
+        q = (
+            build(*streams)
+            .writeStream.format("memory")
+            .queryName(view)
+            .outputMode(output_mode)
+            .option("checkpointLocation", f"{work}/ckpt")
+            .trigger(availableNow=True)
+            .start()
+        )
+        if not q.awaitTermination(600):
+            q.stop()
+            raise RuntimeError(f"{name} streaming replay timed out after 600 s")
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+        shutil.rmtree(work, ignore_errors=True)
+    return spark.table(view)
+
+
+def assert_stream_matches_batch(
+    name: str, streamed: DataFrame, batch: DataFrame
+) -> None:
+    """Raise unless ``streamed`` and ``batch`` are multiset-equal — the
+    streaming certificates' gate: on divergence, neither side is
+    emitted. ``batch`` may list the same columns in any order.
+
+    One job and one shuffle: rows are tagged ±1, grouped by every
+    column (NULL-safe, like exceptAll's equality), and groups with a
+    non-zero net count are the divergent rows. Two exceptAll jobs would
+    each shuffle both sides (measured 1.04 → 0.61 s on the q26 gate).
+    """
+    cols = streamed.columns
+    n_diff = (
+        streamed.withColumn("__sgn", F.lit(1))
+        .unionByName(batch.select(*cols).withColumn("__sgn", F.lit(-1)))
+        .groupBy(*cols)
+        .agg(F.sum("__sgn").alias("__d"))
+        .filter(F.col("__d") != 0)
+        .count()
+    )
+    if n_diff:
+        raise AssertionError(
+            f"{name}: streaming result diverged from its batch twin on "
+            f"{n_diff} distinct rows - refusing to emit either result"
+        )
+
+
+def final_snapshot(df: DataFrame, key: str) -> DataFrame:
+    """Each ``key``'s last snapshot: its rows with the highest
+    ``n_processed``. The snapshot operators in ``streaming/stateful``
+    emit the post-batch state with every data batch, monotone in
+    ``n_processed``, so the last one is the final state. A window, not
+    a self-join: joining a memory view to itself is lineage-ambiguous."""
+    last = F.max("n_processed").over(Window.partitionBy(key))
+    return (
+        df.withColumn("__last", last)
+        .filter(F.col("n_processed") == F.col("__last"))
+        .drop("__last")
+    )

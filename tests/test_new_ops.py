@@ -3751,7 +3751,7 @@ def test_dp_counts_salt_changes_noise_not_truth(spark):
 def test_stream_wilson_teeth_broken_fold_diverges(spark):
     """q279's certificate must have teeth: a counter fold that RESTARTS
     per micro-batch (drops carried state) under-counts every segment on
-    the same 3-batch replay, so the exceptAll gate would refuse it."""
+    the same 3-batch replay, so the multiset gate would refuse it."""
     import os
     import shutil
     import tempfile
@@ -3876,7 +3876,7 @@ def test_stream_wilson_teeth_broken_fold_diverges(spark):
     }
     assert set(fin) == set(batch)
     # every segment appears in ≥2 micro-batches, so EVERY final broken
-    # counter under-counts — the q279 exceptAll gate catches all 5 rows
+    # counter under-counts — the q279 multiset gate catches all 5 rows
     n_div = sum(1 for s in batch if fin[s] != batch[s])
     assert n_div == len(batch), (fin, batch)
     for s in batch:
@@ -4581,7 +4581,7 @@ def test_stream_gk_teeth_restarted_sketch_violates_bound(spark):
     # beyond the last tertile's low edge — ~2n/3 past the p50 target
     lt_bad = sum(1 for x in sv if x < a_bad)
     assert lt_bad + 1 - target > n / 6
-    # and the restarted fold also under-counts (q289's exceptAll gate)
+    # and the restarted fold also under-counts (q289's multiset gate)
     assert restarted.n < carried.n == n
 
 

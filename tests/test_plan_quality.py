@@ -317,12 +317,8 @@ def test_copurchase_edge_artifact_shared(spark):
     # q105/q106 must reuse one localCheckpointed basket/pair build —
     # the second query's plan reads the checkpoint (Scan ExistingRDD),
     # not a fresh lineitem scan + self-join.
-    from binance_data_ingestor_spark.queries.util import (
-        _COPURCHASE_CACHE,
-        copurchase_pairs,
-    )
+    from binance_data_ingestor_spark.queries.util import copurchase_pairs
 
-    _COPURCHASE_CACHE.clear()
     b1, p1 = copurchase_pairs(spark, SF_DIR)
     b2, p2 = copurchase_pairs(spark, SF_DIR)
     assert b1 is b2 and p1 is p2

@@ -84,3 +84,39 @@ def test_cumdiff_boundary_inclusive_exclusive(spark):
     }
     assert out[86400] == (11.0, 11.0)  # 0 is included (86400 preceding)
     assert out[86401 + 86400] == (2.0, 2.0)  # 86400 fell out (86401 gap)
+
+
+@pytest.mark.parametrize(
+    "events",
+    [
+        # the probe of sec 10 sits at sec -86390: truncating division put
+        # it in bucket 0 with sec 20, leaking 5.0 into the first frame
+        [(1, 10, 1.0), (2, 20, 5.0)],
+        # before 1970: truncating division put these two rows in chunks
+        # -1 and 0, and the first never reached the second's frame
+        [(1, -259300, 9.0), (2, -259100, 1.0)],
+    ],
+    ids=["probe_before_epoch", "events_before_epoch"],
+)
+def test_q22_floor_buckets_near_and_before_epoch(spark, tmp_path, events):
+    """q22's chunk and bucket ids must be floor divisions: every frame
+    equals the naive RANGE 86400 PRECEDING frame over the same rows."""
+    from binance_data_ingestor_spark.queries.streaming_like import (
+        q22_rolling_24h,
+    )
+
+    spark.createDataFrame(
+        [(i, "a", v, s) for i, s, v in events],
+        "event_id long, event_type string, value double, sec long",
+    ).select(
+        "event_id", "event_type", "value", F.timestamp_seconds("sec").alias("ts")
+    ).write.parquet(f"{tmp_path}/events.parquet")
+    got = {
+        r.event_id: (r.rolling_max_24h, r.rolling_n_24h)
+        for r in q22_rolling_24h(spark, str(tmp_path)).collect()
+    }
+    want = {}
+    for i, s, _v in events:
+        frame = [v for _j, t, v in events if s - 86400 <= t <= s]
+        want[i] = (max(frame), len(frame))
+    assert got == want

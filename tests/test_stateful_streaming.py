@@ -268,3 +268,96 @@ def test_rolling_window_stream_matches_batch_multibatch(spark, tmp_path):
     }
     assert len(got) == len(expected) > 0
     assert got == expected
+
+
+# -- the certificates' shared replay harness and gate (queries/util) ---------
+
+
+@pytest.mark.parametrize(
+    "streamed, batch, diverged",
+    [
+        # same distinct rows, different multiplicities: a set compare
+        # would pass, the multiset gate must not
+        ([(1, "a"), (1, "a"), (2, "b")], [(1, "a"), (2, "b"), (2, "b")], 2),
+        # NULLs group NULL-safely, duplicates included
+        ([(1, None), (None, "x"), (None, "x")], [(None, "x"), (1, None), (None, "x")], 0),
+        # batch columns are matched by name, not position
+        ([(1, "a"), (2, "b")], "swap", 0),
+    ],
+    ids=["counts_differ", "nulls", "column_order"],
+)
+def test_stream_gate_is_multiset_equality(spark, streamed, batch, diverged):
+    from binance_data_ingestor_spark.queries.util import (
+        assert_stream_matches_batch,
+    )
+
+    s = spark.createDataFrame(streamed, "k long, v string")
+    b = (
+        s.select("v", "k")
+        if batch == "swap"
+        else spark.createDataFrame(batch, "k long, v string")
+    )
+    if diverged:
+        with pytest.raises(AssertionError, match=f"qtest: .* {diverged} distinct rows"):
+            assert_stream_matches_batch("qtest", s, b)
+    else:
+        assert_stream_matches_batch("qtest", s, b)
+
+
+def test_final_snapshot_keeps_highest_n_processed_per_key(spark):
+    from binance_data_ingestor_spark.queries.util import final_snapshot
+
+    snaps = spark.createDataFrame(
+        [("a", 1, 10), ("a", 2, 30), ("a", 3, 30), ("b", 4, 5), ("b", 5, 2)],
+        "key string, item long, n_processed long",
+    )
+    got = sorted(tuple(r) for r in final_snapshot(snaps, "key").collect())
+    assert got == [("a", 2, 30), ("a", 3, 30), ("b", 4, 5)]
+
+
+def test_replay_stream_restores_conf_and_scratch_when_build_raises(
+    spark, tmp_path, monkeypatch
+):
+    import os
+
+    from binance_data_ingestor_spark.queries.util import replay_stream
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_TMP", str(tmp_path))
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.streaming.noDataMicroBatches.enabled",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
+    spark.conf.set(keys[0], "5")
+    spark.conf.set(keys[1], "false")
+    seen = {}
+
+    def build(stream):
+        seen["conf"] = {k: spark.conf.get(k) for k in keys}
+        seen["scratch"] = [
+            d for d in os.listdir(tmp_path) if d.startswith("harness_t_")
+        ]
+        raise ValueError("build failed")
+
+    try:
+        with pytest.raises(ValueError, match="build failed"):
+            replay_stream(
+                spark,
+                str(tmp_path),
+                "harness_t",
+                lambda w: spark.range(3).write.parquet(f"{w}/in"),
+                {"in": "id long"},
+                build,
+            )
+        # the replay ran under the pinned settings with its own scratch
+        assert seen["conf"] == {keys[0]: "8", keys[1]: "true"}
+        assert len(seen["scratch"]) == 1
+        # ... and both were undone although build raised
+        assert {k: spark.conf.get(k) for k in keys} == {
+            keys[0]: "5",
+            keys[1]: "false",
+        }
+        assert not os.path.exists(tmp_path / seen["scratch"][0])
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
