@@ -76,95 +76,6 @@ def compact(df: DataFrame, target_bytes: int = 128 << 20) -> DataFrame:
     return df
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_cols: list[str],
-    num_buckets: int = 32,
-    sort_cols: list[str] | None = None,
-) -> None:
-    """Persist a table bucketed (and optionally sorted) on its join key.
-
-    The shuffle-once-join-forever pattern: two tables bucketed on the
-    same key with the same bucket count join with NO exchange on either
-    side — at 100 TB that turns the recurring fact⨝fact shuffle (the
-    single biggest cost in a repeated workload) into a one-time write
-    cost. Sorting within buckets additionally drops the per-join sort,
-    leaving a pure merge. Spark only recognizes bucketing through the
-    catalog, hence saveAsTable rather than a path write.
-    """
-    w = df.repartition(num_buckets, *bucket_cols).write.bucketBy(
-        num_buckets, *bucket_cols
-    )
-    if sort_cols:
-        w = w.sortBy(*sort_cols)
-    w.mode("overwrite").format("parquet").saveAsTable(table)
-
-
-def zorder_value(x, y, bits: int = 8):
-    """Morton (Z-curve) interleave of two pre-scaled integer columns in
-    [0, 2^bits): bit i of x lands at position 2i, bit i of y at 2i+1.
-    Pure codegen'd bit arithmetic — no UDF."""
-    from pyspark.sql import functions as F
-
-    # bit positions never overlap, so + is the bitwise OR (and stays in
-    # codegen; Column.__or__ is the boolean or)
-    z = F.lit(0)
-    for i in range(bits):
-        z = (
-            z
-            + F.shiftleft(F.shiftright(x, i) % 2, 2 * i)
-            + F.shiftleft(F.shiftright(y, i) % 2, 2 * i + 1)
-        )
-    return z
-
-
-def zorder_write(
-    df: DataFrame,
-    path: str,
-    cols: tuple[str, str],
-    partitions: int = 8,
-    bits: int = 8,
-) -> None:
-    """Write parquet clustered on the Z-curve of two columns so
-    per-file min/max stats become selective on BOTH dimensions — the
-    data-skipping layout of lakehouse OPTIMIZE ZORDER BY.
-
-    A plain sort on (a, b) makes file stats tight on `a` but useless
-    on `b`; the Z-curve keeps locality in both, so a reader's
-    predicate on either column prunes most files from the footer
-    stats alone — at 100 TB that's the difference between scanning a
-    few files and scanning the table. Scaling to [0, 2^bits) uses a
-    broadcast 1-row min/max aggregate; the layout move is ONE range
-    exchange + in-partition sort.
-    """
-    from pyspark.sql import functions as F
-
-    a, b = cols
-    span = df.agg(
-        F.min(a).alias("_alo"), F.max(a).alias("_ahi"),
-        F.min(b).alias("_blo"), F.max(b).alias("_bhi"),
-    )
-
-    def scaled(c, lo, hi):
-        # guard degenerate span; clamp to 2^bits - 1
-        rng = F.greatest(F.col(hi) - F.col(lo), F.lit(1))
-        return F.least(
-            F.lit((1 << bits) - 1),
-            (((F.col(c) - F.col(lo)) * ((1 << bits) - 1)) / rng).cast("long"),
-        )
-
-    (
-        df.join(F.broadcast(span))
-        .withColumn("_z", zorder_value(scaled(a, "_alo", "_ahi"), scaled(b, "_blo", "_bhi")))
-        .repartitionByRange(partitions, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z", "_alo", "_ahi", "_blo", "_bhi")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
 def with_row_context(
     df: DataFrame,
     keys: list[str],

@@ -144,17 +144,6 @@ NORMALIZERS = {
 }
 
 
-def with_envelope(df: DataFrame, stream_key: str, symbol_col: str = "symbol") -> DataFrame:
-    """P7 — tagged-union envelope {stream, symbol, data}
-    (binance-di.py:109,130-132). Payload columns move under `data`."""
-    payload = [c for c in df.columns if c != symbol_col]
-    return df.select(
-        F.lit(stream_key).alias("stream"),
-        F.upper(F.col(symbol_col)).alias("symbol"),
-        F.struct(*payload).alias("data"),
-    )
-
-
 def with_envelope_json(df: DataFrame, stream_key: str, symbol_col: str = "symbol") -> DataFrame:
     """P7+P16 — the wire envelope: payload serialized to one JSON string,
     exactly what the reference's ``--silent`` mode emits per line

@@ -534,9 +534,7 @@ def q211_stream_digest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{w}/in"),
         {"in": "source string, h long, ts timestamp"},
-        lambda stream: xor_digest_stream(
-            stream, ["source"], hash_col="h", watermark="30 minutes"
-        ),
+        lambda stream: xor_digest_stream(stream, ["source"], hash_col="h"),
     )
     # one row per source per data batch by the emission contract
     streamed = final_snapshot(

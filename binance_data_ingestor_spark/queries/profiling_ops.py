@@ -240,8 +240,7 @@ def q187_stream_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(f"{w}/in"),
             {"in": "grp string, token string, ts timestamp"},
             lambda stream: heavy_hitters_stream(
-                stream, ["grp"], "token",
-                capacity=capacity, watermark="30 minutes",
+                stream, ["grp"], "token", capacity=capacity
             ),
         )
         .filter(F.col("grp") == "all")
@@ -901,8 +900,7 @@ def q199_stream_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(f"{w}/in"),
         {"in": "lab string, h long, item string, ts timestamp"},
         lambda stream: kmv_stream(
-            stream, ["lab"], "item",
-            hash_col="h", k=k, watermark="30 minutes",
+            stream, ["lab"], "item", hash_col="h", k=k
         ),
     )
     # ≤ k rows per label per data batch by the state contract

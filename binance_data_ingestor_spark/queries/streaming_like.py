@@ -434,7 +434,7 @@ def q26_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .write.mode("overwrite")
         .parquet(f"{w}/in"),
         {"in": "user_id long, ts timestamp, value double"},
-        lambda stream: sessionize_stream(stream, watermark="30 minutes"),
+        lambda stream: sessionize_stream(stream),
     )
     streamed = out.filter(F.col("user_id") >= 0).select(
         "user_id",
@@ -744,7 +744,6 @@ def q191_stream_asof_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             on="ts",
             by="user_id",
             value_cols=["purchase_value"],
-            watermark="30 minutes",
         ),
     ).filter(F.col("user_id") >= 0)
     # batch twin; one materialization feeds the multiset gate and
@@ -911,12 +910,7 @@ def q193_stream_rolling_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(f"{w}/in"),
             {"in": "event_type string, ts timestamp, event_id long, value double"},
-            lambda stream: rolling_window_stream(
-                stream,
-                key_col="event_type",
-                window_sec=86_400,
-                watermark="30 minutes",
-            ),
+            rolling_window_stream,
         )
         .filter(F.col("key") != "__wm__")
         .select(
@@ -970,9 +964,7 @@ def q194_stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(f"{w}/in"),
             {"in": "event_id long, ts timestamp, value double"},
-            lambda stream: dedup_stream(
-                stream, ["event_id"], watermark="30 minutes"
-            ),
+            lambda stream: dedup_stream(stream, ["event_id"]),
         )
         .filter(F.col("event_id") >= 0)
         .select("event_id", "ts", F.round("value", 2).alias("value_r"))
@@ -1017,9 +1009,7 @@ def q195_stream_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.mode("overwrite")
             .parquet(f"{w}/in"),
             {"in": "user_id long, ts timestamp, event_id long, event_type string"},
-            lambda stream: transition_counts_stream(
-                stream, watermark="30 minutes"
-            ),
+            transition_counts_stream,
         )
         .filter(F.col("user_id") >= 0)
         .groupBy("prev_type", "event_type")

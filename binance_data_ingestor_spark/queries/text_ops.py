@@ -2963,10 +2963,9 @@ _STALE_TEXT = "xqstalea yqstaleb zqstalec wqstaled vqstalee"
 def q259_stream_lsh_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os as _os
     import shutil
-    import tempfile
 
     from ..operators.dedup import _sorted_pairs, band_struct_array
-    from ..streaming.dedup_ingest import run_dedup_ingest
+    from ..streaming.dedup_ingest import BANDS, NUM_HASHES, run_dedup_ingest
     from .util import replay_input, stagger_replay_mtimes
 
     cols = ["doc_id", "text", "lang", "source", "n_chars"]
@@ -3007,7 +3006,6 @@ def q259_stream_lsh_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"{work}/store",
             f"{work}/dupes",
             f"{work}/ckpt",
-            max_files_per_trigger=1,
         )
         store = spark.read.parquet(f"{work}/store")
         wv = W.partitionBy("doc_id").orderBy(F.desc("epoch"))
@@ -3020,7 +3018,7 @@ def q259_stream_lsh_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     finally:
         shutil.rmtree(work, ignore_errors=True)
     buckets = latest.select(
-        "doc_id", F.explode(band_struct_array(8, 4)).alias("bk")
+        "doc_id", F.explode(band_struct_array(NUM_HASHES, BANDS)).alias("bk")
     ).select("doc_id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
     return (
         buckets.groupBy("band", "key")

@@ -67,45 +67,3 @@ def write_batch(
     if parts:
         writer = writer.partitionBy(*parts)
     writer.save(f"{output_dir}/{fmt}")
-
-
-def write_token_balanced_shards(
-    docs: DataFrame,
-    output_dir: str,
-    n_shards: int,
-    *,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    mode: str = "overwrite",
-) -> None:
-    """Write the corpus as N parquet shard directories with near-equal
-    token totals — the file layout a training job reads (one shard =
-    one reader's file set, so equal shards = no straggler reader).
-
-    Shard assignment is q150's LPT-round-robin over the distributed
-    global size rank (spread ≤ one largest document); the write
-    repartitions BY THE SHARD COLUMN so each shard's rows land in the
-    task that writes its directory — one shuffle, then
-    ``partitionBy(shard)`` emits ``shard=<i>/`` directories with no
-    cross-task file interleaving.
-    """
-    from pyspark.sql import functions as F
-
-    from ..operators.partitioning import with_global_rank
-
-    sized = docs.withColumn("__n_tok", F.size(F.split(F.col(text_col), " ")))
-    ranked = with_global_rank(
-        sized,
-        [],
-        [F.desc("__n_tok"), id_col],
-        bucket=-F.col("__n_tok"),
-    )
-    sharded = ranked.withColumn(
-        "shard", F.pmod(F.col("rank") - 1, F.lit(n_shards))
-    ).drop("rank", "__n_tok")
-    (
-        sharded.repartition(n_shards, "shard")
-        .write.mode(mode)
-        .partitionBy("shard")
-        .parquet(output_dir)
-    )

@@ -38,7 +38,7 @@ Scale shape: state per key = the rows still inside the watermark
 horizon (the standard stream-stream bound: O(rate × delay), NEVER the
 whole right history) + ONE carried (on, values) tuple for the latest
 finalized state row. Keys whose buffer has drained keep only that
-carried tuple and are dropped after ``idle_state_ttl_ms`` of
+carried tuple and are dropped after ``IDLE_STATE_TTL_MS`` of
 event-time idleness — total state is O(keys active within the TTL),
 the ``transition_counts_stream`` stance. Emission is append-mode and
 watermark-ordered per key.
@@ -54,6 +54,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from .stateful import IDLE_STATE_TTL_MS, WATERMARK
 
 _ATOMIC = (
     T.LongType,
@@ -92,7 +94,6 @@ def _asof_fn(
     l_kinds: list[str],
     r_kinds: list[str],
     tolerance: float | None,
-    idle_state_ttl_ms: int,
 ):
     n_l, n_r = len(l_kinds), len(r_kinds)
     def fn(
@@ -211,7 +212,7 @@ def _asof_fn(
                 )
             else:
                 state.setTimeoutTimestamp(
-                    state.getCurrentWatermarkMs() + idle_state_ttl_ms
+                    state.getCurrentWatermarkMs() + IDLE_STATE_TTL_MS
                 )
         else:
             state.remove()
@@ -242,16 +243,13 @@ def asof_enrich_stream(
     on: str,
     by: list[str] | str,
     value_cols: list[str],
-    prefix: str = "asof_",
     tolerance: float | None = None,
-    watermark: str = "30 minutes",
-    idle_state_ttl_ms: int = 86_400_000,
 ) -> DataFrame:
     """Enrich streaming ``left`` rows with the latest ``right`` row at
     or before each left row's ``on`` time within the same ``by`` key
     (backward as-of). Both inputs are streaming DataFrames sharing the
     ``by`` and ``on`` (timestamp) columns; ``right``'s ``value_cols``
-    attach as ``{prefix}{col}``. Output columns: ``by + [on] + left
+    attach as ``asof_{col}``. Output columns: ``by + [on] + left
     payload + prefixed values`` — the batch ``asof_join`` shape, so
     the two paths are directly comparable (the replay test asserts
     multiset equality on identical data).
@@ -285,7 +283,7 @@ def asof_enrich_stream(
         ],
         *[F.col(v).alias(f"__r_{j}") for j, v in enumerate(value_cols)],
     )
-    unioned = l_pre.unionByName(r_pre).withWatermark(on, watermark)
+    unioned = l_pre.unionByName(r_pre).withWatermark(on, WATERMARK)
 
     out_schema = T.StructType(
         [T.StructField(f"__k{i}", left.schema[b].dataType) for i, b in enumerate(by)]
@@ -325,7 +323,6 @@ def asof_enrich_stream(
             [_kind(left.schema[c].dataType) for c in l_cols],
             [_kind(right.schema[v].dataType) for v in value_cols],
             tolerance,
-            idle_state_ttl_ms,
         ),
         out_schema,
         state_schema,
@@ -337,7 +334,7 @@ def asof_enrich_stream(
         F.timestamp_micros(F.col("__on_us")).alias(on),
         *[F.col(f"__l_{j}").alias(c) for j, c in enumerate(l_cols)],
         *[
-            F.col(f"__r_{j}").alias(f"{prefix}{v}")
+            F.col(f"__r_{j}").alias(f"asof_{v}")
             for j, v in enumerate(value_cols)
         ],
     )

@@ -46,21 +46,20 @@ from ..operators.dedup import (
 
 DOC_SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
+SHINGLE_N = 3  # tokens per shingle
+NUM_HASHES = 8  # MinHash signature length K
+BANDS = 4  # LSH bands of K / BANDS hashes each
+MAX_FILES_PER_TRIGGER = 1  # one input file per epoch
+TIMEOUT_SEC = 300
 
-def batch_signatures(
-    docs: DataFrame,
-    *,
-    n: int = 3,
-    num_hashes: int = 8,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """(id, mh_0..mh_{K-1}) MinHash signatures — one row per document
-    with >= n tokens (shorter docs have no shingles, hence no
-    signature; they can never band-collide)."""
-    ex = _exploded_shingles(docs, text_col, id_col, n)
-    return ex.filter(F.col("shingle").isNotNull()).groupBy(id_col).agg(
-        *minhash_signature(num_hashes)
+
+def batch_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, mh_0..mh_{K-1}) MinHash signatures — one row per
+    document with >= SHINGLE_N tokens (shorter docs have no shingles,
+    hence no signature; they can never band-collide)."""
+    ex = _exploded_shingles(docs, "text", "doc_id", SHINGLE_N)
+    return ex.filter(F.col("shingle").isNotNull()).groupBy("doc_id").agg(
+        *minhash_signature(NUM_HASHES)
     )
 
 
@@ -84,23 +83,16 @@ def _store_epochs(store_dir: str) -> list[str]:
     )
 
 
-def signature_match_pairs(
-    new_sig: DataFrame,
-    old_sig: DataFrame,
-    *,
-    num_hashes: int = 8,
-    bands: int = 4,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def signature_match_pairs(new_sig: DataFrame, old_sig: DataFrame) -> DataFrame:
     """Band-colliding (new, old) pairs with the minhash Jaccard
     estimate: est = (# matching hash positions) / K — an exact integer
     count over a constant, so the value is engine- and
     partitioning-independent."""
-    bkey = band_struct_array(num_hashes, bands)
+    bkey = band_struct_array(NUM_HASHES, BANDS)
 
     def buckets(sig: DataFrame, out: str) -> DataFrame:
         return sig.select(
-            F.col(id_col).alias(out), F.explode(bkey).alias("bk")
+            F.col("doc_id").alias(out), F.explode(bkey).alias("bk")
         ).select(out, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
     cand = (
@@ -110,15 +102,15 @@ def signature_match_pairs(
         .distinct()
     )
     a = new_sig.select(
-        F.col(id_col).alias("id_a"),
-        *[F.col(f"mh_{k}").alias(f"a_{k}") for k in range(num_hashes)],
+        F.col("doc_id").alias("id_a"),
+        *[F.col(f"mh_{k}").alias(f"a_{k}") for k in range(NUM_HASHES)],
     )
     b = old_sig.select(
-        F.col(id_col).alias("id_b"),
-        *[F.col(f"mh_{k}").alias(f"b_{k}") for k in range(num_hashes)],
+        F.col("doc_id").alias("id_b"),
+        *[F.col(f"mh_{k}").alias(f"b_{k}") for k in range(NUM_HASHES)],
     )
     matches = sum(
-        (F.col(f"a_{k}") == F.col(f"b_{k}")).cast("int") for k in range(num_hashes)
+        (F.col(f"a_{k}") == F.col(f"b_{k}")).cast("int") for k in range(NUM_HASHES)
     )
     return (
         cand.join(a, "id_a")
@@ -126,19 +118,12 @@ def signature_match_pairs(
         .select(
             "id_a",
             "id_b",
-            (matches.cast("double") / F.lit(float(num_hashes))).alias("est_jaccard"),
+            (matches.cast("double") / F.lit(float(NUM_HASHES))).alias("est_jaccard"),
         )
     )
 
 
-def make_processor(
-    store_dir: str,
-    dupes_dir: str,
-    *,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-):
+def make_processor(store_dir: str, dupes_dir: str):
     """The per-epoch foreachBatch body, exposed so tests can exercise
     the redelivery contract directly (a crashed epoch is redelivered by
     the checkpoint with the SAME epoch_id and must converge)."""
@@ -157,14 +142,11 @@ def make_processor(
             # whole epoch — both writes are overwrite-by-epoch, so the
             # redo converges to exactly one copy.
             shutil.rmtree(epoch_store)
-        sig = batch_signatures(
-            batch_df, n=n, num_hashes=num_hashes
-        ).localCheckpoint(eager=True)  # feeds the probe AND the store write
+        # feeds the probe AND the store write
+        sig = batch_signatures(batch_df).localCheckpoint(eager=True)
         if _store_epochs(store_dir):
             old = batch_df.sparkSession.read.parquet(store_dir).drop("epoch")
-            pairs = signature_match_pairs(
-                sig, old, num_hashes=num_hashes, bands=bands
-            )
+            pairs = signature_match_pairs(sig, old)
             pairs.write.mode("overwrite").parquet(
                 os.path.join(dupes_dir, f"epoch={epoch_id}")
             )
@@ -179,26 +161,24 @@ def run_dedup_ingest(
     store_dir: str,
     dupes_dir: str,
     checkpoint_dir: str,
-    *,
-    n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
-    max_files_per_trigger: int = 1,
-    timeout_sec: int = 300,
 ) -> None:
     """Drain all pending input files (availableNow) through the
     dedup-on-ingest pipeline; one store partition + one dupes
-    partition per epoch."""
-    process = make_processor(
-        store_dir, dupes_dir, n=n, num_hashes=num_hashes, bands=bands
-    )
+    partition per epoch. A run still going after ``TIMEOUT_SEC`` is
+    stopped and raises ``RuntimeError``: the caller must never read
+    (or remove) the store of a query that is still writing it."""
+    process = make_processor(store_dir, dupes_dir)
     q = (
         spark.readStream.schema(DOC_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", MAX_FILES_PER_TRIGGER)
         .parquet(input_dir)
         .writeStream.foreachBatch(process)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout_sec)
+    if not q.awaitTermination(TIMEOUT_SEC):
+        q.stop()
+        raise RuntimeError(
+            f"dedup ingest of {input_dir} timed out after {TIMEOUT_SEC} s"
+        )

@@ -1,4 +1,4 @@
-"""Streaming jobs: the multiplexed ingestion dataflow and native klines.
+"""Streaming jobs: the multiplexed ingestion dataflow.
 
 The ingestion job is the reference's whole main program re-expressed
 (SURVEY §3.1): multiplexed source → per-stream normalize → envelope →
@@ -161,47 +161,3 @@ def run_ingest(
 
         threading.Thread(target=_stop_when_done, daemon=True).start()
     return query, limiter
-
-
-def run_kline_stream(
-    spark: SparkSession,
-    trades_wire: DataFrame,
-    *,
-    interval: str = "1m",
-    watermark: str = "1 minute",
-    checkpoint_dir: str,
-    query_name: str = "native_klines",
-    output_mode: str = "append",
-):
-    """Native kline aggregation from a raw trades stream (A1).
-
-    ``update`` mode emits in-progress candles (is_kline_closed=False
-    interim semantics); ``append`` emits only watermark-closed candles
-    (is_kline_closed=True finals).
-    """
-    from ..operators.klines import klines_from_trades
-    from ..operators.projections import case_sensitive, normalize_trades
-    from ..schemas import DEC
-
-    parsed = parse_raw(trades_wire, "trades")
-    if "symbol" not in parsed.columns:
-        # bare text replay: recover the symbol from the payload's `s` field
-        with case_sensitive(spark):
-            parsed = parsed.withColumn("symbol", F.col("__raw").getField("s"))
-    norm = normalize_trades(parsed, keep=["symbol"])
-    typed = norm.select(
-        "symbol",
-        F.col("trade_time").cast("long").alias("trade_time"),
-        F.col("price").cast(DEC).alias("price"),
-        F.col("quantity").cast(DEC).alias("quantity"),
-    )
-    kl = klines_from_trades(
-        typed, interval, watermark=watermark, closed=(output_mode == "append")
-    )
-    return (
-        kl.writeStream.outputMode(output_mode)
-        .format("memory")
-        .queryName(query_name)
-        .option("checkpointLocation", f"{checkpoint_dir}/{query_name}")
-        .start()
-    )

@@ -3,20 +3,32 @@
 The reference keeps only writer-side state (buffer dicts keyed
 ``{stream}_{symbol}_{fmt}``, `/root/reference/binance-di.py:155-191`);
 these are the engine-grade stateful operators a training-data pipeline
-needs on top: session windows with arbitrary merge logic via
-``applyInPandasWithState`` (the custom path — Spark's native
-``session_window`` covers the simple case), and watermarked streaming
-deduplication.
+needs on top, all on ``applyInPandasWithState`` with event-time
+timeouts except the dedup:
 
-Scale notes: state lives in the state store partitioned by group key —
-one (user) key's state is a handful of session summaries, never raw
-events, so state size is O(open sessions), not O(events). Watermark +
-event-time timeout bound both memory and emission latency.
+- watermark-ordered operators that emit each result exactly once, when
+  the watermark proves it final: session windows with custom merge
+  logic (``sessionize_stream`` — Spark's native ``session_window``
+  covers the simple case), Markov transitions
+  (``transition_counts_stream``), trailing-window analytics
+  (``rolling_window_stream``) and the VPIN volume clock
+  (``vpin_stream``);
+- per-key sketch streams that emit a snapshot with every data batch,
+  through one keyed-snapshot driver (``_snapshot_stream``):
+  Misra-Gries heavy hitters, KMV distinct, XOR digest, flag counters
+  and GK quantiles — each sketch is a pure ``step`` over its state;
+- watermarked exact deduplication (``dedup_stream``).
+
+Scale notes: state lives in the state store partitioned by group key
+and holds summaries, never the raw stream — open sessions, the
+out-of-watermark buffer, or an O(capacity) sketch per key. Watermark +
+event-time timeout bound both memory and emission latency; keys idle
+past ``IDLE_STATE_TTL_MS`` of event time are dropped.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator, Tuple
+from typing import Any, Callable, Iterator, Optional, Tuple
 
 import pandas as pd
 
@@ -32,6 +44,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+WATERMARK = "30 minutes"
+IDLE_STATE_TTL_MS = 86_400_000  # one day of event time
 GAP_SECONDS = 1800
 
 SESSION_OUTPUT_SCHEMA = StructType(
@@ -144,10 +158,7 @@ def _sessionize_fn(gap: int):
 
 
 def sessionize_stream(
-    events: DataFrame,
-    *,
-    gap_seconds: int = GAP_SECONDS,
-    watermark: str = "30 minutes",
+    events: DataFrame, *, watermark: str = WATERMARK
 ) -> DataFrame:
     """Streaming session windows with custom merge state.
 
@@ -161,7 +172,7 @@ def sessionize_stream(
         .withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _sessionize_fn(gap_seconds),
+            _sessionize_fn(GAP_SECONDS),
             SESSION_OUTPUT_SCHEMA,
             SESSION_STATE_SCHEMA,
             "append",
@@ -171,19 +182,100 @@ def sessionize_stream(
 
 
 def dedup_stream(
-    df: DataFrame,
-    keys: list[str],
-    *,
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
+    df: DataFrame, keys: list[str], *, watermark: str = WATERMARK
 ) -> DataFrame:
     """Streaming exact dedup bounded by the watermark: duplicates of a
     key arriving within the watermark horizon are dropped; state for a
     key is freed once the watermark passes it (so state is O(keys per
     horizon), which is what makes this viable on an unbounded stream)."""
-    return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(keys)
+    return df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(keys)
 
 
+Snapshot = Tuple[Optional[dict], tuple]
+
+
+def _snapshot_stream(
+    events: DataFrame,
+    keys: list[str],
+    cols: list[str],
+    out_fields: list[StructField],
+    state_schema: StructType,
+    step: Callable[[Optional[tuple], Iterator[pd.DataFrame]], Snapshot],
+) -> DataFrame:
+    """Keyed-snapshot driver shared by the per-key sketch streams.
+
+    ``events`` carries ``keys``, the sketch's input ``cols`` and the
+    event-time column ``ts``. Per key and micro-batch,
+    ``step(prev, pdfs)`` folds the key's non-empty batches (a
+    generator, so batches still stream) into its state — ``prev`` is
+    the stored state tuple, None for a new key — and returns
+    ``(snapshot, state)``: the snapshot's ``out_fields`` columns as a
+    dict of equal-length lists, or None to emit nothing. This function
+    prepends the key columns, stores the state and re-arms the key's
+    event-time TTL of ``IDLE_STATE_TTL_MS``; a key idle past it has
+    its state removed and emits nothing.
+
+    Emission contract (append mode): the post-batch snapshot goes out
+    with EVERY data batch the key receives, never from a watermark
+    timer. A timer-driven final flush silently never fires when the
+    stream's last watermark advance precedes the key's last data (a
+    replay whose sentinel file is processed before the final data
+    file; the multi-batch twin tests pin this). Snapshots are monotone
+    in ``n_processed``: consumers keep the rows with the highest
+    ``n_processed`` per key, and the last data batch's emission IS the
+    full-stream summary — which is why an expired key's state can be
+    freed without a final emission. Output: *keys, *out_fields.
+    """
+
+    def fn(
+        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
+    ) -> Iterator[pd.DataFrame]:
+        if state.hasTimedOut:
+            state.remove()
+            return
+        snapshot, new_state = step(
+            state.get if state.exists else None,
+            (pdf for pdf in pdfs if not pdf.empty),
+        )
+        if snapshot is not None:
+            out = pd.DataFrame(snapshot)
+            for i, v in enumerate(key):
+                out.insert(i, f"__k{i}", v)
+            yield out
+        state.update(new_state)
+        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + IDLE_STATE_TTL_MS)
+
+    out_schema = StructType(
+        [
+            StructField(f"__k{i}", events.schema[k].dataType)
+            for i, k in enumerate(keys)
+        ]
+        + out_fields
+    )
+    raw = (
+        events.select(*keys, *cols, "ts")
+        .withWatermark("ts", WATERMARK)
+        .groupBy(*keys)
+        .applyInPandasWithState(
+            fn,
+            out_schema,
+            state_schema,
+            "append",
+            GroupStateTimeout.EventTimeTimeout,
+        )
+    )
+    for i, k in enumerate(keys):
+        raw = raw.withColumnRenamed(f"__k{i}", k)
+    return raw
+
+
+def _longs(*names: str) -> list[StructField]:
+    return [StructField(n, LongType()) for n in names]
+
+
+MG_OUT_FIELDS = [StructField("item", StringType())] + _longs(
+    "count_lb", "n_processed", "max_err"
+)
 MG_STATE_SCHEMA = StructType(
     [
         StructField("items", ArrayType(StringType())),
@@ -194,67 +286,34 @@ MG_STATE_SCHEMA = StructType(
 )
 
 
-def _mg_stream_fn(
-    item_col: str, capacity: int, n_keys: int, idle_state_ttl_ms: int
-):
+def _mg_step(item_col: str, capacity: int):
     from ..operators.frequent import mg_ingest
 
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle past the event-time TTL: the key's latest snapshot
-            # was already emitted with its last data batch, so just
-            # free the state (O(capacity) per key, but dead keys would
-            # otherwise accumulate forever)
-            state.remove()
-            return
-
+    def step(prev: Optional[tuple], pdfs: Iterator[pd.DataFrame]) -> Snapshot:
         counters: dict = {}
         n = dec = 0
-        if state.exists:
-            items, counts, n, dec = state.get
+        if prev is not None:
+            items, counts, n, dec = prev
             counters = dict(zip(items, counts))
             n, dec = int(n), int(dec)
-
         for pdf in pdfs:
-            if pdf.empty:
-                continue
             dn, dd = mg_ingest(
                 counters, pdf[item_col].dropna().astype(str), capacity
             )
             n += dn
             dec += dd
+        state = (list(counters.keys()), [int(v) for v in counters.values()], n, dec)
+        if not counters:
+            return None, state
+        ordered = sorted(counters.items(), key=lambda kv: (-kv[1], kv[0]))
+        return {
+            "item": [k for k, _ in ordered],
+            "count_lb": [v for _, v in ordered],
+            "n_processed": [n] * len(ordered),
+            "max_err": [dec] * len(ordered),
+        }, state
 
-        # emit the post-batch snapshot EVERY data batch (never from a
-        # timer): emission then cannot depend on whether the watermark
-        # happens to advance again after the key's last data — the
-        # failure mode a timer-driven flush has when a replay's
-        # watermark-driving row is processed before the final data
-        # batch. Consumers keep the rows with the highest n_processed
-        # per key; the last data batch's emission IS the final summary.
-        if counters:
-            ordered = sorted(counters.items(), key=lambda kv: (-kv[1], kv[0]))
-            yield pd.DataFrame(
-                {
-                    **{
-                        f"__k{i}": [key[i]] * len(ordered)
-                        for i in range(n_keys)
-                    },
-                    "item": [k for k, _ in ordered],
-                    "count_lb": [v for _, v in ordered],
-                    "n_processed": [n] * len(ordered),
-                    "max_err": [dec] * len(ordered),
-                }
-            )
-        state.update(
-            (list(counters.keys()), [int(v) for v in counters.values()], n, dec)
-        )
-        state.setTimeoutTimestamp(
-            state.getCurrentWatermarkMs() + idle_state_ttl_ms
-        )
-
-    return fn
+    return step
 
 
 def heavy_hitters_stream(
@@ -263,20 +322,13 @@ def heavy_hitters_stream(
     item_col: str,
     *,
     capacity: int = 256,
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-    idle_state_ttl_ms: int = 86_400_000,
 ) -> DataFrame:
     """Streaming grouped approx top-k by frequency: a Misra-Gries
-    summary per key maintained in keyed state (applyInPandasWithState),
-    emitting the post-batch snapshot with EVERY data batch the key
-    receives (never from a watermark timer — a timer-driven final
-    flush silently never fires when the stream's last watermark
-    advance precedes the key's last data, e.g. a replay whose
-    sentinel file is processed before the final data file; the
-    multi-batch twin test pins this). Keys idle past
-    ``idle_state_ttl_ms`` of event time have their state dropped —
-    their last emitted snapshot is already final.
+    summary per key maintained in keyed state, emitted as a snapshot
+    with every data batch the key receives (``_snapshot_stream``'s
+    emission contract). Keys idle past ``IDLE_STATE_TTL_MS`` of event
+    time have their state dropped — their last emitted snapshot is
+    already final.
 
     Per-key state is O(capacity) — items and lower-bound counts plus
     the (n_processed, decrement) error certificate — NEVER the raw
@@ -287,41 +339,19 @@ def heavy_hitters_stream(
     > n/(capacity+1) is present in the summary, and
     true_count - count_lb ∈ [0, max_err] with max_err ≤ n/(capacity+1).
 
-    Emission contract (append mode): snapshots are monotone in
-    ``n_processed`` — consumers keep the row set with the highest
-    n_processed per key; the last data batch's emission IS the
-    full-stream summary, which is what the batch-twin tests recount
-    against q88's exact heavy hitters. Output columns: *keys, item
-    (stringified), count_lb, n_processed, max_err.
+    Snapshots are monotone in ``n_processed``; the last data batch's
+    emission IS the full-stream summary, which is what the batch-twin
+    tests recount against q88's exact heavy hitters. Output columns:
+    *keys, item (stringified), count_lb, n_processed, max_err.
     """
-    in_schema = events.schema
-    out_schema = StructType(
-        [
-            StructField(f"__k{i}", in_schema[k].dataType)
-            for i, k in enumerate(keys)
-        ]
-        + [
-            StructField("item", StringType()),
-            StructField("count_lb", LongType()),
-            StructField("n_processed", LongType()),
-            StructField("max_err", LongType()),
-        ]
+    return _snapshot_stream(
+        events,
+        keys,
+        [item_col],
+        MG_OUT_FIELDS,
+        MG_STATE_SCHEMA,
+        _mg_step(item_col, capacity),
     )
-    raw = (
-        events.select(*keys, item_col, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _mg_stream_fn(item_col, capacity, len(keys), idle_state_ttl_ms),
-            out_schema,
-            MG_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    for i, k in enumerate(keys):
-        raw = raw.withColumnRenamed(f"__k{i}", k)
-    return raw
 
 
 TRANSITION_OUTPUT_SCHEMA = StructType(
@@ -343,7 +373,7 @@ TRANSITION_STATE_SCHEMA = StructType(
 )
 
 
-def _transition_fn(idle_state_ttl_ms: int = 86_400_000):
+def _transition_fn():
     def fn(
         key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
     ) -> Iterator[pd.DataFrame]:
@@ -402,7 +432,7 @@ def _transition_fn(idle_state_ttl_ms: int = 86_400_000):
             else:
                 # only the boundary type remains — arm the idle TTL
                 state.setTimeoutTimestamp(
-                    state.getCurrentWatermarkMs() + idle_state_ttl_ms
+                    state.getCurrentWatermarkMs() + IDLE_STATE_TTL_MS
                 )
         else:
             state.remove()
@@ -419,12 +449,7 @@ def _transition_fn(idle_state_ttl_ms: int = 86_400_000):
     return fn
 
 
-def transition_counts_stream(
-    events: DataFrame,
-    *,
-    watermark: str = "30 minutes",
-    idle_state_ttl_ms: int = 86_400_000,
-) -> DataFrame:
+def transition_counts_stream(events: DataFrame) -> DataFrame:
     """Streaming twin of the q120 Markov transition matrix: per-key
     event-time sequence reconstruction under a watermark.
 
@@ -434,7 +459,7 @@ def transition_counts_stream(
     (prev_type → event_type) transition row (append mode). Per-key
     state is the out-of-watermark tail plus the boundary type; keys
     whose buffer has fully flushed keep only the boundary type and are
-    DROPPED once idle past ``idle_state_ttl_ms`` (event-time), so
+    DROPPED once idle past ``IDLE_STATE_TTL_MS`` (event-time), so
     total state is O(keys active within the TTL horizon) — without
     the TTL it would grow as O(all keys ever seen). A key resuming
     after TTL expiry starts a fresh chain (the cross-TTL transition is
@@ -444,10 +469,10 @@ def transition_counts_stream(
     """
     return (
         events.select("user_id", "ts", "event_id", "event_type")
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy("user_id")
         .applyInPandasWithState(
-            _transition_fn(idle_state_ttl_ms),
+            _transition_fn(),
             TRANSITION_OUTPUT_SCHEMA,
             TRANSITION_STATE_SCHEMA,
             "append",
@@ -455,6 +480,8 @@ def transition_counts_stream(
         )
     )
 
+
+ROLLING_WINDOW_SEC = 86_400
 
 ROLLING_OUTPUT_SCHEMA = StructType(
     [
@@ -479,7 +506,7 @@ ROLLING_STATE_SCHEMA = StructType(
 )
 
 
-def _rolling_fn(window_sec: int, idle_state_ttl_ms: int):
+def _rolling_fn():
     import numpy as np
 
     def fn(
@@ -525,7 +552,7 @@ def _rolling_fn(window_sec: int, idle_state_ttl_ms: int):
         emit_mask = (secs >= last_wm) & (secs < wm_sec)
         out = None
         if emit_mask.any():
-            starts = np.searchsorted(secs, secs - window_sec, side="left")
+            starts = np.searchsorted(secs, secs - ROLLING_WINDOW_SEC, side="left")
             csum = np.concatenate(([0.0], np.cumsum(vals)))
             # ends: frame includes ALL rows with the same sec (RANGE,
             # not ROWS) — right boundary is the last index with sec<=s
@@ -564,7 +591,7 @@ def _rolling_fn(window_sec: int, idle_state_ttl_ms: int):
         # retain: context for future events = everything with
         # sec >= wm - window (an event at u is inside the frame of
         # events up to u + window)
-        keep = secs >= (wm_sec - window_sec)
+        keep = secs >= (wm_sec - ROLLING_WINDOW_SEC)
         n_keep = int(keep.sum())
         # last_wm is the re-emission guard for CONTEXT rows (already
         # emitted but still inside a future event's frame) — needed
@@ -590,7 +617,7 @@ def _rolling_fn(window_sec: int, idle_state_ttl_ms: int):
                 )
             else:
                 state.setTimeoutTimestamp(
-                    state.getCurrentWatermarkMs() + idle_state_ttl_ms
+                    state.getCurrentWatermarkMs() + IDLE_STATE_TTL_MS
                 )
         else:
             state.remove()
@@ -601,24 +628,15 @@ def _rolling_fn(window_sec: int, idle_state_ttl_ms: int):
     return fn
 
 
-def rolling_window_stream(
-    events: DataFrame,
-    *,
-    key_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-    value_col: str = "value",
-    window_sec: int = 86_400,
-    watermark: str = "30 minutes",
-    idle_state_ttl_ms: int = 86_400_000,
-) -> DataFrame:
+def rolling_window_stream(events: DataFrame) -> DataFrame:
     """Streaming per-event trailing-window analytics — the streaming
     twin of the 24 h rolling ticker stats (SURVEY §2.4 A2, the
     exchange-computed sliding aggregate the reference consumes,
     `/root/reference/binance-di.py:35-41`): for every event, the sum /
-    count / max over the RANGE frame ``[t - window_sec, t]`` within its
-    key, emitted exactly once when the watermark proves the frame
-    complete (no event ≤ t can still arrive).
+    count / max over the RANGE frame ``[t - ROLLING_WINDOW_SEC, t]``
+    within its ``event_type`` key, emitted exactly once when the
+    watermark proves the frame complete (no event ≤ t can still
+    arrive).
 
     Mechanics: events buffer in keyed state; each batch sorts the
     buffer once and finalizes rows with ``last_wm ≤ sec < wm`` via
@@ -639,15 +657,15 @@ def rolling_window_stream(
     """
     return (
         events.select(
-            F.col(key_col).cast("string").alias("grp"),
-            F.col(ts_col).alias("ts"),
-            F.col(id_col).cast("long").alias("event_id"),
-            F.col(value_col).cast("double").alias("value"),
+            F.col("event_type").cast("string").alias("grp"),
+            "ts",
+            F.col("event_id").cast("long").alias("event_id"),
+            F.col("value").cast("double").alias("value"),
         )
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy("grp")
         .applyInPandasWithState(
-            _rolling_fn(window_sec, idle_state_ttl_ms),
+            _rolling_fn(),
             ROLLING_OUTPUT_SCHEMA,
             ROLLING_STATE_SCHEMA,
             "append",
@@ -656,6 +674,11 @@ def rolling_window_stream(
     )
 
 
+KMV_OUT_FIELDS = [
+    StructField("h", LongType()),
+    StructField("item", StringType()),
+    StructField("n_processed", LongType()),
+]
 KMV_STATE_SCHEMA = StructType(
     [
         StructField("hashes", ArrayType(LongType())),
@@ -665,28 +688,15 @@ KMV_STATE_SCHEMA = StructType(
 )
 
 
-def _kmv_stream_fn(
-    hash_col: str, item_col: str, k: int, n_keys: int, idle_state_ttl_ms: int
-):
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle past the event-time TTL: the latest snapshot was
-            # already emitted with the key's last data batch
-            state.remove()
-            return
-
+def _kmv_step(hash_col: str, item_col: str, k: int):
+    def step(prev: Optional[tuple], pdfs: Iterator[pd.DataFrame]) -> Snapshot:
         pairs: list[Tuple[int, str]] = []
         n = 0
-        if state.exists:
-            hs, its, n = state.get
+        if prev is not None:
+            hs, its, n = prev
             pairs = list(zip((int(h) for h in hs), (str(x) for x in its)))
             n = int(n)
-
         for pdf in pdfs:
-            if pdf.empty:
-                continue
             n += len(pdf)
             pairs.extend(
                 zip(
@@ -699,27 +709,12 @@ def _kmv_stream_fn(
             # and keep the k smallest; doing it per-pdf bounds the
             # working list at k + batch size
             pairs = sorted(set(pairs))[:k]
+        hs, its = [p[0] for p in pairs], [p[1] for p in pairs]
+        if not pairs:
+            return None, (hs, its, n)
+        return {"h": hs, "item": its, "n_processed": [n] * len(pairs)}, (hs, its, n)
 
-        # emit the post-batch snapshot with every data batch (the
-        # heavy_hitters_stream emission contract: never from a timer —
-        # consumers keep the rows with the highest n_processed per key)
-        if pairs:
-            yield pd.DataFrame(
-                {
-                    **{f"__k{i}": [key[i]] * len(pairs) for i in range(n_keys)},
-                    "h": [p[0] for p in pairs],
-                    "item": [p[1] for p in pairs],
-                    "n_processed": [n] * len(pairs),
-                }
-            )
-        state.update(
-            ([p[0] for p in pairs], [p[1] for p in pairs], n)
-        )
-        state.setTimeoutTimestamp(
-            state.getCurrentWatermarkMs() + idle_state_ttl_ms
-        )
-
-    return fn
+    return step
 
 
 def kmv_stream(
@@ -729,9 +724,6 @@ def kmv_stream(
     *,
     hash_col: str,
     k: int = 256,
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-    idle_state_ttl_ms: int = 86_400_000,
 ) -> DataFrame:
     """Streaming KMV distinct sketch per key: the k smallest
     (pre-computed JVM-side ``hash_col``, item) pairs maintained in
@@ -743,41 +735,23 @@ def kmv_stream(
     the equality q199 hash-certifies. Per-key state is O(k) (hashes +
     items + the processed-row count), so an unbounded stream over an
     unbounded key universe runs in bounded memory; idle keys are
-    dropped after ``idle_state_ttl_ms`` of event time (their last
+    dropped after ``IDLE_STATE_TTL_MS`` of event time (their last
     emitted snapshot is already final).
 
-    Emission contract (append mode): a full post-batch snapshot with
-    every data batch the key receives; snapshots are monotone in
-    ``n_processed`` — consumers keep the rows with the highest
-    ``n_processed`` per key. Output: *keys, h, item, n_processed.
+    Emission contract (append mode, ``_snapshot_stream``): a full
+    post-batch snapshot with every data batch the key receives;
+    snapshots are monotone in ``n_processed`` — consumers keep the
+    rows with the highest ``n_processed`` per key. Output: *keys, h,
+    item, n_processed.
     """
-    in_schema = events.schema
-    out_schema = StructType(
-        [
-            StructField(f"__k{i}", in_schema[kcol].dataType)
-            for i, kcol in enumerate(keys)
-        ]
-        + [
-            StructField("h", LongType()),
-            StructField("item", StringType()),
-            StructField("n_processed", LongType()),
-        ]
+    return _snapshot_stream(
+        events,
+        keys,
+        [hash_col, item_col],
+        KMV_OUT_FIELDS,
+        KMV_STATE_SCHEMA,
+        _kmv_step(hash_col, item_col, k),
     )
-    raw = (
-        events.select(*keys, hash_col, item_col, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _kmv_stream_fn(hash_col, item_col, k, len(keys), idle_state_ttl_ms),
-            out_schema,
-            KMV_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    for i, kcol in enumerate(keys):
-        raw = raw.withColumnRenamed(f"__k{i}", kcol)
-    return raw
 
 
 # ---------------------------------------------------------------------------
@@ -785,54 +759,25 @@ def kmv_stream(
 # content digest (bit_xor fold of a 60-bit row-identity hash).
 # ---------------------------------------------------------------------------
 
-XOR_DIGEST_STATE_SCHEMA = StructType(
-    [StructField("digest", LongType()), StructField("n", LongType())]
-)
+XOR_DIGEST_OUT_FIELDS = _longs("digest", "n_processed")
+XOR_DIGEST_STATE_SCHEMA = StructType(_longs("digest", "n"))
 
 
-def _xor_digest_stream_fn(hash_col: str, n_keys: int, idle_state_ttl_ms: int):
+def _xor_digest_step(hash_col: str):
     import numpy as np
 
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            # idle past the event-time TTL: the latest digest was
-            # already emitted with the key's last data batch
-            state.remove()
-            return
-
-        dig, n = (0, 0)
-        if state.exists:
-            d0, n0 = state.get
-            dig, n = int(d0), int(n0)
-
+    def step(prev: Optional[tuple], pdfs: Iterator[pd.DataFrame]) -> Snapshot:
+        dig, n = (0, 0) if prev is None else (int(prev[0]), int(prev[1]))
         for pdf in pdfs:
-            if pdf.empty:
-                continue
             n += len(pdf)
             # XOR is commutative/associative: fold the Arrow batch
             # vectorized, then fold into the carried state scalar
             dig ^= int(
                 np.bitwise_xor.reduce(pdf[hash_col].to_numpy(dtype=np.int64))
             )
+        return {"digest": [dig], "n_processed": [n]}, (dig, n)
 
-        # post-batch snapshot with every data batch (the engine's
-        # snapshot-emission contract: never from a timer; consumers
-        # keep the row with the highest n_processed per key)
-        yield pd.DataFrame(
-            {
-                **{f"__k{i}": [key[i]] for i in range(n_keys)},
-                "digest": [dig],
-                "n_processed": [n],
-            }
-        )
-        state.update((dig, n))
-        state.setTimeoutTimestamp(
-            state.getCurrentWatermarkMs() + idle_state_ttl_ms
-        )
-
-    return fn
+    return step
 
 
 def xor_digest_stream(
@@ -840,9 +785,6 @@ def xor_digest_stream(
     keys: list[str],
     *,
     hash_col: str,
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-    idle_state_ttl_ms: int = 86_400_000,
 ) -> DataFrame:
     """Streaming per-key XOR content digest: the running ``bit_xor``
     of a pre-computed JVM-side row-identity hash — the streaming twin
@@ -854,40 +796,22 @@ def xor_digest_stream(
     q199-KMV equality argument, here for the simplest possible monoid).
     Per-key state is two longs: O(1) memory on an unbounded stream over
     an unbounded key universe; idle keys drop after
-    ``idle_state_ttl_ms`` of event time (their last emitted snapshot is
+    ``IDLE_STATE_TTL_MS`` of event time (their last emitted snapshot is
     already final).
 
-    Emission contract (append mode): one post-batch snapshot row per
-    key per data batch, monotone in ``n_processed`` — consumers keep
-    the row with the highest ``n_processed`` per key. Output:
-    *keys, digest, n_processed.
+    Emission contract (append mode, ``_snapshot_stream``): one
+    post-batch snapshot row per key per data batch, monotone in
+    ``n_processed`` — consumers keep the row with the highest
+    ``n_processed`` per key. Output: *keys, digest, n_processed.
     """
-    in_schema = events.schema
-    out_schema = StructType(
-        [
-            StructField(f"__k{i}", in_schema[kcol].dataType)
-            for i, kcol in enumerate(keys)
-        ]
-        + [
-            StructField("digest", LongType()),
-            StructField("n_processed", LongType()),
-        ]
+    return _snapshot_stream(
+        events,
+        keys,
+        [hash_col],
+        XOR_DIGEST_OUT_FIELDS,
+        XOR_DIGEST_STATE_SCHEMA,
+        _xor_digest_step(hash_col),
     )
-    raw = (
-        events.select(*keys, hash_col, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _xor_digest_stream_fn(hash_col, len(keys), idle_state_ttl_ms),
-            out_schema,
-            XOR_DIGEST_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    for i, kcol in enumerate(keys):
-        raw = raw.withColumnRenamed(f"__k{i}", kcol)
-    return raw
 
 
 # ---------------------------------------------------------------------------
@@ -896,27 +820,14 @@ def xor_digest_stream(
 # THIRTEENTH streaming≡batch certificate's stream side).
 # ---------------------------------------------------------------------------
 
-FLAG_COUNTER_STATE_SCHEMA = StructType(
-    [StructField("n", LongType()), StructField("k", LongType())]
-)
+FLAG_COUNTER_OUT_FIELDS = _longs("n", "k", "n_processed")
+FLAG_COUNTER_STATE_SCHEMA = StructType(_longs("n", "k"))
 
 
-def _flag_counter_stream_fn(flag_col: str, n_keys: int, idle_state_ttl_ms: int):
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-
-        n, k = (0, 0)
-        if state.exists:
-            n0, k0 = state.get
-            n, k = int(n0), int(k0)
-
+def _flag_counter_step(flag_col: str):
+    def step(prev: Optional[tuple], pdfs: Iterator[pd.DataFrame]) -> Snapshot:
+        n, k = (0, 0) if prev is None else (int(prev[0]), int(prev[1]))
         for pdf in pdfs:
-            if pdf.empty:
-                continue
             # fold the Arrow batch vectorized, then carry the scalars:
             # the CARRIED (n, k) is the whole certificate — a fold that
             # restarts per micro-batch passes single-batch replays and
@@ -924,21 +835,9 @@ def _flag_counter_stream_fn(flag_col: str, n_keys: int, idle_state_ttl_ms: int):
             # exactly that break and measures the divergence)
             n += len(pdf)
             k += int(pdf[flag_col].to_numpy(dtype="int64").sum())
+        return {"n": [n], "k": [k], "n_processed": [n]}, (n, k)
 
-        yield pd.DataFrame(
-            {
-                **{f"__k{i}": [key[i]] for i in range(n_keys)},
-                "n": [n],
-                "k": [k],
-                "n_processed": [n],
-            }
-        )
-        state.update((n, k))
-        state.setTimeoutTimestamp(
-            state.getCurrentWatermarkMs() + idle_state_ttl_ms
-        )
-
-    return fn
+    return step
 
 
 def flag_counter_stream(
@@ -946,9 +845,6 @@ def flag_counter_stream(
     keys: list[str],
     *,
     flag_col: str,
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-    idle_state_ttl_ms: int = 86_400_000,
 ) -> DataFrame:
     """Streaming per-key (rows seen, flags set) counters — the counting
     monoid under q250's Wilson interval as a stateful operator.
@@ -958,41 +854,22 @@ def flag_counter_stream(
     whatever the batch/file/arrival order (the q199/q209 monoid
     equality argument, for the simplest monoid after XOR). Per-key
     state is two longs — O(1) memory on an unbounded stream; idle keys
-    drop after ``idle_state_ttl_ms`` of event time (their last emitted
+    drop after ``IDLE_STATE_TTL_MS`` of event time (their last emitted
     snapshot is already final).
 
-    Emission contract (append mode): one post-batch snapshot row per
-    key per data batch, monotone in ``n_processed`` — consumers keep
-    the row with the highest ``n_processed`` per key. Output:
-    *keys, n, k, n_processed.
+    Emission contract (append mode, ``_snapshot_stream``): one
+    post-batch snapshot row per key per data batch, monotone in
+    ``n_processed`` — consumers keep the row with the highest
+    ``n_processed`` per key. Output: *keys, n, k, n_processed.
     """
-    in_schema = events.schema
-    out_schema = StructType(
-        [
-            StructField(f"__k{i}", in_schema[kcol].dataType)
-            for i, kcol in enumerate(keys)
-        ]
-        + [
-            StructField("n", LongType()),
-            StructField("k", LongType()),
-            StructField("n_processed", LongType()),
-        ]
+    return _snapshot_stream(
+        events,
+        keys,
+        [flag_col],
+        FLAG_COUNTER_OUT_FIELDS,
+        FLAG_COUNTER_STATE_SCHEMA,
+        _flag_counter_step(flag_col),
     )
-    raw = (
-        events.select(*keys, flag_col, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _flag_counter_stream_fn(flag_col, len(keys), idle_state_ttl_ms),
-            out_schema,
-            FLAG_COUNTER_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    for i, kcol in enumerate(keys):
-        raw = raw.withColumnRenamed(f"__k{i}", kcol)
-    return raw
 
 
 VPIN_OUTPUT_SCHEMA = StructType(
@@ -1121,7 +998,7 @@ def vpin_stream(
     trades: DataFrame,
     bucket_vol: int,
     *,
-    watermark: str = "30 minutes",
+    watermark: str = WATERMARK,
 ) -> DataFrame:
     """Streaming twin of the q236 VPIN volume clock at a FIXED bucket
     volume: per-symbol keyed state carries the running cumulative
@@ -1243,6 +1120,7 @@ class GKSketch:
         return ans
 
 
+GK_OUT_FIELDS = _longs("a50", "a95", "n", "n_tuples", "n_processed")
 GK_STATE_SCHEMA = StructType(
     [
         StructField("n", LongType()),
@@ -1253,47 +1131,30 @@ GK_STATE_SCHEMA = StructType(
 )
 
 
-def _gk_stream_fn(value_col: str, n_keys: int, eps: float, idle_state_ttl_ms: int):
-    def fn(
-        key: Any, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:
-            state.remove()
-            return
-
+def _gk_step(value_col: str, eps: float):
+    def step(prev: Optional[tuple], pdfs: Iterator[pd.DataFrame]) -> Snapshot:
         sk = GKSketch(eps)
-        if state.exists:
-            n0, vs0, gs0, ds0 = state.get
+        if prev is not None:
+            n0, vs0, gs0, ds0 = prev
             sk.n = int(n0)
             sk.vs = [int(x) for x in vs0]
             sk.gs = [int(x) for x in gs0]
             sk.ds = [int(x) for x in ds0]
-
         for pdf in pdfs:
-            if pdf.empty:
-                continue
             # sorted within-batch insertion order: determinism is the
             # (batch sequence × this order), both pinned by the replay
             for v in sorted(pdf[value_col].to_numpy(dtype="int64").tolist()):
                 sk.insert(int(v))
-
         sk.compress()
-        yield pd.DataFrame(
-            {
-                **{f"__k{i}": [key[i]] for i in range(n_keys)},
-                "a50": [sk.query(0.5) if sk.n else None],
-                "a95": [sk.query(0.95) if sk.n else None],
-                "n": [sk.n],
-                "n_tuples": [len(sk.vs)],
-                "n_processed": [sk.n],
-            }
-        )
-        state.update((sk.n, sk.vs, sk.gs, sk.ds))
-        state.setTimeoutTimestamp(
-            state.getCurrentWatermarkMs() + idle_state_ttl_ms
-        )
+        return {
+            "a50": [sk.query(0.5) if sk.n else None],
+            "a95": [sk.query(0.95) if sk.n else None],
+            "n": [sk.n],
+            "n_tuples": [len(sk.vs)],
+            "n_processed": [sk.n],
+        }, (sk.n, sk.vs, sk.gs, sk.ds)
 
-    return fn
+    return step
 
 
 def gk_quantile_stream(
@@ -1302,46 +1163,23 @@ def gk_quantile_stream(
     *,
     value_col: str,
     eps: float = 0.01,
-    ts_col: str = "ts",
-    watermark: str = "30 minutes",
-    idle_state_ttl_ms: int = 86_400_000,
 ) -> DataFrame:
     """Streaming per-key GK quantile sketch (p50/p95 snapshots).
 
     State per key = the sketch's (v, g, Δ) tuple arrays — O((1/ε)·
-    log(εn)) longs, never the data. Emission contract (append mode):
-    one post-batch snapshot per key per data batch with the sketch's
-    current p50/p95 answers, monotone in ``n_processed``; consumers
-    keep the highest-``n_processed`` row per key. The answers carry
-    GK's rank guarantee |rank(answer) − ⌈φn⌉| ≤ εn — the certificate
-    the batch side verifies against exact ranks (q289).
+    log(εn)) longs, never the data. Emission contract (append mode,
+    ``_snapshot_stream``): one post-batch snapshot per key per data
+    batch with the sketch's current p50/p95 answers, monotone in
+    ``n_processed``; consumers keep the highest-``n_processed`` row per
+    key. The answers carry GK's rank guarantee |rank(answer) − ⌈φn⌉| ≤
+    εn — the certificate the batch side verifies against exact ranks
+    (q289).
     """
-    in_schema = events.schema
-    out_schema = StructType(
-        [
-            StructField(f"__k{i}", in_schema[kcol].dataType)
-            for i, kcol in enumerate(keys)
-        ]
-        + [
-            StructField("a50", LongType()),
-            StructField("a95", LongType()),
-            StructField("n", LongType()),
-            StructField("n_tuples", LongType()),
-            StructField("n_processed", LongType()),
-        ]
+    return _snapshot_stream(
+        events,
+        keys,
+        [value_col],
+        GK_OUT_FIELDS,
+        GK_STATE_SCHEMA,
+        _gk_step(value_col, eps),
     )
-    raw = (
-        events.select(*keys, value_col, ts_col)
-        .withWatermark(ts_col, watermark)
-        .groupBy(*keys)
-        .applyInPandasWithState(
-            _gk_stream_fn(value_col, len(keys), eps, idle_state_ttl_ms),
-            out_schema,
-            GK_STATE_SCHEMA,
-            "append",
-            GroupStateTimeout.EventTimeTimeout,
-        )
-    )
-    for i, kcol in enumerate(keys):
-        raw = raw.withColumnRenamed(f"__k{i}", kcol)
-    return raw

@@ -65,7 +65,6 @@ def _run_stream(spark, tmp_path, l_dir, r_dir, tolerance=None, max_files="1000")
         by="user_id",
         value_cols=["ref"],
         tolerance=tolerance,
-        watermark="30 minutes",
     )
     name = f"asof_out_{tmp_path.name}"
     q = (
@@ -221,7 +220,7 @@ def test_asof_stream_typed_value_and_payload_cols(spark, tmp_path):
     ).parquet(r_dir)
     out = asof_enrich_stream(
         l_stream, r_stream, on="ts", by="user_id",
-        value_cols=["depth", "book"], watermark="30 minutes",
+        value_cols=["depth", "book"],
     )
     name = f"asof_typed_{tmp_path.name}"
     q = (
@@ -319,7 +318,7 @@ def test_asof_stream_checkpoint_restart(spark, tmp_path):
         r_stream = spark.readStream.schema(_R_SCHEMA).parquet(r_dir)
         out = asof_enrich_stream(
             l_stream, r_stream, on="ts", by="user_id",
-            value_cols=["ref"], watermark="30 minutes",
+            value_cols=["ref"],
         )
         q = (
             out.writeStream.format("parquet")

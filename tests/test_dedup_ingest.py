@@ -204,3 +204,26 @@ def test_restart_processes_only_new_files(spark, ingest_dirs):
     assert {tuple(r) for r in dupes.collect()} == {
         tuple(r) for r in want.collect()
     }
+
+
+def test_overrunning_ingest_stops_and_raises(spark, ingest_dirs, monkeypatch):
+    """A run that outlives the timeout must not return as if it had
+    drained: the caller would read a partial store and remove the
+    directory of a query still writing it. It stops the query and
+    raises instead."""
+    from binance_data_ingestor_spark.streaming import dedup_ingest
+
+    docs = load(spark, SF, "documents")
+    _write_batch(
+        spark, docs, os.path.join(ingest_dirs["input"], "a.parquet"), 1_700_000_000
+    )
+    monkeypatch.setattr(dedup_ingest, "TIMEOUT_SEC", 0.001)
+    with pytest.raises(RuntimeError, match="timed out"):
+        run_dedup_ingest(
+            spark,
+            ingest_dirs["input"],
+            ingest_dirs["store"],
+            ingest_dirs["dupes"],
+            ingest_dirs["ckpt"],
+        )
+    assert spark.streams.active == []

@@ -49,9 +49,7 @@ def _run_replay(spark, stream, work, name, capacity):
         heavy_hitters_stream,
     )
 
-    out = heavy_hitters_stream(
-        stream, ["grp"], "token", capacity=capacity, watermark="30 minutes"
-    )
+    out = heavy_hitters_stream(stream, ["grp"], "token", capacity=capacity)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -158,9 +156,7 @@ def test_heavy_hitters_stream_multibatch_state_merge(spark):
         .option("maxFilesPerTrigger", "1")
         .parquet(f"{work}/in")
     )
-    out = heavy_hitters_stream(
-        stream, ["grp"], "token", capacity=capacity, watermark="30 minutes"
-    )
+    out = heavy_hitters_stream(stream, ["grp"], "token", capacity=capacity)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:

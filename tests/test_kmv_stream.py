@@ -69,9 +69,7 @@ def _replay(spark, df, name, max_files, k=K):
         .option("maxFilesPerTrigger", str(max_files))
         .parquet(f"{work}/in")
     )
-    out = kmv_stream(
-        stream, ["lab"], "item", hash_col="h", k=k, watermark="30 minutes"
-    )
+    out = kmv_stream(stream, ["lab"], "item", hash_col="h", k=k)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:
@@ -135,42 +133,16 @@ def test_kmv_stream_single_batch_same_answer(spark):
         assert final[lab] == _batch_sketch(df, lab)
 
 
-class _FakeState:
-    """Minimal GroupState double for driving the keyed fold directly —
-    only the surface _kmv_stream_fn touches."""
-
-    def __init__(self):
-        self.exists = False
-        self.hasTimedOut = False
-        self._v = None
-
-    @property
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = v
-        self.exists = True
-
-    def remove(self):
-        self._v, self.exists = None, False
-
-    def getCurrentWatermarkMs(self):
-        return 0
-
-    def setTimeoutTimestamp(self, ms):
-        pass
-
-
 def test_kmv_kernel_fold_equals_batch_kminimum_property():
     """Property (hypothesis): folding ANY (hash, item) multiset through
-    _kmv_stream_fn in ANY batch split yields exactly the batch
-    k-minimum of the distinct pairs, and n_processed counts every
-    delivered row — the invariant the q199 certificate rests on."""
+    the KMV step in ANY batch split yields exactly the batch k-minimum
+    of the distinct pairs, in both the carried state and the emitted
+    snapshot, and n_processed counts every delivered row — the
+    invariant the q199 certificate rests on."""
     import pandas as pd
     from hypothesis import given, settings, strategies as st
 
-    from binance_data_ingestor_spark.streaming.stateful import _kmv_stream_fn
+    from binance_data_ingestor_spark.streaming.stateful import _kmv_step
 
     pair = st.tuples(
         st.integers(min_value=0, max_value=50),
@@ -184,30 +156,21 @@ def test_kmv_kernel_fold_equals_batch_kminimum_property():
     )
     @settings(max_examples=200, deadline=None)
     def prop(pairs, k, data):
-        fn = _kmv_stream_fn("h", "item", k, n_keys=1, idle_state_ttl_ms=1)
+        step = _kmv_step("h", "item", k)
         n_batches = data.draw(st.integers(min_value=1, max_value=5))
         batches = [pairs[i::n_batches] for i in range(n_batches)]
-        state = _FakeState()
-        last = None
+        state = snap = None
         for b in batches:
-            pdfs = [
-                pd.DataFrame(
-                    {"h": [p[0] for p in b], "item": [p[1] for p in b]}
-                )
-            ]
-            for out in fn(("u",), iter(pdfs), state):
-                last = out
+            pdf = pd.DataFrame({"h": [p[0] for p in b], "item": [p[1] for p in b]})
+            snap, state = step(state, iter([pdf]))
         want = sorted(set(pairs))[:k]
-        hs, its, n = state.get
+        hs, its, n = state
         assert list(zip(hs, its)) == want
         assert n == len(pairs)
-        # the last emitted snapshot matches the final state (empty
-        # batches emit nothing, but every batch here is non-empty
-        # except possibly interleave tails — guard on that)
-        if last is not None and len(last) == len(want):
-            got = sorted(zip(last["h"], last["item"]))
-            if n == last["n_processed"].iloc[0]:
-                assert got == want
+        # the snapshot emitted with the last batch is the final sketch
+        # (the carried pairs keep it non-empty)
+        assert list(zip(snap["h"], snap["item"])) == want
+        assert snap["n_processed"] == [len(pairs)] * len(want)
 
     prop()
 

@@ -3751,24 +3751,23 @@ def test_dp_counts_salt_changes_noise_not_truth(spark):
 def test_stream_wilson_teeth_broken_fold_diverges(spark):
     """q279's certificate must have teeth: a counter fold that RESTARTS
     per micro-batch (drops carried state) under-counts every segment on
-    the same 3-batch replay, so the multiset gate would refuse it."""
+    the same 3-batch replay, so the multiset gate would refuse it. The
+    broken fold runs through the real keyed-snapshot driver; only the
+    carried state is ignored."""
     import os
     import shutil
     import tempfile
-
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
 
     from binance_data_ingestor_spark.queries.util import (
         load,
         replay_input,
         stagger_replay_mtimes,
+    )
+    from binance_data_ingestor_spark.streaming.stateful import (
+        FLAG_COUNTER_OUT_FIELDS,
+        FLAG_COUNTER_STATE_SCHEMA,
+        _flag_counter_step,
+        _snapshot_stream,
     )
 
     sf = SF_SMOKE
@@ -3800,34 +3799,6 @@ def test_stream_wilson_teeth_broken_fold_diverges(spark):
 
     data = replay_input(spark, sf, "q279", _write)  # same artifact as q279
 
-    def broken_fn(key, pdfs, state):
-        if state.hasTimedOut:
-            state.remove()
-            return
-        # THE BREAK: carried state ignored — each micro-batch restarts
-        n, k = 0, 0
-        for pdf in pdfs:
-            if pdf.empty:
-                continue
-            n += len(pdf)
-            k += int(pdf["y"].sum())
-        yield pd.DataFrame(
-            {"seg": [key[0]], "n": [n], "k": [k], "n_processed": [n]}
-        )
-        state.update((n, k))
-        state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + 86_400_000)
-
-    out_schema = StructType(
-        [
-            StructField("seg", StringType()),
-            StructField("n", LongType()),
-            StructField("k", LongType()),
-            StructField("n_processed", LongType()),
-        ]
-    )
-    st_schema = StructType(
-        [StructField("n", LongType()), StructField("k", LongType())]
-    )
     work = tempfile.mkdtemp(prefix="q279teeth_")
     name = f"teeth_{os.path.basename(work)}"
     stream = (
@@ -3836,17 +3807,17 @@ def test_stream_wilson_teeth_broken_fold_diverges(spark):
         .parquet(f"{data}/in")
     )
     try:
+        # THE BREAK: carried state ignored — each micro-batch restarts
+        broken = _snapshot_stream(
+            stream,
+            ["seg"],
+            ["y"],
+            FLAG_COUNTER_OUT_FIELDS,
+            FLAG_COUNTER_STATE_SCHEMA,
+            lambda prev, pdfs: _flag_counter_step("y")(None, pdfs),
+        )
         q = (
-            stream.withWatermark("ts", "30 minutes")
-            .groupBy("seg")
-            .applyInPandasWithState(
-                broken_fn,
-                out_schema,
-                st_schema,
-                "append",
-                GroupStateTimeout.EventTimeTimeout,
-            )
-            .writeStream.format("memory")
+            broken.writeStream.format("memory")
             .queryName(name)
             .outputMode("append")
             .option("checkpointLocation", f"{work}/ckpt")

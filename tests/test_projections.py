@@ -15,7 +15,6 @@ from binance_data_ingestor_spark.operators.projections import (
     normalize_ticker,
     normalize_trades,
     parse_raw,
-    with_envelope,
     with_envelope_json,
 )
 from binance_data_ingestor_spark.sources.fixtures import gen_raw_messages
@@ -101,13 +100,3 @@ def test_envelope_and_multiplex_roundtrip(spark):
     }
     payload = json.loads(wire.filter(F.col("stream") == "ticker").first().data_json)
     assert "last_price" in payload
-
-
-def test_typed_envelope_struct(spark):
-    t = normalize_trades(
-        parse_raw(_df(spark, gen_raw_messages("trades", 3)), "trades")
-    ).withColumn("symbol", F.lit("solusdt"))
-    env = with_envelope(t, "trades")
-    row = env.first()
-    assert row.stream == "trades" and row.symbol == "SOLUSDT"
-    assert row.data.price is not None

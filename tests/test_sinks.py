@@ -171,33 +171,3 @@ def test_csv_header_written(spark, tmp_path):
     files = glob.glob(f"{out}/csv/stream=*/symbol=*/part-*")
     first_lines = [open(f).readline().strip() for f in files]
     assert any(line == "px" for line in first_lines)
-
-
-def test_write_token_balanced_shards(spark, tmp_path):
-    from pyspark.sql import functions as F
-
-    from binance_data_ingestor_spark.sinks.files import write_token_balanced_shards
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    out = str(tmp_path / "shards")
-    write_token_balanced_shards(docs, out, 4)
-
-    back = spark.read.parquet(out)
-    assert back.count() == docs.count()
-    per_shard = {
-        r.shard: r.toks
-        for r in back.groupBy("shard")
-        .agg(F.sum(F.size(F.split("text", " "))).alias("toks"))
-        .collect()
-    }
-    assert set(per_shard) == {0, 1, 2, 3}
-    max_doc = docs.select(
-        F.max(F.size(F.split("text", " "))).alias("m")
-    ).collect()[0].m
-    assert max(per_shard.values()) - min(per_shard.values()) <= max_doc
-    # each shard directory holds its own files (hive layout)
-    import os
-
-    assert sorted(
-        d for d in os.listdir(out) if d.startswith("shard=")
-    ) == ["shard=0", "shard=1", "shard=2", "shard=3"]

@@ -67,7 +67,7 @@ def test_sessionize_stream_matches_batch(spark, replay_dir, tmp_path):
         spark.readStream.schema("user_id long, ts timestamp, value double")
         .parquet(replay_dir)
     )
-    out = sessionize_stream(stream, watermark="30 minutes")
+    out = sessionize_stream(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("sessions_out")
@@ -163,7 +163,7 @@ def test_transition_stream_matches_batch_lag(spark, replay_dir_full, tmp_path):
     stream = spark.readStream.schema(
         "user_id long, ts timestamp, event_id long, event_type string"
     ).parquet(replay_dir_full)
-    out = transition_counts_stream(stream, watermark="30 minutes")
+    out = transition_counts_stream(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("transitions_out")
@@ -230,9 +230,7 @@ def test_rolling_window_stream_matches_batch_multibatch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(path)
     )
-    out = rolling_window_stream(
-        stream, key_col="event_type", window_sec=86_400, watermark="30 minutes"
-    )
+    out = rolling_window_stream(stream)
     q = (
         out.writeStream.format("memory")
         .queryName("rolling_out")
@@ -361,3 +359,51 @@ def test_replay_stream_restores_conf_and_scratch_when_build_raises(
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
+
+
+def test_snapshot_driver_drops_timed_out_key_without_emitting(spark, tmp_path):
+    """Key ``a`` goes idle past the TTL once ``b``'s file pushes the
+    watermark a year ahead: ``_snapshot_stream`` must free its state
+    and emit nothing, so ``a``'s next data starts a fresh count (2, not
+    3 + 2), and neither expiry (``a`` in batch 2, ``b`` in batch 3)
+    adds a snapshot row."""
+    import datetime as dt
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from binance_data_ingestor_spark.queries.util import (
+        replay_stream,
+        stagger_replay_mtimes,
+    )
+    from binance_data_ingestor_spark.streaming.stateful import flag_counter_stream
+
+    def _write(work: str) -> None:
+        os.makedirs(f"{work}/in")
+        batches = [("a", 3, 2030), ("b", 1, 2031), ("a", 2, 2031)]
+        for i, (seg, n, year) in enumerate(batches):
+            ts = dt.datetime(year, 1, 1, tzinfo=dt.timezone.utc)
+            pq.write_table(
+                pa.table(
+                    {
+                        "seg": [seg] * n,
+                        "y": [1] * n,
+                        "ts": pa.array([ts] * n, pa.timestamp("us", tz="UTC")),
+                    }
+                ),
+                f"{work}/in/part-{i:05d}.parquet",
+            )
+        stagger_replay_mtimes(f"{work}/in")
+
+    out = replay_stream(
+        spark,
+        str(tmp_path),
+        "snapshot_ttl",
+        _write,
+        {"in": "seg string, y long, ts timestamp"},
+        lambda stream: flag_counter_stream(stream, ["seg"], flag_col="y"),
+        files_per_trigger=1,
+    )
+    got = sorted((r.seg, r.n, r.n_processed) for r in out.collect())
+    assert got == [("a", 2, 2), ("a", 3, 3), ("b", 1, 1)]

@@ -1,6 +1,5 @@
 """End-to-end ingestion: WS source (replay) → normalize → multiplex →
-sinks, incl. --samples bounded-run semantics and the native kline
-streaming job."""
+sinks, incl. --samples bounded-run semantics."""
 
 from __future__ import annotations
 
@@ -20,7 +19,6 @@ from binance_data_ingestor_spark.sources.fixtures import write_fixture_dir
 from binance_data_ingestor_spark.streaming.jobs import (
     normalize_multiplexed,
     run_ingest,
-    run_kline_stream,
 )
 
 
@@ -113,28 +111,3 @@ def test_normalize_multiplexed_branch_filters(spark, tmp_path):
         wire.filter(F.col("stream") == "order-book").first().data_json
     )
     assert "lastUpdateId" in ob and isinstance(ob.get("bids", []), list)
-
-
-def test_kline_stream_from_raw_trades(spark, tmp_path):
-    root = str(tmp_path / "fx")
-    write_fixture_dir(root, "trades", 30, files=3)
-    raw = (
-        spark.readStream.format("text")
-        .option("maxFilesPerTrigger", 1)
-        .load(f"{root}/trades")
-        .withColumnRenamed("value", "value")
-    )
-    q = run_kline_stream(
-        spark, raw, interval="1m", watermark="0 seconds",
-        checkpoint_dir=str(tmp_path / "ckpt"), query_name="kl_e2e",
-        output_mode="update",
-    )
-    try:
-        q.processAllAvailable()
-        got = spark.sql("SELECT * FROM kl_e2e")
-        assert got.count() > 0
-        cols = set(got.columns)
-        assert {"symbol", "kline_start_time", "open_price", "close_price",
-                "number_of_trades"} <= cols
-    finally:
-        q.stop()

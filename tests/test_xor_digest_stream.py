@@ -46,9 +46,7 @@ def _replay(spark, df, name, max_files):
         .option("maxFilesPerTrigger", str(max_files))
         .parquet(f"{work}/in")
     )
-    out = xor_digest_stream(
-        stream, ["source"], hash_col="h", watermark="30 minutes"
-    )
+    out = xor_digest_stream(stream, ["source"], hash_col="h")
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "4")
     try:
