@@ -32,7 +32,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-_ORD = "__merge_ord"
 _PAY = "__merge_payload"
 
 

@@ -1,9 +1,16 @@
-"""Dump the physical plan of every registry query to PLANS.md.
+"""Capture AQE-final physical plans (``explain("formatted")``).
 
-The scale review artifact: for each query, the AQE-final formatted plan
-at sf0.001 — broadcast vs shuffle decisions, pushed filters, read
-schemas, and codegen spans are all visible. Regenerate after plan-
-affecting changes: `python scripts/dump_plans.py`.
+    python scripts/dump_plans.py
+        Every registry query at sf0.001 into PLANS.md, the scale review
+        artifact: broadcast vs shuffle decisions, pushed filters, read
+        schemas and codegen spans are all visible. Regenerate after
+        plan-affecting changes. Exits 1 on a BNLJ/Cartesian node outside
+        ``plans_census.BNLJ_ALLOWLIST``.
+
+    python scripts/dump_plans.py before|after NAME ...
+        Each named query at $SPARK_GRAFT_SF_DIR (default sf0.1, the bench
+        scale) into plans/<NAME>_<tag>.txt: the before/after artifact of a
+        plan-changing optimization.
 
 Iterative queries (q54/q55) show the plan of the FINAL DataFrame; their
 loop rounds are checkpoint-bounded and don't appear in one plan.
@@ -14,19 +21,51 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 SF_DIR = "/root/testdata/sf0.001"
 
 # Adjudicated allowlist lives in the package (single source of truth
 # for this script AND tests/test_plan_quality.py).
 from binance_data_ingestor_spark.plans_census import BNLJ_ALLOWLIST
+from binance_data_ingestor_spark.queries import registry
+from binance_data_ingestor_spark.session import get_spark
 
 
-def main() -> None:
-    from binance_data_ingestor_spark.queries import registry
-    from binance_data_ingestor_spark.session import get_spark
+def final_plan(spark, df) -> str:
+    """The formatted plan of ``df``'s own QueryExecution, AQE-final.
 
+    Executing THIS QueryExecution (not a separate action's) finalizes its
+    AdaptiveSparkPlan, so runtime SMJ->SHJ conversions, AQEShuffleRead
+    coalescing and skew splits appear (``isFinalPlan=true``); count() on
+    the InternalRow RDD collects no rows.
+    """
+    qe = df._jdf.queryExecution()
+    qe.executedPlan().execute().count()
+    return qe.explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    ).strip()
+
+
+def dump_named(tag: str, names: list[str]) -> None:
+    if tag not in ("before", "after") or not names:
+        sys.exit("usage: dump_plans.py [before|after NAME ...]")
+    sf_dir = os.environ.get(
+        "SPARK_GRAFT_SF_DIR", os.path.join(os.path.dirname(SF_DIR), "sf0.1")
+    )
+    spark = get_spark(
+        "dump-plans", extra_conf={"spark.ui.showConsoleProgress": "false"}
+    )
+    qs, _ = registry()
+    for name in names:
+        path = os.path.join(ROOT, "plans", f"{name}_{tag}.txt")
+        with open(path, "w") as f:
+            f.write(final_plan(spark, qs[name](spark, sf_dir)) + "\n")
+        print(f"wrote {path}", file=sys.stderr)
+
+
+def dump_registry() -> None:
     # Round-11: build the session through the engine factory so the
     # dumped plans carry the engine's real defaults (join-strategy
     # preferences, AQE knobs) instead of a vanilla session's — the
@@ -39,16 +78,12 @@ def main() -> None:
     rogue = []
     bnlj_found = []
     for name, fn in sorted(qs.items()):
-        df = fn(spark, SF_DIR)
-        df.collect()  # let AQE finalize
-        plan = df._jdf.queryExecution().explainString(
-            spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
-        )
+        plan = final_plan(spark, fn(spark, SF_DIR))
         if "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan:
             bnlj_found.append(name)
             if name.split("_")[0] not in BNLJ_ALLOWLIST:
                 rogue.append(name)
-        sections.append(f"## {name}\n\n```\n{plan.strip()}\n```\n")
+        sections.append(f"## {name}\n\n```\n{plan}\n```\n")
         print(f"done {name}", file=sys.stderr)
 
     # The census paragraph is GENERATED from the plans just dumped —
@@ -75,7 +110,7 @@ def main() -> None:
         "`tests/test_plan_quality.py::test_bnlj_census_matches_allowlist`\n"
         "re-checks the committed file on every pytest run.\n\n"
     )
-    with open(os.path.join(os.path.dirname(__file__), "..", "PLANS.md"), "w") as f:
+    with open(os.path.join(ROOT, "PLANS.md"), "w") as f:
         f.write(header + "\n".join(sections))
     print(f"wrote PLANS.md with {len(sections)} plans", file=sys.stderr)
     if rogue:
@@ -84,4 +119,7 @@ def main() -> None:
 
 
 if __name__ == "__main__":
-    main()
+    if len(sys.argv) > 1:
+        dump_named(sys.argv[1], sys.argv[2:])
+    else:
+        dump_registry()

@@ -2,7 +2,7 @@
 ``fetchdf()`` at FULL float precision.
 
 The driver's correctness gate hashes pandas-level values, which is stricter
-than ``verify_local.py`` in two ways this script reproduces:
+than a rounded, dtype-blind compare in two ways this script reproduces:
 
 1. **Dtype family leaks into the value.** DuckDB ``sum(BIGINT)`` returns
    HUGEINT, which pandas materializes as float64 — so an exact integer
@@ -16,6 +16,7 @@ than ``verify_local.py`` in two ways this script reproduces:
    the driver.
 
 A query passing this sweep should be hash-green on the driver.
+It is the repo's only correctness gate.
 
 Usage: python scripts/verify_strict.py [--stability] [name_filter ...]
        SPARK_GRAFT_SF_DIR=/root/testdata/sf0.01 (default)

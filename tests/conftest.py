@@ -18,6 +18,19 @@ os.environ["PYTHONPATH"] = os.pathsep.join(
 SF_SMOKE = "/root/testdata/sf0.001"
 
 
+def drain(q, timeout: float) -> None:
+    """Wait for streaming query ``q`` to terminate, or stop it and fail.
+
+    A query that has not terminated has not produced its result, so no
+    test may read its sink before this returns.
+    """
+    if not q.awaitTermination(timeout):
+        q.stop()
+        pytest.fail(
+            f"streaming query {q.name or q.id} still running after {timeout} s"
+        )
+
+
 @pytest.fixture(scope="session")
 def spark():
     from binance_data_ingestor_spark.session import get_spark

@@ -18,6 +18,8 @@ from binance_data_ingestor_spark.operators.asof import asof_join
 from binance_data_ingestor_spark.queries.util import load
 from binance_data_ingestor_spark.streaming.asof_enrich import asof_enrich_stream
 
+from conftest import drain
+
 SF_DIR = "/root/testdata/sf0.001"
 
 _L_SCHEMA = "user_id long, ts timestamp, value double"
@@ -75,7 +77,7 @@ def _run_stream(spark, tmp_path, l_dir, r_dir, tolerance=None, max_files="1000")
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(300)
+    drain(q, 300)
     return spark.table(name).filter(F.col("user_id") >= 0)
 
 
@@ -229,7 +231,7 @@ def test_asof_stream_typed_value_and_payload_cols(spark, tmp_path):
         .option("checkpointLocation", str(tmp_path / "ckpt"))
         .trigger(availableNow=True).start()
     )
-    assert q.awaitTermination(300)
+    drain(q, 300)
     rows = {
         (r["user_id"], r["qty"]): (r["tag"], r["asof_depth"], r["asof_book"])
         for r in spark.table(name).filter(F.col("user_id") >= 0).collect()
@@ -327,7 +329,7 @@ def test_asof_stream_checkpoint_restart(spark, tmp_path):
             .option("checkpointLocation", ckpt)
             .trigger(availableNow=True).start()
         )
-        assert q.awaitTermination(300)
+        drain(q, 300)
         return [
             (r["user_id"], r["ts"], r["value"], r["asof_ref"])
             for r in spark.read.parquet(out_dir)

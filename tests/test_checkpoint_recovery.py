@@ -3,7 +3,10 @@ from its checkpoint neither reprocesses committed input nor duplicates
 sink output — the upgrade over the reference's at-most-once in-memory
 queue (binance-di.py:266, data lost on crash)."""
 
+import pytest
 from pyspark.sql import functions as F
+
+from conftest import drain
 
 
 def _run_until_done(stream_df, out_dir, ckpt):
@@ -15,7 +18,7 @@ def _run_until_done(stream_df, out_dir, ckpt):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
 
 
 def test_file_sink_exactly_once_across_restart(spark, tmp_path):
@@ -80,7 +83,7 @@ def test_stateful_checkpoint_resumes_watermark(spark, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(120)
+        drain(q, 120)
         df = spark.read.schema(
             "user_id long, n_events long, sess_value double,"
             " sess_start long, sess_end long"
@@ -97,3 +100,17 @@ def test_stateful_checkpoint_resumes_watermark(spark, tmp_path):
     closed = [r for r in second if r["user_id"] == 1]
     assert len(closed) == 1
     assert closed[0]["n_events"] == 2 and abs(closed[0]["sess_value"] - 3.0) < 1e-9
+
+
+def test_drain_stops_an_overrunning_query(spark, tmp_path):
+    # an unbounded rate stream never terminates: drain must stop it (so a
+    # restart cannot collide with a live writer) and fail the test
+    q = (
+        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
+        .writeStream.format("noop")
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .start()
+    )
+    with pytest.raises(pytest.fail.Exception, match="still running"):
+        drain(q, 0.5)
+    assert not q.isActive

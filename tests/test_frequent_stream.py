@@ -13,7 +13,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, drain
 
 MIN_SHARE = 0.01
 
@@ -61,7 +61,7 @@ def _run_replay(spark, stream, work, name, capacity):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        drain(q, 600)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     return spark.table(name).filter(F.col("grp") != "__wm__").collect()
@@ -168,7 +168,7 @@ def test_heavy_hitters_stream_multibatch_state_merge(spark):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination(600)
+        drain(q, 600)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     rows = (

@@ -14,7 +14,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, drain
 
 K = 64
 
@@ -81,7 +81,7 @@ def _replay(spark, df, name, max_files, k=K):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(600), "replay timed out"
+        drain(q, 600)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
     rows = spark.table(name).filter(F.col("lab") != "__wm__").collect()

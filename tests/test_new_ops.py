@@ -16,7 +16,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, drain
 
 
 def _random_edges(rng: random.Random, n_nodes: int, n_edges: int):
@@ -3824,7 +3824,7 @@ def test_stream_wilson_teeth_broken_fold_diverges(spark):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(300)
+        drain(q, 300)
         snap = spark.table(name).collect()
     finally:
         try:

@@ -62,9 +62,13 @@ def test_console_machine_mode_envelope(wire_df):
 
 def test_console_human_mode_banner(wire_df):
     buf = io.StringIO()
-    console.print_human(wire_df.limit(1), out=buf)
+    console.print_human(wire_df.orderBy("stream", "symbol").limit(1), out=buf)
     text = buf.getvalue()
     assert "=" * 60 in text and "Stream: " in text and "Symbol: " in text
+    # the payload itself, pretty-printed under the banner (reference
+    # prints json.dumps(payload, indent=2)), not the escaped wire row
+    assert '"last_price": "1.0"' in text
+    assert "data_json" not in text
 
 
 class FakePipe:

@@ -17,6 +17,8 @@ from binance_data_ingestor_spark.streaming.stateful import (
     sessionize_stream,
 )
 
+from conftest import drain
+
 SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -76,7 +78,7 @@ def test_sessionize_stream_matches_batch(spark, replay_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    drain(q, 300)
 
     got = (
         spark.table("sessions_out")
@@ -131,7 +133,7 @@ def test_dedup_stream(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     res = spark.table("dedup_out").collect()
     assert sorted(r["k"] for r in res) == ["a", "b"]
 
@@ -172,7 +174,7 @@ def test_transition_stream_matches_batch_lag(spark, replay_dir_full, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
+    drain(q, 300)
 
     streamed = {
         ((r.user_id, r.prev_type, r.event_type)): r.n
@@ -239,7 +241,7 @@ def test_rolling_window_stream_matches_batch_multibatch(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    assert q.awaitTermination(300)
+    drain(q, 300)
     got = {
         r["event_id"]: (
             round(r["rolling_sum"], 2),

@@ -7,6 +7,8 @@ trigger, never buffered."""
 
 from pyspark.sql import functions as F
 
+from conftest import drain
+
 
 def test_stream_enriched_by_static_dim(spark, tmp_path):
     stream_src = str(tmp_path / "events")
@@ -41,7 +43,7 @@ def test_stream_enriched_by_static_dim(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     rows = {
         (r["event_id"], r["tier"], r["value"])
         for r in spark.table("ssj_static_out").collect()
@@ -70,7 +72,7 @@ def test_stream_static_left_keeps_unmatched(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     rows = {(r["event_id"], r["tier"]) for r in spark.table("ssj_static_left").collect()}
     assert rows == {(1, "gold"), (2, None)}
 
@@ -128,6 +130,6 @@ def test_streaming_point_in_interval_join(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     rows = {(r.pid, r.iid) for r in spark.table("stream_pii_out").collect()}
     assert rows == {(1, 10), (2, 11)}

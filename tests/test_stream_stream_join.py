@@ -5,6 +5,8 @@ would grow forever, which is the thing that matters at 100 TB."""
 
 from pyspark.sql import functions as F
 
+from conftest import drain
+
 
 def test_stream_stream_range_join(spark, tmp_path):
     clicks_src = str(tmp_path / "clicks")
@@ -56,6 +58,6 @@ def test_stream_stream_range_join(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(120)
+    drain(q, 120)
     rows = {(r["click_id"], r["value"]) for r in spark.table("ssj_out").collect()}
     assert rows == {(1, 5.0), (2, 7.0)}

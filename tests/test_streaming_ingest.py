@@ -21,6 +21,8 @@ from binance_data_ingestor_spark.streaming.jobs import (
     run_ingest,
 )
 
+from conftest import drain
+
 
 def test_stream_url_parity():
     # reference: f"{base_url}/{symbol.lower()}{stream_type}" (binance-di.py:97)
@@ -78,7 +80,7 @@ def test_ingest_end_to_end_with_samples(spark, tmp_path):
         spark, cfg, checkpoint_dir=str(tmp_path / "ckpt"),
         available_now=True, console_out=buf,
     )
-    query.awaitTermination(120)
+    drain(query, 120)
     # --samples 2 → exactly 2 per (stream, symbol): 2 streams × 3 symbols × 2
     assert all(v == 2 for v in limiter.counts.values())
     assert len(limiter.counts) == 6

@@ -19,6 +19,8 @@ import tempfile
 
 from pyspark.sql import functions as F
 
+from conftest import drain
+
 
 def _python_fold(rows, v):
     """rows = (symbol, ts_ms, event_id, qc, bq), real trades only."""
@@ -102,7 +104,7 @@ def _replay(spark, rows, v, max_files, n_files=3):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(300)
+        drain(q, 300)
         got = {
             (r.symbol, r.bucket): (r.n_trades, r.buy_vol, r.sell_vol)
             for r in spark.table("vpin_t").collect()

@@ -17,7 +17,7 @@ import tempfile
 
 from pyspark.sql import functions as F
 
-from conftest import SF_SMOKE
+from conftest import SF_SMOKE, drain
 
 
 def _rows(spark):
@@ -58,7 +58,7 @@ def _replay(spark, df, name, max_files):
             .trigger(availableNow=True)
             .start()
         )
-        assert q.awaitTermination(300), "replay timed out"
+        drain(q, 300)
         snap = spark.table(name).filter(F.col("source") != "__wm__").collect()
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
