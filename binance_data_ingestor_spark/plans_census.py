@@ -9,15 +9,13 @@ scan — i.e. the broadcast side is O(1) at ANY scale factor, so the
 express as an equi-join.
 
 A BNLJ in any query NOT listed here is a data-sized nested loop — a
-100 TB regression someone must rewrite as an equi-join. Two automated
-guards enforce that:
+100 TB regression someone must rewrite as an equi-join. One automated
+guard enforces that:
 
-- ``scripts/dump_plans.py`` fails if a regenerated plan outside this
-  list contains a BNLJ/Cartesian node, and writes the census paragraph
-  in PLANS.md **from the plans themselves** (never by hand);
-- ``tests/test_plan_quality.py::test_bnlj_census_matches_allowlist``
-  parses the committed PLANS.md and asserts actual-BNLJ-set ⊆ this
-  allowlist on every pytest run.
+- equality, enforced on the live AQE-final plan in
+  ``tests/test_queries_oracle.py::test_query_matches_oracle``: a query
+  has a BNLJ/Cartesian node exactly when it is listed here, so a query
+  whose nested loop is gone must leave the list too.
 
 Adjudication notes (what each query's 1-row/marginal crossing is):
 q51/q70/q79/q82/q85/q88/q93/q94/q96-q98/q100/q105/q106/q114/q117/q129/

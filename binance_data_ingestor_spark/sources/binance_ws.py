@@ -27,6 +27,7 @@ import json
 import os
 import threading
 from collections import deque
+from itertools import islice
 
 from pyspark.sql.datasource import DataSource, SimpleDataSourceStreamReader
 
@@ -72,8 +73,14 @@ class _FrameBuffer:
             self._next_seq += 1
 
     def range(self, start: int, end: int | None = None):
+        # sequence numbers are contiguous from the first kept frame, so
+        # a frame's position in the deque is its seq minus the first seq
         with self._lock:
-            return [f for f in self._frames if f[0] >= start and (end is None or f[0] < end)]
+            if not self._frames:
+                return []
+            first = self._frames[0][0]
+            stop = None if end is None else max(end - first, 0)
+            return list(islice(self._frames, max(start - first, 0), stop))
 
     def drop_before(self, seq: int) -> None:
         with self._lock:

@@ -1,7 +1,9 @@
 """Every registered query hash-matches its DuckDB oracle at sf0.001.
 
 This is the same comparison the driver runs at sf0.01 (t2 gate), kept
-at the smoke scale factor so the suite stays fast.
+at the smoke scale factor so the suite stays fast. The same test reads
+the AQE-final plan it just executed for the BNLJ/Cartesian census
+(``plans_census.BNLJ_ALLOWLIST``).
 """
 
 from __future__ import annotations
@@ -10,6 +12,7 @@ import math
 
 import pytest
 
+from binance_data_ingestor_spark.plans_census import BNLJ_ALLOWLIST
 from binance_data_ingestor_spark.queries import registry
 
 from conftest import SF_SMOKE
@@ -37,6 +40,17 @@ def _norm(cols, rows):
 def test_query_matches_oracle(name, spark, duck):
     sdf = QUERIES[name](spark, SF_SMOKE)
     s_cols, s_rows = _norm(sdf.columns, [tuple(r) for r in sdf.collect()])
+    # collect() finalized the AdaptiveSparkPlan; its toString embeds the
+    # pre-AQE "Initial Plan" section, so keep only the final one
+    plan = sdf._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]
+    nested = "BroadcastNestedLoopJoin" in plan or "CartesianProduct" in plan
+    assert nested == (name.split("_")[0] in BNLJ_ALLOWLIST), (
+        f"{name}: BNLJ/Cartesian in plan={nested}, in BNLJ_ALLOWLIST="
+        f"{not nested} — a data-sized nested loop must become an "
+        "equi-join; a new 1-row crossing is adjudicated in plans_census.py, "
+        "and a query whose nested loop is gone leaves the allowlist"
+    )
     if name not in ORACLES:
         assert len(s_rows) >= 0  # rows-only check (driver parity)
         return

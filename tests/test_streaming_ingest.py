@@ -6,6 +6,7 @@ from __future__ import annotations
 import glob
 import io
 import json
+import pickle
 
 import pytest
 from pyspark.sql import functions as F
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 from binance_data_ingestor_spark.config import Config
 from binance_data_ingestor_spark.sources.binance_ws import (
     BinanceWSStreamReader,
+    _FrameBuffer,
     stream_url,
 )
 from binance_data_ingestor_spark.sources.fixtures import write_fixture_dir
@@ -51,6 +53,63 @@ def test_ws_reader_replay_offsets(tmp_path):
     assert len(list(it2)) == 4 and off2 == {"seq": 8}
     r.commit(off2)
     assert len(r.buffer.range(0)) == 2  # committed prefix dropped
+
+
+def _buffer(n: int) -> _FrameBuffer:
+    buf = _FrameBuffer()
+    for i in range(n):
+        buf.put(f"v{i}", "trades", "BTCUSDT")
+    return buf
+
+
+def _seqs(frames) -> list[int]:
+    return [f[0] for f in frames]
+
+
+def test_frame_buffer_range_open_end():
+    buf = _buffer(5)
+    assert _seqs(buf.range(2)) == [2, 3, 4]
+    assert _seqs(buf.range(0, None)) == [0, 1, 2, 3, 4]
+    assert buf.range(5) == [] and buf.range(9) == []
+    assert _buffer(0).range(0) == []
+
+
+def test_frame_buffer_range_across_drop_before():
+    buf = _buffer(10)
+    buf.drop_before(4)
+    assert _seqs(buf.range(4, 7)) == [4, 5, 6]
+    assert _seqs(buf.range(6, 20)) == [6, 7, 8, 9]
+    assert buf.range(7, 7) == [] and buf.range(8, 6) == []
+    buf.put("v10", "ticker", "ETHUSDT")
+    assert buf.range(10) == [(10, "v10", "ticker", "ETHUSDT")]
+    buf.drop_before(11)
+    assert buf.range(0) == [] and buf.next_seq == 11
+
+
+def test_frame_buffer_range_start_below_first_kept():
+    buf = _buffer(8)
+    buf.drop_before(5)
+    assert _seqs(buf.range(0)) == [5, 6, 7]
+    assert _seqs(buf.range(2, 7)) == [5, 6]
+    assert buf.range(0, 3) == [] and buf.range(0, 5) == []
+    # reference: the filter over every buffered frame that range replaces
+    kept = list(buf._frames)
+    for start in range(11):
+        for end in [None, *range(11)]:
+            assert buf.range(start, end) == [
+                f for f in kept if f[0] >= start and (end is None or f[0] < end)
+            ], (start, end)
+
+
+def test_frame_buffer_pickle_round_trip():
+    buf = _buffer(6)
+    buf.drop_before(2)
+    copy = pickle.loads(pickle.dumps(buf))
+    assert copy.range(0) == buf.range(0)
+    assert _seqs(copy.range(3, 5)) == [3, 4]
+    assert copy.next_seq == 6
+    copy.put("v6", "trades", "BTCUSDT")  # the rebuilt lock works
+    assert _seqs(copy.range(5)) == [5, 6] and buf.next_seq == 6
 
 
 def test_live_mode_requires_websockets(tmp_path):
