@@ -21,17 +21,12 @@ TABLES = (
 ).split()
 
 
-def register_tables(
-    spark: SparkSession, sf_dir: str, *, suffix: str = ""
-) -> list[str]:
-    """Register every lake table as a temp view ``<name><suffix>``;
+def register_tables(spark: SparkSession, sf_dir: str) -> list[str]:
+    """Register every lake table as a temp view under its own name;
     returns the registered names."""
-    names = []
     for t in TABLES:
-        name = f"{t}{suffix}"
-        load(spark, sf_dir, t).createOrReplaceTempView(name)
-        names.append(name)
-    return names
+        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    return list(TABLES)
 
 
 def sql(spark: SparkSession, sf_dir: str, query: str) -> DataFrame:

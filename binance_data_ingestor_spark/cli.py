@@ -5,7 +5,10 @@
 
 Engine extension: ``--replay-dir`` replays captured fixture frames
 through the same pipeline instead of the live WebSocket (the live path
-needs the `websockets` package and network access).
+needs the `websockets` package and network access). A replay exits
+once every frame in the directory is committed to every sink, or
+sooner with ``--samples`` once every (stream, symbol) pair has its cap;
+a live run stops on Ctrl-C.
 """
 
 from __future__ import annotations
@@ -72,14 +75,15 @@ def main(argv: list[str] | None = None) -> int:
 
     spark = get_spark("binance-ingest-cli")
     checkpoint = tempfile.mkdtemp(prefix="binance-ckpt-")
-    query, _ = run_ingest(
-        spark,
-        cfg,
-        checkpoint_dir=checkpoint,
-        available_now=cfg.replay_dir is not None and cfg.samples is None,
-    )
+    query, _ = run_ingest(spark, cfg, checkpoint_dir=checkpoint)
     try:
-        query.awaitTermination()
+        if cfg.replay_dir is not None:
+            # returns once every replayed frame is committed, or once
+            # the --samples limiter has stopped the query
+            query.processAllAvailable()
+            query.stop()
+        else:
+            query.awaitTermination()
     except KeyboardInterrupt:
         # reference shutdown contract (T6): stop → last micro-batch commits
         query.stop()

@@ -105,17 +105,13 @@ def might_contain(bloom: bytes, col: Column, k: int) -> Column:
 
 
 def bloom_prefilter_semi_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: str,
-    fpp: float = 0.01,
-    n_keys: int | None = None,
+    big: DataFrame, small: DataFrame, on: str, fpp: float = 0.01
 ) -> DataFrame:
     """EXACT semi-join of ``big`` against ``small[on]``, bloom-accelerated.
 
-    ``n_keys`` sizes the filter; when omitted it is counted with one
-    tiny aggregate job (exact count — at real scale pass an estimate or
-    use approx_count_distinct upstream to avoid the extra pass).
+    The filter is sized by the distinct key count, taken with one tiny
+    aggregate job (exact count — at real scale an estimate from
+    approx_count_distinct upstream would avoid the extra pass).
 
     The distinct key set feeds THREE actions (count, bloom build, the
     refine join), so it is localCheckpoint'ed once — without the
@@ -123,9 +119,7 @@ def bloom_prefilter_semi_join(
     (STATUS lesson 8).
     """
     keys = small.select(on).distinct().localCheckpoint(eager=True)
-    if n_keys is None:
-        n_keys = keys.count()
-    m, k = bloom_parameters(n_keys, fpp)
+    m, k = bloom_parameters(keys.count(), fpp)
     bloom = build_bloom(keys, on, m, k)
     pre = big.filter(might_contain(bloom, F.col(on), k))
     return pre.join(keys, on, "left_semi")

@@ -27,9 +27,12 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from .partitioning import fanout
-from .text import fingerprint, tokens
+from .text import ID_COL, TEXT_COL, fingerprint, tokens
 
 HEX = "0123456789abcdef"
+# MinHash-LSH banding: 8 minhashes in 4 bands of 2 rows
+NUM_HASHES = 8
+BANDS = 4
 # connected_components raises rather than propagate for more rounds
 # than this (25 covers any graph under ~2^25 nodes of pure path)
 CC_MAX_ROUNDS = 25
@@ -37,12 +40,12 @@ CC_MAX_ROUNDS = 25
 
 # -- exact ------------------------------------------------------------------
 
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Keep the min-id representative of each distinct normalized text."""
     return (
-        df.withColumn("__fp", fingerprint(text_col))
+        df.withColumn("__fp", fingerprint(TEXT_COL))
         .groupBy("__fp")
-        .agg(F.min(id_col).alias("keep_id"), F.count("*").alias("n_copies"))
+        .agg(F.min(ID_COL).alias("keep_id"), F.count("*").alias("n_copies"))
         .drop("__fp")
     )
 
@@ -102,8 +105,6 @@ def _sorted_pairs(ids: Column) -> Column:
 
 def ngram_jaccard_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
     threshold: float = 0.2,
     max_df: int | None = None,
@@ -126,8 +127,8 @@ def ngram_jaccard_pairs(
     exact Jaccard (intersections lose capped shingles; set sizes keep
     them), which is the usual trade — the exact form is max_df=None.
     """
-    ex = exploded if exploded is not None else _exploded_shingles(df, text_col, id_col, n)
-    sizes = ex.groupBy(id_col).agg(F.count("*").alias("set_size"))
+    ex = exploded if exploded is not None else _exploded_shingles(df, TEXT_COL, ID_COL, n)
+    sizes = ex.groupBy(ID_COL).agg(F.count("*").alias("set_size"))
     if max_df is not None:
         hot = (
             ex.groupBy("shingle")
@@ -142,16 +143,16 @@ def ngram_jaccard_pairs(
     # lambda is interpreted; the join stays in whole-stage codegen).
     # Hot shingles make |posting|² pairs either way; the upstream
     # mitigation at scale is a document-frequency cap.
-    a = ex.select(F.col(id_col).alias("id_a"), "shingle")
-    b = ex.select(F.col(id_col).alias("id_b"), "shingle")
+    a = ex.select(F.col(ID_COL).alias("id_a"), "shingle")
+    b = ex.select(F.col(ID_COL).alias("id_b"), "shingle")
     inter = (
         a.join(b, "shingle")
         .filter(F.col("id_a") < F.col("id_b"))
         .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter_size"))
     )
-    sz_a = sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("size_a"))
-    sz_b = sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("size_b"))
+    sz_a = sizes.select(F.col(ID_COL).alias("id_a"), F.col("set_size").alias("size_a"))
+    sz_b = sizes.select(F.col(ID_COL).alias("id_b"), F.col("set_size").alias("size_b"))
     jacc = F.col("inter_size") / (F.col("size_a") + F.col("size_b") - F.col("inter_size"))
     # no broadcast hint: `sizes` is one row per document, which scales
     # with the corpus — the size threshold / AQE decides (broadcasts at
@@ -166,12 +167,7 @@ def ngram_jaccard_pairs(
 
 
 def prefix_filter_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.2,
-    exploded: DataFrame | None = None,
+    df: DataFrame, n: int = 3, threshold: float = 0.2, exploded: DataFrame | None = None
 ) -> DataFrame:
     """Exact Jaccard ≥ threshold pairs via PREFIX FILTERING (the
     AllPairs/PPJoin family) — provably the same answer as
@@ -192,7 +188,7 @@ def prefix_filter_jaccard_pairs(
     """
     import math
 
-    ex = exploded if exploded is not None else _exploded_shingles(df, text_col, id_col, n)
+    ex = exploded if exploded is not None else _exploded_shingles(df, TEXT_COL, ID_COL, n)
     # document frequency attaches as count(*) OVER (PARTITION BY
     # shingle) — the q144 round-11 trick: one Exchange(shingle) pass
     # instead of a groupBy aggregate + rejoin that shuffles ex twice
@@ -200,18 +196,18 @@ def prefix_filter_jaccard_pairs(
     # identical integers — same count over the same partition multiset)
     per_doc = (
         ex.withColumn("__df", F.count("*").over(W.partitionBy("shingle")))
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("__df"), F.col("shingle")))
             ).alias("__ordered")
         )
         .select(
-            id_col,
+            ID_COL,
             F.transform("__ordered", lambda s: s.getField("shingle")).alias("__toks"),
         )
         .select(
-            id_col,
+            ID_COL,
             "__toks",
             F.size("__toks").alias("__sz"),
             F.slice(
@@ -233,16 +229,16 @@ def prefix_filter_jaccard_pairs(
         .localCheckpoint(eager=True)  # feeds the candidate join twice + verify twice
     )
     pref = per_doc.select(
-        id_col, "__sz", F.posexplode("__prefix").alias("__p", "shingle")
+        ID_COL, "__sz", F.posexplode("__prefix").alias("__p", "shingle")
     )
     a = pref.select(
-        F.col(id_col).alias("id_a"),
+        F.col(ID_COL).alias("id_a"),
         F.col("__sz").alias("__sza"),
         (F.col("__p") + 1).alias("__pa"),
         "shingle",
     )
     b = pref.select(
-        F.col(id_col).alias("id_b"),
+        F.col(ID_COL).alias("id_b"),
         F.col("__sz").alias("__szb"),
         (F.col("__p") + 1).alias("__pb"),
         "shingle",
@@ -296,12 +292,12 @@ def prefix_filter_jaccard_pairs(
     # per-partition hash build is per_doc/n_partitions, the standard SHJ
     # memory contract.
     sa = per_doc.select(
-        F.col(id_col).alias("id_a"),
+        F.col(ID_COL).alias("id_a"),
         F.col("__toks").alias("__ta"),
         F.col("__sz").alias("__na"),
     ).hint("shuffle_hash")
     sb = per_doc.select(
-        F.col(id_col).alias("id_b"),
+        F.col(ID_COL).alias("id_b"),
         F.col("__toks").alias("__tb"),
         F.col("__sz").alias("__nb"),
     ).hint("shuffle_hash")
@@ -318,12 +314,7 @@ def prefix_filter_jaccard_pairs(
 
 
 def prefix_filter_containment_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 3,
-    threshold: float = 0.4,
-    exploded: DataFrame | None = None,
+    df: DataFrame, threshold: float = 0.4, exploded: DataFrame | None = None
 ) -> DataFrame:
     """Exact asymmetric-containment pairs (max direction ≥ threshold)
     via CONTAINMENT-ADAPTED prefix filtering — same answer as the
@@ -356,25 +347,25 @@ def prefix_filter_containment_pairs(
     x = t − 5e-7); epsilons keep ceil conservative under float
     rounding, as in the Jaccard twin above.
     """
-    ex = exploded if exploded is not None else _exploded_shingles(df, text_col, id_col, n)
+    ex = exploded if exploded is not None else _exploded_shingles(df, TEXT_COL, ID_COL, 3)
     t_eff = threshold - 1e-6  # 6-dp-round-then-compare relaxation
     k_req = F.ceil(F.size("__toks") * t_eff - 1e-9).cast("int")
     # window-attached document frequency — same rewrite as the Jaccard
     # twin above (one Exchange(shingle) pass, identical integers)
     per_doc = (
         ex.withColumn("__df", F.count("*").over(W.partitionBy("shingle")))
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(
             F.array_sort(
                 F.collect_list(F.struct(F.col("__df"), F.col("shingle")))
             ).alias("__ordered")
         )
         .select(
-            id_col,
+            ID_COL,
             F.transform("__ordered", lambda s: s.getField("shingle")).alias("__toks"),
         )
         .select(
-            id_col,
+            ID_COL,
             "__toks",
             F.size("__toks").alias("__sz"),
             F.slice(
@@ -386,12 +377,12 @@ def prefix_filter_containment_pairs(
         .localCheckpoint(eager=True)  # feeds candidate join twice + verify twice
     )
     s = per_doc.select(
-        F.col(id_col).alias("id_s"),
+        F.col(ID_COL).alias("id_s"),
         F.col("__sz").alias("__szs"),
         F.posexplode("__prefix").alias("__p", "shingle"),
     ).select("id_s", "__szs", (F.col("__p") + 1).alias("__ps"), "shingle")
     l = per_doc.select(
-        F.col(id_col).alias("id_l"),
+        F.col(ID_COL).alias("id_l"),
         F.col("__sz").alias("__szl"),
         F.posexplode("__toks").alias("__p", "shingle"),
     ).select("id_l", "__szl", (F.col("__p") + 1).alias("__pl"), "shingle")
@@ -420,12 +411,12 @@ def prefix_filter_containment_pairs(
     # shuffle_hash on the per-doc array side — same rationale and
     # measurement as the Jaccard twin's verify join above (§3.1).
     sa = per_doc.select(
-        F.col(id_col).alias("id_a"),
+        F.col(ID_COL).alias("id_a"),
         F.col("__toks").alias("__ta"),
         F.col("__sz").alias("__na"),
     ).hint("shuffle_hash")
     sb = per_doc.select(
-        F.col(id_col).alias("id_b"),
+        F.col(ID_COL).alias("id_b"),
         F.col("__toks").alias("__tb"),
         F.col("__sz").alias("__nb"),
     ).hint("shuffle_hash")
@@ -448,13 +439,7 @@ def prefix_filter_containment_pairs(
     )
 
 
-def contamination(
-    train: DataFrame,
-    eval_set: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n: int = 4,
-) -> DataFrame:
+def contamination(train: DataFrame, eval_set: DataFrame, n: int = 4) -> DataFrame:
     """Benchmark decontamination: train docs sharing ≥1 word n-gram with
     any eval doc, with the shared-gram and touched-eval-doc counts.
 
@@ -467,13 +452,13 @@ def contamination(
     docs (strict) or masks the spans (surgical); both consume exactly
     this output.
     """
-    tr = _exploded_shingles(train, text_col, id_col, n)
-    ev = _exploded_shingles(eval_set, text_col, id_col, n).select(
-        F.col(id_col).alias("__eval_id"), "shingle"
+    tr = _exploded_shingles(train, TEXT_COL, ID_COL, n)
+    ev = _exploded_shingles(eval_set, TEXT_COL, ID_COL, n).select(
+        F.col(ID_COL).alias("__eval_id"), "shingle"
     )
     return (
         tr.join(F.broadcast(ev), "shingle")
-        .groupBy(id_col)
+        .groupBy(ID_COL)
         .agg(
             F.countDistinct("shingle").alias("n_shared_grams"),
             F.countDistinct("__eval_id").alias("n_eval_docs"),
@@ -517,11 +502,9 @@ def minhash_signature(num_hashes: int) -> list[Column]:
 
 def minhash_lsh_candidates(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n: int = 3,
-    num_hashes: int = 8,
-    bands: int = 4,
+    num_hashes: int = NUM_HASHES,
+    bands: int = BANDS,
     exploded: DataFrame | None = None,
 ) -> DataFrame:
     """Candidate near-dup pairs: docs agreeing on ALL rows of ≥1 band.
@@ -533,8 +516,8 @@ def minhash_lsh_candidates(
     """
     assert num_hashes % bands == 0
     r = num_hashes // bands
-    ex = exploded if exploded is not None else _exploded_shingles(df, text_col, id_col, n)
-    sig = ex.groupBy(id_col).agg(*minhash_signature(num_hashes))
+    ex = exploded if exploded is not None else _exploded_shingles(df, TEXT_COL, ID_COL, n)
+    sig = ex.groupBy(ID_COL).agg(*minhash_signature(num_hashes))
 
     band_structs = F.array(
         *[
@@ -546,15 +529,15 @@ def minhash_lsh_candidates(
         ]
     )
     buckets = sig.select(
-        F.col(id_col), F.explode(band_structs).alias("bk")
-    ).select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        F.col(ID_COL), F.explode(band_structs).alias("bk")
+    ).select(ID_COL, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
     # same posting-list plan as ngram_jaccard_pairs: one shuffle on the
     # band bucket, pairs expanded in-bucket (a self-join would shuffle
     # and recompute the signature pipeline twice)
     return (
         buckets.groupBy("band", "key")
-        .agg(F.array_sort(F.collect_list(F.col(id_col))).alias("ids"))
+        .agg(F.array_sort(F.collect_list(F.col(ID_COL))).alias("ids"))
         .filter(F.size("ids") >= 2)
         .select(F.explode_outer(_sorted_pairs(F.col("ids"))).alias("p"))
         .select(F.col("p.id_a"), F.col("p.id_b"))
@@ -563,12 +546,7 @@ def minhash_lsh_candidates(
 
 
 def incremental_lsh_neardups(
-    exploded: DataFrame,
-    new_ids: DataFrame,
-    id_col: str = "doc_id",
-    num_hashes: int = 8,
-    bands: int = 4,
-    threshold: float = 0.2,
+    exploded: DataFrame, new_ids: DataFrame, threshold: float = 0.2
 ) -> DataFrame:
     """Near-dups of a NEW batch against the EXISTING corpus — the daily
     ingestion shape: the increment must never trigger a corpus×corpus
@@ -586,24 +564,24 @@ def incremental_lsh_neardups(
     for band-colliding pairs — the same verify-after-LSH contract as
     minhash_lsh_candidates + ngram_jaccard_pairs composed.
     """
-    sig = exploded.groupBy(id_col).agg(*minhash_signature(num_hashes))
-    band_structs = band_struct_array(num_hashes, bands)
+    sig = exploded.groupBy(ID_COL).agg(*minhash_signature(NUM_HASHES))
+    band_structs = band_struct_array(NUM_HASHES, BANDS)
     # the new/old split consumes buckets twice (semi + anti) inside one
     # join — materialize so the 8-md5-min signature aggregate runs ONCE.
     # At production scale this table (4 small rows per doc) is exactly
     # the maintained corpus-signature artifact incremental ingestion
     # keeps around between batches.
     buckets = (
-        sig.select(F.col(id_col), F.explode(band_structs).alias("bk"))
-        .select(id_col, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
+        sig.select(F.col(ID_COL), F.explode(band_structs).alias("bk"))
+        .select(ID_COL, F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
         .localCheckpoint(eager=True)
     )
 
-    nb = buckets.join(new_ids, id_col, "left_semi").withColumnRenamed(
-        id_col, "id_a"
+    nb = buckets.join(new_ids, ID_COL, "left_semi").withColumnRenamed(
+        ID_COL, "id_a"
     )
-    ob = buckets.join(new_ids, id_col, "left_anti").withColumnRenamed(
-        id_col, "id_b"
+    ob = buckets.join(new_ids, ID_COL, "left_anti").withColumnRenamed(
+        ID_COL, "id_b"
     )
     # cand feeds THREE consumers (both posting-list shrinks + the final
     # semi-join); without a barrier each one re-runs the signature
@@ -616,13 +594,13 @@ def incremental_lsh_neardups(
         .localCheckpoint(eager=True)
     )
 
-    sizes = exploded.groupBy(id_col).agg(F.count("*").alias("set_size"))
+    sizes = exploded.groupBy(ID_COL).agg(F.count("*").alias("set_size"))
     sh_a = exploded.join(
-        cand.select(F.col("id_a").alias(id_col)).distinct(), id_col, "left_semi"
-    ).withColumnRenamed(id_col, "id_a")
+        cand.select(F.col("id_a").alias(ID_COL)).distinct(), ID_COL, "left_semi"
+    ).withColumnRenamed(ID_COL, "id_a")
     sh_b = exploded.join(
-        cand.select(F.col("id_b").alias(id_col)).distinct(), id_col, "left_semi"
-    ).withColumnRenamed(id_col, "id_b")
+        cand.select(F.col("id_b").alias(ID_COL)).distinct(), ID_COL, "left_semi"
+    ).withColumnRenamed(ID_COL, "id_b")
     inter = (
         sh_a.join(sh_b, "shingle")
         .groupBy("id_a", "id_b")
@@ -635,8 +613,8 @@ def incremental_lsh_neardups(
         6,
     )
     return (
-        inter.join(sizes.select(F.col(id_col).alias("id_a"), F.col("set_size").alias("sa")), "id_a")
-        .join(sizes.select(F.col(id_col).alias("id_b"), F.col("set_size").alias("sb")), "id_b")
+        inter.join(sizes.select(F.col(ID_COL).alias("id_a"), F.col("set_size").alias("sa")), "id_a")
+        .join(sizes.select(F.col(ID_COL).alias("id_b"), F.col("set_size").alias("sb")), "id_b")
         .select("id_a", "id_b", j.alias("jaccard"))
         .filter(F.col("jaccard") >= threshold)
     )
@@ -737,23 +715,23 @@ def simhash_bit_exprs(dialect: str) -> tuple[list[str], list[str]]:
     return digits, bits
 
 
-def simhash16(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def simhash16(df: DataFrame) -> DataFrame:
     """16-bit SimHash per document (token-multiset weighted)."""
-    ex = fanout(df).select(F.col(id_col), F.explode(tokens(text_col)).alias("token"))
+    ex = fanout(df).select(F.col(ID_COL), F.explode(tokens(TEXT_COL)).alias("token"))
     digits, bits = simhash_bit_exprs("spark")
-    with_digits = ex.selectExpr(id_col, "token", *digits)
-    with_bits = with_digits.selectExpr(id_col, *bits)
-    summed = with_bits.groupBy(id_col).agg(
+    with_digits = ex.selectExpr(ID_COL, "token", *digits)
+    with_bits = with_digits.selectExpr(ID_COL, *bits)
+    summed = with_bits.groupBy(ID_COL).agg(
         *[F.sum(f"c{j}").alias(f"s{j}") for j in range(16)]
     )
     sim = None
     for j in range(16):
         term = F.when(F.col(f"s{j}") > 0, F.lit(1 << j)).otherwise(F.lit(0))
         sim = term if sim is None else sim + term
-    return summed.select(F.col(id_col), sim.cast("long").alias("simhash"))
+    return summed.select(F.col(ID_COL), sim.cast("long").alias("simhash"))
 
 
-def simhash16_sql(table: str = "documents", text_col: str = "text", id_col: str = "doc_id") -> str:
+def simhash16_sql() -> str:
     """The DuckDB oracle for :func:`simhash16`, from the same generator."""
     digits, bits = simhash_bit_exprs("duckdb")
     sim_terms = " + ".join(
@@ -762,27 +740,23 @@ def simhash16_sql(table: str = "documents", text_col: str = "text", id_col: str 
     sums = ", ".join(f"sum(c{j}) AS s{j}" for j in range(16))
     return f"""
 WITH tok AS (
-  SELECT {id_col}, unnest(string_split({text_col}, ' ')) AS token FROM {table}
+  SELECT doc_id, unnest(string_split(text, ' ')) AS token FROM documents
 ),
 dig AS (
-  SELECT {id_col}, token, {", ".join(digits)} FROM tok
+  SELECT doc_id, token, {", ".join(digits)} FROM tok
 ),
 bits AS (
-  SELECT {id_col}, {", ".join(bits)} FROM dig
+  SELECT doc_id, {", ".join(bits)} FROM dig
 ),
 summed AS (
-  SELECT {id_col}, {sums} FROM bits GROUP BY {id_col}
+  SELECT doc_id, {sums} FROM bits GROUP BY doc_id
 )
-SELECT {id_col}, CAST({sim_terms} AS BIGINT) AS simhash FROM summed
+SELECT doc_id, CAST({sim_terms} AS BIGINT) AS simhash FROM summed
 """
 
 
 def sorted_neighborhood_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    key_len: int = 24,
-    window: int = 5,
+    df: DataFrame, key_len: int = 24, window: int = 5
 ) -> DataFrame:
     """Sorted-neighborhood candidate pairs (Hernández & Stolfo 1995)
     with distinct-token Jaccard scores — the third blocking strategy in
@@ -808,25 +782,25 @@ def sorted_neighborhood_pairs(
     from .partitioning import with_global_rank
 
     keyed = df.select(
-        F.col(id_col),
+        F.col(ID_COL),
         F.substring(
-            F.lower(F.coalesce(F.col(text_col), F.lit(""))), 1, key_len
+            F.lower(F.coalesce(F.col(TEXT_COL), F.lit(""))), 1, key_len
         ).alias("__bk"),
         F.array_distinct(
-            F.split(F.coalesce(F.col(text_col), F.lit("")), " ")
+            F.split(F.coalesce(F.col(TEXT_COL), F.lit("")), " ")
         ).alias("__toks"),
     )
     ranked = with_global_rank(
         keyed,
         [],
-        [F.asc("__bk"), F.asc(id_col)],
+        [F.asc("__bk"), F.asc(ID_COL)],
         bucket=F.substring("__bk", 1, 1),
         rank_col="__rnk",
         # two consumers below (left/right of the band join)
     ).localCheckpoint(eager=True)
     left = (
         ranked.select(
-            F.col(id_col).alias("id_a"),
+            F.col(ID_COL).alias("id_a"),
             F.col("__toks").alias("__ta"),
             F.col("__rnk").alias("__ra"),
         )
@@ -834,7 +808,7 @@ def sorted_neighborhood_pairs(
         .withColumn("__rnk", F.col("__ra") + F.col("__dr"))
     )
     right = ranked.select(
-        F.col(id_col).alias("id_b"), F.col("__toks").alias("__tb"), "__rnk"
+        F.col(ID_COL).alias("id_b"), F.col("__toks").alias("__tb"), "__rnk"
     )
     inter = F.size(F.array_intersect("__ta", "__tb"))
     uni = F.size("__ta") + F.size("__tb") - inter

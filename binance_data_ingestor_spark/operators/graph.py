@@ -101,7 +101,7 @@ def pagerank(edges: DataFrame, iterations: int = 3) -> DataFrame:
     return ranks
 
 
-def triangle_stats(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
+def triangle_stats(edges: DataFrame) -> DataFrame:
     """Exact triangle / wedge census of an undirected graph.
 
     ``edges`` must hold each undirected edge exactly once (canonical
@@ -123,8 +123,8 @@ def triangle_stats(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
       (Σ deg·(deg-1)/2, orientation-independent), never enumerated.
     """
     deg = (
-        edges.select(F.col(u).alias("n"))
-        .unionAll(edges.select(F.col(v).alias("n")))
+        edges.select(F.col("u").alias("n"))
+        .unionAll(edges.select(F.col("v").alias("n")))
         .groupBy("n")
         .agg(F.count("*").alias("deg"))
     )
@@ -134,13 +134,13 @@ def triangle_stats(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     )
     # orient: src = (deg, node)-smaller endpoint. struct comparison is
     # lexicographic, so ties on degree break deterministically by id.
-    u_lt_v = F.struct(F.col("du"), F.col(u)) < F.struct(F.col("dv"), F.col(v))
+    u_lt_v = F.struct(F.col("du"), F.col("u")) < F.struct(F.col("dv"), F.col("v"))
     oriented = (
-        edges.join(deg.withColumnRenamed("n", u).withColumnRenamed("deg", "du"), u)
-        .join(deg.withColumnRenamed("n", v).withColumnRenamed("deg", "dv"), v)
+        edges.join(deg.withColumnRenamed("n", "u").withColumnRenamed("deg", "du"), "u")
+        .join(deg.withColumnRenamed("n", "v").withColumnRenamed("deg", "dv"), "v")
         .select(
-            F.when(u_lt_v, F.col(u)).otherwise(F.col(v)).alias("src"),
-            F.when(u_lt_v, F.col(v)).otherwise(F.col(u)).alias("dst"),
+            F.when(u_lt_v, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(u_lt_v, F.col("v")).otherwise(F.col("u")).alias("dst"),
             F.when(u_lt_v, F.col("dv")).otherwise(F.col("du")).alias("dd"),
         )
         .localCheckpoint(eager=True)
@@ -341,7 +341,7 @@ def bfs_hops(edges: DataFrame, sources: DataFrame, max_hops: int) -> DataFrame:
     return out
 
 
-def edge_support(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
+def edge_support(edges: DataFrame) -> DataFrame:
     """Per-edge triangle SUPPORT — the truss-decomposition primitive:
     support(e) = number of triangles containing e. The k-truss is the
     maximal subgraph where every edge has support ≥ k−2 after iterative
@@ -363,18 +363,18 @@ def edge_support(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
     oracle agrees edge-for-edge.
     """
     deg = (
-        edges.select(F.col(u).alias("n"))
-        .unionAll(edges.select(F.col(v).alias("n")))
+        edges.select(F.col("u").alias("n"))
+        .unionAll(edges.select(F.col("v").alias("n")))
         .groupBy("n")
         .agg(F.count("*").alias("deg"))
     )
-    u_lt_v = F.struct(F.col("du"), F.col(u)) < F.struct(F.col("dv"), F.col(v))
+    u_lt_v = F.struct(F.col("du"), F.col("u")) < F.struct(F.col("dv"), F.col("v"))
     oriented = (
-        edges.join(deg.withColumnRenamed("n", u).withColumnRenamed("deg", "du"), u)
-        .join(deg.withColumnRenamed("n", v).withColumnRenamed("deg", "dv"), v)
+        edges.join(deg.withColumnRenamed("n", "u").withColumnRenamed("deg", "du"), "u")
+        .join(deg.withColumnRenamed("n", "v").withColumnRenamed("deg", "dv"), "v")
         .select(
-            F.when(u_lt_v, F.col(u)).otherwise(F.col(v)).alias("src"),
-            F.when(u_lt_v, F.col(v)).otherwise(F.col(u)).alias("dst"),
+            F.when(u_lt_v, F.col("u")).otherwise(F.col("v")).alias("src"),
+            F.when(u_lt_v, F.col("v")).otherwise(F.col("u")).alias("dst"),
             F.when(u_lt_v, F.col("dv")).otherwise(F.col("du")).alias("dd"),
         )
         .localCheckpoint(eager=True)  # feeds wedge, closing AND canonical map
@@ -405,11 +405,11 @@ def edge_support(edges: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
             )
         ).alias("e")
     ).select(
-        F.least("e.a", "e.b").alias(u), F.greatest("e.a", "e.b").alias(v)
+        F.least("e.a", "e.b").alias("u"), F.greatest("e.a", "e.b").alias("v")
     )
-    sup = tri_edges.groupBy(u, v).agg(F.count("*").alias("support"))
+    sup = tri_edges.groupBy("u", "v").agg(F.count("*").alias("support"))
     return (
-        edges.select(u, v)
-        .join(sup, [u, v], "left")
-        .select(u, v, F.coalesce("support", F.lit(0)).alias("support"))
+        edges.select("u", "v")
+        .join(sup, ["u", "v"], "left")
+        .select("u", "v", F.coalesce("support", F.lit(0)).alias("support"))
     )

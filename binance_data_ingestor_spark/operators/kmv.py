@@ -68,17 +68,17 @@ def u60(col: str) -> Column:
     return F.expr(u60_sql("spark", col))
 
 
-def kmv_sketch(df: DataFrame, key_col: str, k: int, hash_col: str = "__h") -> DataFrame:
+def kmv_sketch(df: DataFrame, key_col: str, k: int) -> DataFrame:
     """The k rows of ``df`` with the smallest ``u60(key_col)``, all
-    input columns retained plus ``hash_col``. ``df`` must be distinct
-    by ``key_col`` (a repeated key would occupy two slots and bias the
-    estimate). Ties (60-bit collisions) break by key, so the retained
+    input columns retained plus the hash as ``__h``. ``df`` must be
+    distinct by ``key_col`` (a repeated key would occupy two slots and
+    bias the estimate). Ties (60-bit collisions) break by key, so the retained
     set is deterministic. Plans as TakeOrderedAndProject — the
     scale-safe top-k, not a global sort.
     """
     return (
-        df.withColumn(hash_col, u60(key_col))
-        .orderBy(hash_col, key_col)
+        df.withColumn("__h", u60(key_col))
+        .orderBy("__h", key_col)
         .limit(k)
     )
 

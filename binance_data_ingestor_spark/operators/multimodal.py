@@ -32,24 +32,22 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+CONTENT_COL = "content"
+ID_COL = "doc_id"
 
-def media_metadata(df: DataFrame, content_col: str = "content") -> DataFrame:
+
+def media_metadata(df: DataFrame) -> DataFrame:
     """Structural metadata: byte length + 4-byte magic header (hex).
 
     Pure column expressions — at 100 TB this runs at parquet scan speed
     and never materializes the payload outside the scan buffer.
     """
-    return df.withColumn("n_bytes", F.length(F.col(content_col))).withColumn(
-        "magic_hex", F.hex(F.expr(f"substring({content_col}, 1, 4)"))
+    return df.withColumn("n_bytes", F.length(F.col(CONTENT_COL))).withColumn(
+        "magic_hex", F.hex(F.expr(f"substring({CONTENT_COL}, 1, 4)"))
     )
 
 
-def sample_frames(
-    df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "doc_id",
-    n_frames: int = 4,
-) -> DataFrame:
+def sample_frames(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """Split each payload into ``n_frames`` equal byte slices (video
     frame-sampling shape: fixed-stride offsets into the container).
 
@@ -58,16 +56,16 @@ def sample_frames(
     than ``n_frames`` bytes are filtered out. One output row per frame:
     (id, frame_idx, frame_bytes).
     """
-    flen = F.floor(F.length(F.col(content_col)) / n_frames).cast("long")
+    flen = F.floor(F.length(F.col(CONTENT_COL)) / n_frames).cast("long")
     # posexplode_outer, not posexplode: avoids the inferred size()>0
     # filter that would duplicate the slice expression (see
     # dedup._exploded_shingles); the flen > 0 guard already ensures
     # every slice array is non-empty.
     return (
         df.filter(flen > 0)
-        .select(F.col(id_col), flen.alias("__flen"), F.col(content_col).alias("__c"))
+        .select(F.col(ID_COL), flen.alias("__flen"), F.col(CONTENT_COL).alias("__c"))
         .select(
-            id_col,
+            ID_COL,
             F.posexplode_outer(
                 F.expr(
                     f"transform(sequence(0, {n_frames - 1}),"
@@ -78,9 +76,7 @@ def sample_frames(
     )
 
 
-def perceptual_hash16(
-    df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
+def perceptual_hash16(df: DataFrame) -> DataFrame:
     """16-bit aHash-style perceptual fingerprint from the byte-nibble
     histogram: bit j set iff bin j holds more than the mean share of
     the payload (strict `n*16 > total`, integer-exact). Media near-dup
@@ -92,7 +88,7 @@ def perceptual_hash16(
     """
     from pyspark.sql import Window as W
 
-    hist = byte_histogram(df, content_col, id_col)
+    hist = byte_histogram(df)
     w = W.partitionBy("doc_id")
     bit = F.when(
         F.col("n") * 16 > F.col("total"),
@@ -105,9 +101,7 @@ def perceptual_hash16(
     )
 
 
-def byte_histogram(
-    df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
+def byte_histogram(df: DataFrame) -> DataFrame:
     """16-bin histogram of payload byte high-nibbles — the feature-
     extraction shape: payload crosses to Python once, Arrow-batched,
     vectorized with numpy. Output rows (id, bin, n) for non-empty bins.
@@ -126,21 +120,12 @@ def byte_histogram(
             yield pd.DataFrame({"doc_id": ids, "bin": bins, "n": counts})
 
     return df.select(
-        F.col(id_col).cast("long").alias("__id"),
-        F.col(content_col).alias("__content"),
+        F.col(ID_COL).cast("long").alias("__id"),
+        F.col(CONTENT_COL).alias("__content"),
     ).mapInPandas(kernel, "doc_id long, bin int, n long")
 
 
-def resize_raster(
-    df: DataFrame,
-    *,
-    content_col: str = "content",
-    id_col: str = "doc_id",
-    src_w_col: str = "raster_w",
-    src_h_col: str = "raster_h",
-    out_w: int = 4,
-    out_h: int = 3,
-) -> DataFrame:
+def resize_raster(df: DataFrame, *, out_w: int = 4, out_h: int = 3) -> DataFrame:
     """Nearest-neighbor downsample of a byte raster (the image-resize
     shape): the payload's first src_w·src_h bytes are treated as a
     row-major grid; output pixel (i, j) samples input
@@ -168,15 +153,15 @@ def resize_raster(
 
     return (
         df.filter(
-            (F.length(F.col(content_col)) >= F.col(src_w_col) * F.col(src_h_col))
-            & (F.col(src_w_col) >= out_w)
-            & (F.col(src_h_col) >= out_h)
+            (F.length(F.col(CONTENT_COL)) >= F.col("raster_w") * F.col("raster_h"))
+            & (F.col("raster_w") >= out_w)
+            & (F.col("raster_h") >= out_h)
         )
         .select(
-            F.col(id_col).cast("long").alias("__id"),
-            F.col(content_col).alias("__content"),
-            F.col(src_w_col).alias("__w"),
-            F.col(src_h_col).alias("__h"),
+            F.col(ID_COL).cast("long").alias("__id"),
+            F.col(CONTENT_COL).alias("__content"),
+            F.col("raster_w").alias("__w"),
+            F.col("raster_h").alias("__h"),
         )
         .mapInPandas(kernel, "doc_id long, resized binary")
     )
@@ -258,9 +243,7 @@ WAV_SCHEMA = (
 )
 
 
-def decode_wav(
-    df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
+def decode_wav(df: DataFrame) -> DataFrame:
     """Arrow-batched REAL WAV decode — the non-stub sibling of
     ``decode_media`` for a format whose container is parseable without
     external codec libraries. Row-local, zero shuffle."""
@@ -289,7 +272,7 @@ def decode_wav(
             yield pd.DataFrame(out)
 
     return df.select(
-        F.col(id_col).cast("long").alias("__id"), F.col(content_col).alias("__content")
+        F.col(ID_COL).cast("long").alias("__id"), F.col(CONTENT_COL).alias("__content")
     ).mapInPandas(kernel, WAV_SCHEMA)
 
 
@@ -344,9 +327,7 @@ PPM_SCHEMA = (
 )
 
 
-def decode_ppm(
-    df: DataFrame, content_col: str = "content", id_col: str = "doc_id"
-) -> DataFrame:
+def decode_ppm(df: DataFrame) -> DataFrame:
     """Arrow-batched REAL PPM decode — the image sibling of
     ``decode_wav``. Row-local, zero shuffle."""
 
@@ -371,17 +352,11 @@ def decode_ppm(
             yield pd.DataFrame(out)
 
     return df.select(
-        F.col(id_col).cast("long").alias("__id"), F.col(content_col).alias("__content")
+        F.col(ID_COL).cast("long").alias("__id"), F.col(CONTENT_COL).alias("__content")
     ).mapInPandas(kernel, PPM_SCHEMA)
 
 
-def decode_media(
-    df: DataFrame,
-    content_col: str = "content",
-    id_col: str = "doc_id",
-    *,
-    real_codecs: bool = False,
-) -> DataFrame:
+def decode_media(df: DataFrame, *, real_codecs: bool = False) -> DataFrame:
     """Unified decode dispatch → typed facts, one Python crossing.
 
     Payloads whose container magic identifies a format with an in-repo
@@ -456,9 +431,9 @@ def decode_media(
             )
 
     return df.select(
-        F.col(id_col).cast("long").alias("__id"),
+        F.col(ID_COL).cast("long").alias("__id"),
         "media_type",
         "width",
         "height",
-        F.col(content_col).alias("__content"),
+        F.col(CONTENT_COL).alias("__content"),
     ).mapInPandas(kernel, DECODED_SCHEMA)

@@ -13,26 +13,26 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def with_best_levels(df: DataFrame, bids: str = "bids", asks: str = "asks") -> DataFrame:
+def with_best_levels(df: DataFrame) -> DataFrame:
     """P10/P11: best bid/ask = first level (exchange sends price-sorted
     arrays).  Empty-guard (P13): rows with an empty side get nulls."""
-    non_empty = (F.size(F.col(bids)) > 0) & (F.size(F.col(asks)) > 0)
+    non_empty = (F.size(F.col("bids")) > 0) & (F.size(F.col("asks")) > 0)
     return (
         df.withColumn(
             "best_bid",
-            F.when(non_empty, F.element_at(F.col(bids), 1).getField("price")),
+            F.when(non_empty, F.element_at(F.col("bids"), 1).getField("price")),
         )
         .withColumn(
             "best_ask",
-            F.when(non_empty, F.element_at(F.col(asks), 1).getField("price")),
+            F.when(non_empty, F.element_at(F.col("asks"), 1).getField("price")),
         )
         .withColumn(
             "best_bid_qty",
-            F.when(non_empty, F.element_at(F.col(bids), 1).getField("qty")),
+            F.when(non_empty, F.element_at(F.col("bids"), 1).getField("qty")),
         )
         .withColumn(
             "best_ask_qty",
-            F.when(non_empty, F.element_at(F.col(asks), 1).getField("qty")),
+            F.when(non_empty, F.element_at(F.col("asks"), 1).getField("qty")),
         )
     )
 
@@ -45,10 +45,10 @@ def with_mid_and_spread(df: DataFrame) -> DataFrame:
     return df.withColumn("mid_price", (bb + ba) / 2).withColumn("spread", ba - bb)
 
 
-def top_k_levels(df: DataFrame, k: int = 3, bids: str = "bids", asks: str = "asks") -> DataFrame:
+def top_k_levels(df: DataFrame, k: int = 3) -> DataFrame:
     """L2: head-slice of the price-sorted book sides."""
-    return df.withColumn(f"{bids}_top{k}", F.slice(F.col(bids), 1, k)).withColumn(
-        f"{asks}_top{k}", F.slice(F.col(asks), 1, k)
+    return df.withColumn(f"bids_top{k}", F.slice(F.col("bids"), 1, k)).withColumn(
+        f"asks_top{k}", F.slice(F.col("asks"), 1, k)
     )
 
 

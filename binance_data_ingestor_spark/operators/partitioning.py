@@ -18,11 +18,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def fanout(df: DataFrame, partitions: int | None = None) -> DataFrame:
-    """Repartition to the session's default parallelism (or an explicit
-    count) ahead of CPU-heavy per-row work."""
-    n = partitions or df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(n)
+def fanout(df: DataFrame) -> DataFrame:
+    """Repartition to the session's default parallelism ahead of
+    CPU-heavy per-row work."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
 
 
 def bounded_ordered_window(anchor, *order):
@@ -84,8 +83,6 @@ def with_row_context(
     chunk: "Column",
     rows_before: int = 0,
     rows_after: int = 0,
-    chunk_col: str = "chunk",
-    ctx_col: str = "is_ctx",
     check: bool = True,
 ) -> DataFrame:
     """Re-key a rows-bounded window off a low-cardinality partition key.
@@ -98,7 +95,7 @@ def with_row_context(
     chunks and replicate each chunk's last ``rows_before`` rows into
     the NEXT PRESENT chunk (and its first ``rows_after`` rows into the
     previous present chunk) as context-only rows. A window over
-    ``partitionBy(*keys, chunk_col)`` then sees the same frame content
+    ``partitionBy(*keys, "chunk")`` then sees the same frame content
     per surviving row as the global window, with parallelism
     |keys| × |chunks| (grows with data span).
 
@@ -136,25 +133,25 @@ def with_row_context(
     1000-row chunks, 10× its frame at any SF) may pass ``check=False``
     to skip the extra aggregate job and stay fully lazy.
 
-    Returns df + (chunk_col, ctx_col); run the window partitioned by
-    (*keys, chunk_col) with the same ``order``, then filter
-    ``ctx_col == 0`` and drop both columns. The boundary ranking is
-    one extra window over (*keys, chunk_col) — itself parallel — and
+    Returns df + (chunk, is_ctx); run the window partitioned by
+    (*keys, chunk) with the same ``order``, then filter
+    ``is_ctx == 0`` and drop both columns. The boundary ranking is
+    one extra window over (*keys, chunk) — itself parallel — and
     the present-chunk chaining runs on the chunk summary
     (|keys| × |chunks| rows, negligible).
     """
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
-    base = df.withColumn(chunk_col, chunk)
-    parts = [*keys, chunk_col]
+    base = df.withColumn("chunk", chunk)
+    parts = [*keys, "chunk"]
     present = base.select(*parts).distinct()
-    wk = W.partitionBy(*keys).orderBy(chunk_col)
+    wk = W.partitionBy(*keys).orderBy("chunk")
     hops = present.select(
         *keys,
-        F.col(chunk_col).alias("__src_chunk"),
-        F.lead(chunk_col).over(wk).alias("__next_chunk"),
-        F.lag(chunk_col).over(wk).alias("__prev_chunk"),
+        F.col("chunk").alias("__src_chunk"),
+        F.lead("chunk").over(wk).alias("__next_chunk"),
+        F.lag("chunk").over(wk).alias("__prev_chunk"),
     )
 
     if check and max(rows_before, rows_after) > 1:
@@ -174,7 +171,7 @@ def with_row_context(
         # |keys|×|chunks|-row chain summary.
         counts = base.groupBy(*parts).count()
         bad = (
-            counts.withColumnRenamed(chunk_col, "__src_chunk")
+            counts.withColumnRenamed("chunk", "__src_chunk")
             .join(hops, [*keys, "__src_chunk"])
             .filter(
                 (
@@ -208,15 +205,15 @@ def with_row_context(
             .drop("__rn")
         )
         return (
-            ranked.withColumnRenamed(chunk_col, "__src_chunk")
+            ranked.withColumnRenamed("chunk", "__src_chunk")
             .join(hops, [*keys, "__src_chunk"])
             .filter(F.col(target).isNotNull())
-            .withColumn(chunk_col, F.col(target))
+            .withColumn("chunk", F.col(target))
             .drop("__src_chunk", "__next_chunk", "__prev_chunk")
-            .withColumn(ctx_col, F.lit(1))
+            .withColumn("is_ctx", F.lit(1))
         )
 
-    pieces = [base.withColumn(ctx_col, F.lit(0))]
+    pieces = [base.withColumn("is_ctx", F.lit(0))]
     if rows_before:
         w_desc = W.partitionBy(*parts).orderBy(*[F.desc(c) for c in order])
         pieces.append(shifted(w_desc, rows_before, "__next_chunk"))
@@ -229,12 +226,11 @@ def with_row_context(
     return out
 
 
+RANGE_BUCKETS = 64
+
+
 def with_range_bucket(
-    df: DataFrame,
-    expr: "Column",
-    *,
-    n_buckets: int = 64,
-    bucket_col: str = "__rb",
+    df: DataFrame, expr: "Column", *, bucket_col: str = "__rb"
 ) -> DataFrame:
     """Attach an equal-width bucket of ``expr`` computed from a broadcast
     1-row min/max span — the bucket feed for :func:`with_global_rank` /
@@ -265,8 +261,8 @@ def with_range_bucket(
     hi = float(row["hi"]) if row["hi"] is not None else 0.0
     rng = max(hi - lo, 1e-12)
     bucket = F.least(
-        F.lit(n_buckets - 1),
-        F.floor((expr.cast("double") - F.lit(lo)) / F.lit(rng) * n_buckets),
+        F.lit(RANGE_BUCKETS - 1),
+        F.floor((expr.cast("double") - F.lit(lo)) / F.lit(rng) * RANGE_BUCKETS),
     ).cast("int")
     return df.withColumn(bucket_col, bucket)
 

@@ -21,6 +21,9 @@ from pyspark.sql import functions as F
 
 from ..schemas import DEC, RAW_SCHEMAS
 
+# parse_raw's decoded-frame column, which every normalizer reads
+RAW_COL = "__raw"
+
 
 @contextmanager
 def case_sensitive(spark):
@@ -32,7 +35,7 @@ def case_sensitive(spark):
         spark.conf.set("spark.sql.caseSensitive", old)
 
 
-def parse_raw(df: DataFrame, stream_key: str, value_col: str = "value") -> DataFrame:
+def parse_raw(df: DataFrame, stream_key: str) -> DataFrame:
     """Decode raw JSON text frames (P1: json.loads ≙ from_json).
 
     Permissive mode: malformed/missing fields become nulls, matching the
@@ -40,7 +43,7 @@ def parse_raw(df: DataFrame, stream_key: str, value_col: str = "value") -> DataF
     """
     schema = RAW_SCHEMAS[stream_key]
     with case_sensitive(df.sparkSession):
-        return df.withColumn("__raw", F.from_json(F.col(value_col), schema))
+        return df.withColumn(RAW_COL, F.from_json(F.col("value"), schema))
 
 
 def _typed_levels(col):
@@ -65,10 +68,10 @@ def _py_bool_str(col):
     )
 
 
-def normalize_ticker(df: DataFrame, raw: str = "__raw", keep: list[str] = ()) -> DataFrame:
+def normalize_ticker(df: DataFrame, keep: list[str] = ()) -> DataFrame:
     """P2 — 8-column project+rename (binance-di.py:35-41)."""
     with case_sensitive(df.sparkSession):
-        m = F.col(raw)
+        m = F.col(RAW_COL)
         return df.select(
             *keep,
             m.getField("p").alias("price_change"),
@@ -82,7 +85,7 @@ def normalize_ticker(df: DataFrame, raw: str = "__raw", keep: list[str] = ()) ->
         )
 
 
-def normalize_order_book(df: DataFrame, raw: str = "__raw", keep: list[str] = ()) -> DataFrame:
+def normalize_order_book(df: DataFrame, keep: list[str] = ()) -> DataFrame:
     """P3 — lastUpdateId + typed book sides (binance-di.py:43-47).
 
     The reference JSON-stringifies bids/asks because Redis Streams only
@@ -90,7 +93,7 @@ def normalize_order_book(df: DataFrame, raw: str = "__raw", keep: list[str] = ()
     array<struct<price,qty>> and serializes only at the Redis sink
     boundary (sinks/redis_sink.py)."""
     with case_sensitive(df.sparkSession):
-        m = F.col(raw)
+        m = F.col(RAW_COL)
         return df.select(
             *keep,
             m.getField("u").alias("lastUpdateId"),
@@ -99,10 +102,10 @@ def normalize_order_book(df: DataFrame, raw: str = "__raw", keep: list[str] = ()
         )
 
 
-def normalize_trades(df: DataFrame, raw: str = "__raw", keep: list[str] = ()) -> DataFrame:
+def normalize_trades(df: DataFrame, keep: list[str] = ()) -> DataFrame:
     """P4 — 5-column aggTrade projection (binance-di.py:49-54)."""
     with case_sensitive(df.sparkSession):
-        m = F.col(raw)
+        m = F.col(RAW_COL)
         return df.select(
             *keep,
             m.getField("E").alias("event_time"),
@@ -113,10 +116,10 @@ def normalize_trades(df: DataFrame, raw: str = "__raw", keep: list[str] = ()) ->
         )
 
 
-def normalize_klines(df: DataFrame, raw: str = "__raw", keep: list[str] = ()) -> DataFrame:
+def normalize_klines(df: DataFrame, keep: list[str] = ()) -> DataFrame:
     """P5 — nested k.* flatten into 13 columns (binance-di.py:56-67)."""
     with case_sensitive(df.sparkSession):
-        m = F.col(raw)
+        m = F.col(RAW_COL)
         k = m.getField("k")
         return df.select(
             *keep,
@@ -144,15 +147,15 @@ NORMALIZERS = {
 }
 
 
-def with_envelope_json(df: DataFrame, stream_key: str, symbol_col: str = "symbol") -> DataFrame:
+def with_envelope_json(df: DataFrame, stream_key: str) -> DataFrame:
     """P7+P16 — the wire envelope: payload serialized to one JSON string,
     exactly what the reference's ``--silent`` mode emits per line
     (binance-di.py:130-132). This is the schema-stable form used for
     multiplexing heterogeneous streams through one union."""
-    payload = [c for c in df.columns if c != symbol_col]
+    payload = [c for c in df.columns if c != "symbol"]
     return df.select(
         F.lit(stream_key).alias("stream"),
-        F.upper(F.col(symbol_col)).alias("symbol"),
+        F.upper(F.col("symbol")).alias("symbol"),
         F.to_json(F.struct(*payload)).alias("data_json"),
     )
 

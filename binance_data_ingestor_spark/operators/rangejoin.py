@@ -57,15 +57,16 @@ def _bins_of(lo: str, hi: str, bin_seconds: int) -> Column:
     return F.sequence(_bin_of(lo, bin_seconds), _bin_of(hi, bin_seconds))
 
 
-def auto_bin_seconds(
-    intervals: DataFrame, lo: str, hi: str, floor_seconds: int = 60
-) -> int:
+MIN_BIN_SECONDS = 60
+
+
+def auto_bin_seconds(intervals: DataFrame, lo: str, hi: str) -> int:
     """Pick a bin width near the average interval width (1-row aggregate).
 
     The cost model's sweet spot: bins much narrower than the typical
     interval replicate every interval many times; much wider bins
     collect unrelated rows. Average width (clamped below by
-    ``floor_seconds``) lands within a small constant of either optimum.
+    ``MIN_BIN_SECONDS``) lands within a small constant of either optimum.
     One tiny collect — at real scale this is a planning statistic, the
     same class as AQE's size estimates.
     """
@@ -73,8 +74,8 @@ def auto_bin_seconds(
         F.avg(F.unix_millis(F.col(hi)) - F.unix_millis(F.col(lo))).alias("w")
     ).collect()[0]
     if row.w is None:
-        return floor_seconds
-    return max(floor_seconds, int(row.w / 1000))
+        return MIN_BIN_SECONDS
+    return max(MIN_BIN_SECONDS, int(row.w / 1000))
 
 
 def point_in_interval_join(

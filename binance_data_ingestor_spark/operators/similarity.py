@@ -26,6 +26,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+ID_COL = "vec_id"
+VEC_COL = "embedding"
+LABEL_COL = "label"
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -74,12 +78,7 @@ def _matrix(series: pd.Series) -> np.ndarray:
 
 
 def brute_force_topk(
-    candidates: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
+    candidates: DataFrame, queries: DataFrame, *, k: int = 5
 ) -> DataFrame:
     """Exact cosine top-k for a small query set over a huge candidate set.
 
@@ -91,7 +90,7 @@ def brute_force_topk(
     Cost O(|Q|·N·d) flops at BLAS speed; one pass over the candidates.
     """
     q_pdf = queries.select(
-        F.col(id_col).cast("long").alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col(ID_COL).cast("long").alias("query_id"), F.col(VEC_COL).alias("q_vec")
     ).toPandas()
     q_ids = q_pdf["query_id"].to_numpy(dtype=np.int64)
     Q = _matrix(q_pdf["q_vec"])
@@ -127,7 +126,7 @@ def brute_force_topk(
     # granularity — at scale the candidate set arrives as many files,
     # and an extra exchange would just move every vector once more
     c = candidates.select(
-        F.col(id_col).cast("long").alias("neighbor_id"), F.col(vec_col).alias("c_vec")
+        F.col(ID_COL).cast("long").alias("neighbor_id"), F.col(VEC_COL).alias("c_vec")
     )
     scored = c.mapInPandas(score, "query_id long, neighbor_id long, cos_sim double")
     w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("neighbor_id"))
@@ -157,8 +156,6 @@ def lsh_topk(
     candidates: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_planes: int = 4,
     dim: int = 64,
@@ -172,16 +169,16 @@ def lsh_topk(
     # scores many pairs per row and the interpreted dot fold was paying
     # 3 dots/pair; see norm()
     q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        sign_lsh_bucket(F.col(vec_col), planes).alias("bucket"),
-        norm(F.col(vec_col)).alias("__qn"),
+        F.col(ID_COL).alias("query_id"),
+        F.col(VEC_COL).alias("q_vec"),
+        sign_lsh_bucket(F.col(VEC_COL), planes).alias("bucket"),
+        norm(F.col(VEC_COL)).alias("__qn"),
     )
     c = candidates.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        sign_lsh_bucket(F.col(vec_col), planes).alias("bucket"),
-        norm(F.col(vec_col)).alias("__cn"),
+        F.col(ID_COL).alias("neighbor_id"),
+        F.col(VEC_COL).alias("c_vec"),
+        sign_lsh_bucket(F.col(VEC_COL), planes).alias("bucket"),
+        norm(F.col(VEC_COL)).alias("__cn"),
     )
     scored = (
         c.join(F.broadcast(q), "bucket")
@@ -215,12 +212,7 @@ def _centroid_sims(vec_col: Column, cents: list[list[float]]) -> Column:
 
 
 def assign_cells(
-    df: DataFrame,
-    cents: list[list[float]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    out_id: str = "vec_id",
+    df: DataFrame, cents: list[list[float]], *, out_id: str = "vec_id"
 ) -> DataFrame:
     """Nearest-centroid cell assignment: one Arrow-batched GEMM against
     the (tiny) centroid matrix. Returns (out_id, cell, vec). Argmax
@@ -246,15 +238,13 @@ def assign_cells(
             )
 
     return df.select(
-        F.col(id_col).cast("long").alias(out_id), F.col(vec_col).alias("vec")
+        F.col(ID_COL).cast("long").alias(out_id), F.col(VEC_COL).alias("vec")
     ).mapInPandas(assign, f"{out_id} long, cell int, vec array<float>")
 
 
 def semantic_dedup(
     df: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     threshold: float = 0.4,
     n_centroids: int = 8,
     dim: int = 64,
@@ -274,8 +264,7 @@ def semantic_dedup(
     qualifying lower id.
     """
     thr = float(threshold)
-    cells = assign_cells(df, centroids(dim, n_centroids, seed),
-                         id_col=id_col, vec_col=vec_col)
+    cells = assign_cells(df, centroids(dim, n_centroids, seed))
 
     def prune(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
@@ -311,8 +300,6 @@ def ivf_topk(
     candidates: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_centroids: int = 8,
     n_probe: int = 2,
@@ -331,14 +318,14 @@ def ivf_topk(
     query-side probe scoring stays in column expressions (|Q| is small).
     """
     cents = centroids(dim, n_centroids, seed)
-    c = assign_cells(
-        candidates, cents, id_col=id_col, vec_col=vec_col, out_id="neighbor_id"
-    ).withColumnRenamed("vec", "c_vec")
+    c = assign_cells(candidates, cents, out_id="neighbor_id").withColumnRenamed(
+        "vec", "c_vec"
+    )
 
-    q_sims = _centroid_sims(F.col(vec_col), cents)
+    q_sims = _centroid_sims(F.col(VEC_COL), cents)
     q_cells = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
+        F.col(ID_COL).alias("query_id"),
+        F.col(VEC_COL).alias("q_vec"),
         F.posexplode(q_sims).alias("cell", "sim"),
     )
     # probe ranking on 6-dp-rounded sims (cell asc tie-break) — keeps the
@@ -393,11 +380,7 @@ def codebooks(
 
 
 def pq_encode(
-    df: DataFrame,
-    books: list[list[list[float]]],
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    df: DataFrame, books: list[list[list[float]]], *, vec_col: str = "embedding"
 ) -> DataFrame:
     """Product-quantization encode: each vector → m small codes (one
     byte each at n_codes ≤ 256), the nearest codebook centroid per
@@ -429,7 +412,7 @@ def pq_encode(
             )
 
     return df.select(
-        F.col(id_col).cast("long").alias("vec_id"), F.col(vec_col).alias("vec")
+        F.col(ID_COL).cast("long").alias("vec_id"), F.col(vec_col).alias("vec")
     ).mapInPandas(encode, "vec_id long, codes array<int>")
 
 
@@ -437,14 +420,11 @@ def pq_topk(
     candidates: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     m: int = 8,
     n_codes: int = 16,
     dim: int = 64,
     seed: int = 11,
-    books: list[list[list[float]]] | None = None,
 ) -> DataFrame:
     """PQ approximate top-k via asymmetric distance computation (ADC).
 
@@ -463,12 +443,12 @@ def pq_topk(
     trade lives in (m, n_codes); the scan cost is O(N·m) regardless of
     dim.
     """
-    books = books if books is not None else codebooks(dim, m, n_codes, seed)
+    books = codebooks(dim, m, n_codes, seed)
     B = [np.array(b, dtype=np.float64) for b in books]
     ds = dim // m
 
     q_pdf = queries.select(
-        F.col(id_col).cast("long").alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col(ID_COL).cast("long").alias("query_id"), F.col(VEC_COL).alias("q_vec")
     ).toPandas()
     q_ids = q_pdf["query_id"].to_numpy(dtype=np.int64)
     Q = _matrix(q_pdf["q_vec"])
@@ -484,7 +464,7 @@ def pq_topk(
         )
     tables = np.floor(ftab * 1e6 + 0.5).astype(np.int64)
 
-    encoded = pq_encode(candidates, books, id_col=id_col, vec_col=vec_col)
+    encoded = pq_encode(candidates, books)
 
     def scan(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         best: dict[int, list[tuple[int, int]]] = {int(q): [] for q in q_ids}
@@ -524,14 +504,7 @@ def pq_topk(
     )
 
 
-def cosine_neardup_pairs(
-    df: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.9,
-    n_blocks: int | None = None,
-) -> DataFrame:
+def cosine_neardup_pairs(df: DataFrame, *, threshold: float = 0.9) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos ≥ t).
 
     Exact all-pairs via distributed block matrix product: vectors are
@@ -543,14 +516,14 @@ def cosine_neardup_pairs(
     makes the quadratic term approximate-but-linear.
     """
     spark = df.sparkSession
-    nb = n_blocks or max(4, int(spark.sparkContext.defaultParallelism ** 0.5 * 2))
+    nb = max(4, int(spark.sparkContext.defaultParallelism ** 0.5 * 2))
     thr = float(threshold)
 
     packed = (
         df.select(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(nb)).alias("block_id"),
+            F.pmod(F.xxhash64(F.col(ID_COL)), F.lit(nb)).alias("block_id"),
             F.struct(
-                F.col(id_col).cast("long").alias("vid"), F.col(vec_col).alias("vec")
+                F.col(ID_COL).cast("long").alias("vid"), F.col(VEC_COL).alias("vec")
             ).alias("r"),
         )
         .groupBy("block_id")
@@ -592,9 +565,7 @@ def cosine_neardup_pairs(
     return pairs.mapInPandas(compute, "id_a long, id_b long, cos_sim double")
 
 
-def int8_quantize(
-    df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
+def int8_quantize(df: DataFrame) -> DataFrame:
     """Symmetric per-vector int8 quantization with an exact error
     certificate — the embedding-compression step before an ANN index
     build (4× smaller than float32, 8× smaller than the float64 PQ
@@ -613,12 +584,12 @@ def int8_quantize(
     ``scale`` is one IEEE division, ``max_abs_err`` a max (order-free)
     of identically-computed doubles, ``sum_codes`` an exact integer.
     """
-    v = _as_double(F.col(vec_col))
+    v = _as_double(F.col(VEC_COL))
     scale = F.nullif(
         F.array_max(F.transform(v, F.abs)) / F.lit(127.0), F.lit(0.0)
     )
     d = df.select(
-        F.col(id_col), v.alias("_v"), F.size(vec_col).alias("n_dims"), scale.alias("scale")
+        F.col(ID_COL), v.alias("_v"), F.size(VEC_COL).alias("n_dims"), scale.alias("scale")
     )
     codes = F.transform(
         F.col("_v"), lambda x: F.floor(x / F.col("scale") + F.lit(0.5)).cast("long")
@@ -630,7 +601,7 @@ def int8_quantize(
         )
     )
     return d.select(
-        id_col,
+        ID_COL,
         "n_dims",
         "scale",
         F.aggregate(
@@ -640,14 +611,12 @@ def int8_quantize(
     )
 
 
+ROUND_DP = 6
+NEIGHBOR_TAPS = 8
+
+
 def closest_pairs_exact(
-    df: DataFrame,
-    *,
-    id_col: str,
-    feature_cols: list[str],
-    k: int,
-    round_dp: int = 6,
-    neighbor_taps: int = 8,
+    df: DataFrame, *, id_col: str, feature_cols: list[str], k: int
 ) -> DataFrame:
     """EXACT k closest pairs (squared euclidean, deterministic
     (dist2, id_a, id_b) ordering) WITHOUT an all-pairs product —
@@ -663,7 +632,7 @@ def closest_pairs_exact(
     same planning-statistic class as ``rangejoin.auto_bin_seconds``):
 
     1. **Bound**: rank rows by p via the bucket-offset two-pass rank
-       (fully parallel), pair each row with its ``neighbor_taps``
+       (fully parallel), pair each row with its ``NEIGHBOR_TAPS``
        following rank-neighbors through a bounded explode + equi-join
        on rank (≈ taps·n candidate pairs, never n²), and collect the
        k-th smallest candidate distance — an upper bound on the true
@@ -678,7 +647,7 @@ def closest_pairs_exact(
        matched, while every excluded pair is strictly farther than the
        k-th — so TakeOrdered(k) over the exact distances is the true
        answer. The radius carries conservative padding (relative 1e-9,
-       absolute 1e-12, plus 10^-round_dp for the output rounding) so
+       absolute 1e-12, plus 10^-ROUND_DP for the output rounding) so
        float wobble can only ADD candidates, never drop a true pair.
 
     Scale: the shuffles are the rank pass, the taps equi-join, and the
@@ -723,7 +692,7 @@ def closest_pairs_exact(
         bucket=F.col("__rb"),
         rank_col="__rk",
     ).drop("__rb")
-    taps = min(neighbor_taps, n - 1)
+    taps = min(NEIGHBOR_TAPS, n - 1)
     left = ranked.filter(F.col("__rk") < n).select(
         F.col("__id").alias("id_a"),
         *[F.col(c).alias(f"__a_{c}") for c in feature_cols],
@@ -741,13 +710,13 @@ def closest_pairs_exact(
     )
     top = (
         left.join(right, "__rk_b")
-        .select(F.round(dist2, round_dp).alias("__d2"))
+        .select(F.round(dist2, ROUND_DP).alias("__d2"))
         .orderBy("__d2")
         .limit(k)
         .collect()
     )
     if len(top) >= k:
-        r2_bound = float(top[-1]["__d2"]) + 10.0 ** (-round_dp)
+        r2_bound = float(top[-1]["__d2"]) + 10.0 ** (-ROUND_DP)
     else:
         spans = s.agg(
             *[(F.max(c) - F.min(c)).alias(f"__sp_{c}") for c in feature_cols]
@@ -777,7 +746,7 @@ def closest_pairs_exact(
     return (
         a.join(b, "__jb")
         .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", F.round(dist2, round_dp).alias("dist2"))
+        .select("id_a", "id_b", F.round(dist2, ROUND_DP).alias("dist2"))
         .orderBy(F.asc("dist2"), F.asc("id_a"), F.asc("id_b"))
         .limit(k)
     )
@@ -794,7 +763,6 @@ def quantize_micro(M: np.ndarray) -> np.ndarray:
 def pq_fit_micro(
     df: DataFrame,
     *,
-    vec_col: str = "embedding",
     m: int = 8,
     n_codes: int = 16,
     dim: int = 64,
@@ -828,7 +796,7 @@ def pq_fit_micro(
         quantize_micro(np.array(b, dtype=np.float64))
         for b in codebooks(dim, m, n_codes, seed)
     ]
-    vecs = df.select(F.col(vec_col).alias("vec"))
+    vecs = df.select(F.col(VEC_COL).alias("vec"))
 
     for _ in range(iters):
         B = [b.copy() for b in books]
@@ -878,8 +846,6 @@ def ivfpq_topk(
     candidates: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     n_centroids: int = 8,
     n_probe: int = 2,
@@ -909,13 +875,13 @@ def ivfpq_topk(
     B = [np.array(b, dtype=np.float64) for b in books]
     ds = dim // m
 
-    cells = assign_cells(candidates, cents, id_col=id_col, vec_col=vec_col)
-    encoded = pq_encode(cells, books, id_col="vec_id", vec_col="vec")
+    cells = assign_cells(candidates, cents)
+    encoded = pq_encode(cells, books, vec_col="vec")
     index = encoded.join(cells.select("vec_id", "cell"), "vec_id")
 
-    q_sims = _centroid_sims(F.col(vec_col), cents)
+    q_sims = _centroid_sims(F.col(VEC_COL), cents)
     q_cells = queries.select(
-        F.col(id_col).alias("query_id"),
+        F.col(ID_COL).alias("query_id"),
         F.posexplode(q_sims).alias("cell", "sim"),
     )
     wp = W.partitionBy("query_id").orderBy(
@@ -928,7 +894,7 @@ def ivfpq_topk(
     )
 
     q_pdf = queries.select(
-        F.col(id_col).cast("long").alias("query_id"), F.col(vec_col).alias("q_vec")
+        F.col(ID_COL).cast("long").alias("query_id"), F.col(VEC_COL).alias("q_vec")
     ).toPandas()
     q_ids = q_pdf["query_id"].to_numpy(dtype=np.int64)
     Q = _matrix(q_pdf["q_vec"])
@@ -981,13 +947,7 @@ def ivfpq_topk(
 
 
 def hard_negative_topk(
-    candidates: DataFrame,
-    queries: DataFrame,
-    *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    k: int = 5,
+    candidates: DataFrame, queries: DataFrame, *, k: int = 5
 ) -> DataFrame:
     """Hard-negative mining for contrastive training: for each anchor
     (query), the k most-similar candidates with a DIFFERENT label —
@@ -1006,9 +966,9 @@ def hard_negative_topk(
     of relying on a fixture-specific rank-boundary margin.
     """
     q_pdf = queries.select(
-        F.col(id_col).cast("long").alias("query_id"),
-        F.col(vec_col).alias("q_vec"),
-        F.col(label_col).cast("int").alias("q_label"),
+        F.col(ID_COL).cast("long").alias("query_id"),
+        F.col(VEC_COL).alias("q_vec"),
+        F.col(LABEL_COL).cast("int").alias("q_label"),
     ).toPandas()
     q_ids = q_pdf["query_id"].to_numpy(dtype=np.int64)
     q_labels = q_pdf["q_label"].to_numpy(dtype=np.int64)
@@ -1050,9 +1010,9 @@ def hard_negative_topk(
         )
 
     c = candidates.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        F.col(label_col).cast("int").alias("n_label"),
+        F.col(ID_COL).cast("long").alias("neighbor_id"),
+        F.col(VEC_COL).alias("c_vec"),
+        F.col(LABEL_COL).cast("int").alias("n_label"),
     )
     scored = c.mapInPandas(
         score, "query_id long, neighbor_id long, neg_label int, cos_sim double"
@@ -1071,14 +1031,7 @@ def hard_negative_topk(
     )
 
 
-def pca_project(
-    df: DataFrame,
-    *,
-    k: int = 2,
-    dims: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def pca_project(df: DataFrame, *, k: int = 2, dims: int = 8) -> DataFrame:
     """Project the first ``dims`` embedding coordinates onto their top-k
     principal components — the consumer of q92's covariance sufficient
     statistic.
@@ -1099,13 +1052,13 @@ def pca_project(
     eigenvector is canonicalized to make its largest-|coordinate| entry
     positive (ties broken by lowest index); eigenvalues emit in
     decreasing order. Raises on empty input and on a degenerate top-k
-    spectrum. Returns (id_col, pc1…pck).
+    spectrum. Returns (vec_id, pc1…pck).
     """
     d = [
-        F.element_at(vec_col, i + 1).cast("double").alias(f"__d{i}")
+        F.element_at(VEC_COL, i + 1).cast("double").alias(f"__d{i}")
         for i in range(dims)
     ]
-    base = df.select(F.col(id_col), *d)
+    base = df.select(F.col(ID_COL), *d)
     stats = base.agg(
         F.count("*").alias("__n"),
         *[F.avg(f"__d{i}").alias(f"m{i}") for i in range(dims)],
@@ -1156,17 +1109,10 @@ def pca_project(
         ).alias(f"pc{c + 1}")
         for c, v in enumerate(comps)
     ]
-    return base.select(id_col, *cols)
+    return base.select(ID_COL, *cols)
 
 
-def cell_loo_knn(
-    cells: DataFrame,
-    *,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "vec",
-    label_col: str = "label",
-) -> DataFrame:
+def cell_loo_knn(cells: DataFrame, *, k: int = 5) -> DataFrame:
     """Per-cell leave-one-out k-nearest-neighbor labels: for every
     vector, the labels of its ≤k nearest cell-mates by cosine.
 
@@ -1184,16 +1130,16 @@ def cell_loo_knn(
     """
 
     def cell_knn(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(id_col).reset_index(drop=True)
+        pdf = pdf.sort_values(ID_COL).reset_index(drop=True)
         n = len(pdf)
         if n < 2:
             return pd.DataFrame(
                 columns=["aid", "a_label", "b_label", "rk"]
             ).astype({"aid": "int64", "a_label": "int32",
                       "b_label": "int32", "rk": "int32"})
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        labels = pdf[label_col].to_numpy(dtype=np.int64)
-        M = _matrix(pdf[vec_col])
+        ids = pdf[ID_COL].to_numpy(dtype=np.int64)
+        labels = pdf[LABEL_COL].to_numpy(dtype=np.int64)
+        M = _matrix(pdf["vec"])
         norms = np.sqrt((M * M).sum(axis=1))
         S = np.round((M @ M.T) / np.outer(norms, norms), 6)
         np.fill_diagonal(S, -np.inf)  # leave-one-out: never self
@@ -1221,7 +1167,7 @@ def cell_loo_knn(
     )
 
 
-def sign_signature(vec_col: str = "embedding") -> tuple[Column, Column]:
+def sign_signature() -> tuple[Column, Column]:
     """Sign-bit binary signature of a 64-dim embedding, packed into two
     unsigned 32-bit words carried in BIGINTs (``lo`` = dims 1-32,
     ``hi`` = dims 33-64).
@@ -1237,7 +1183,7 @@ def sign_signature(vec_col: str = "embedding") -> tuple[Column, Column]:
     def word(lo_bit: int, hi_bit: int) -> Column:
         return F.expr(
             f"aggregate(sequence({lo_bit}, {hi_bit}), 0L, (acc, i) -> "
-            f"acc + IF(element_at({vec_col}, i + 1) > 0, "
+            f"acc + IF(element_at({VEC_COL}, i + 1) > 0, "
             f"shiftleft(1L, i - {lo_bit}), 0L))"
         )
 
@@ -1251,8 +1197,6 @@ def hamming_topk(
     candidates: DataFrame,
     queries: DataFrame,
     *,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 5,
     max_probes: int = HAMMING_MAX_PROBES,
 ) -> DataFrame:
@@ -1273,16 +1217,16 @@ def hamming_topk(
     over the 16-byte/row signature table instead of one pass that
     buffers per-task top-k state.
     """
-    lo, hi = sign_signature(vec_col)
+    lo, hi = sign_signature()
     sig = candidates.select(
-        F.col(id_col).cast("long").alias("neighbor_id"),
+        F.col(ID_COL).cast("long").alias("neighbor_id"),
         lo.alias("clo"),
         hi.alias("chi"),
     ).localCheckpoint(eager=False)  # 24 B/row; feeds both passes
 
     probes = (
         queries.select(
-            F.col(id_col).cast("long").alias("query_id"),
+            F.col(ID_COL).cast("long").alias("query_id"),
             lo.alias("qlo"),
             hi.alias("qhi"),
         )

@@ -26,13 +26,12 @@ def salted_join(
     on: str,
     salt_buckets: int = 8,
     how: str = "inner",
-    scatter_cols: list[str] | None = None,
 ) -> DataFrame:
     """Join `large` to `small` on column `on`, de-skewing hot keys.
 
     The large side scatters each row into one of `salt_buckets` buckets
-    by hashing `scatter_cols` (default: all non-key columns); the small
-    side is replicated into every bucket. The join key becomes
+    by hashing all its non-key columns; the small side is replicated
+    into every bucket. The join key becomes
     (key, bucket), so a hot key's rows spread over `salt_buckets`
     shuffle partitions instead of one.
 
@@ -43,7 +42,7 @@ def salted_join(
     """
     if how not in ("inner", "left", "left_outer", "left_semi", "left_anti"):
         raise ValueError(f"salted_join does not support how={how!r}")
-    scatter = scatter_cols or [c for c in large.columns if c != on]
+    scatter = [c for c in large.columns if c != on]
     if not scatter:
         raise ValueError("need at least one non-key column to scatter on")
     salted_large = large.withColumn(

@@ -116,7 +116,7 @@ def ks_2sample(
     )
 
 
-def kaplan_meier(subjects: DataFrame, *, t_col: str = "t", event_col: str = "died") -> DataFrame:
+def kaplan_meier(subjects: DataFrame) -> DataFrame:
     """Kaplan-Meier survival curve from (duration, event) subjects.
 
     One subjects-sized shuffle (groupBy duration) does the heavy
@@ -138,7 +138,7 @@ def kaplan_meier(subjects: DataFrame, *, t_col: str = "t", event_col: str = "die
     import math
     from decimal import ROUND_HALF_UP, Decimal
 
-    t, e = F.col(t_col), F.col(event_col)
+    t, e = F.col("t"), F.col("died")
     # NULL semantics, pinned BEFORE the driver-side fold (Python < and
     # sorted() raise on None where the old SQL-window form silently
     # NULL-propagated): a NULL duration carries no timepoint — dropped;

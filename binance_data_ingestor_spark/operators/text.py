@@ -16,8 +16,13 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# small English function-word list for the language heuristic
+# the documents table's text and id columns
+TEXT_COL = "text"
+ID_COL = "doc_id"
+# small English function-word list for the language heuristic, and the
+# share of a document's tokens above which it is guessed English
 EN_STOPWORDS = ("the", "a", "of", "to", "and", "in", "is", "it", "for", "on")
+EN_STOPWORD_RATIO = 0.08
 
 
 def tokens(col: Column | str) -> Column:
@@ -33,16 +38,16 @@ def distinct_token_count(col: Column | str) -> Column:
     return F.size(F.array_distinct(tokens(col)))
 
 
-def stopword_count(col: Column | str, stopwords: tuple[str, ...] = EN_STOPWORDS) -> Column:
-    return F.size(F.filter(tokens(col), lambda t: t.isin(*stopwords)))
+def stopword_count(col: Column | str) -> Column:
+    return F.size(F.filter(tokens(col), lambda t: t.isin(*EN_STOPWORDS)))
 
 
-def lang_guess(col: Column | str, threshold: float = 0.08) -> Column:
+def lang_guess(col: Column | str) -> Column:
     """n-gram-free language ID heuristic: English function-word density.
     (Real pipelines plug a fastText-style model in as a Pandas UDF; the
     heuristic keeps the operator UDF-free and oracle-checkable.)"""
     ratio = stopword_count(col) / token_count(col)
-    return F.when(ratio > threshold, F.lit("en")).otherwise(F.lit("unknown"))
+    return F.when(ratio > EN_STOPWORD_RATIO, F.lit("en")).otherwise(F.lit("unknown"))
 
 
 def normalized_text(col: Column | str) -> Column:
@@ -66,11 +71,11 @@ BPE_ALPHA_PATTERN = r" ?[A-Za-z]+"
 BPE_NUM_PATTERN = r" ?[0-9]+"
 
 
-def bpe_token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
+def bpe_token_stats(df: DataFrame) -> DataFrame:
     """Token counting with a BPE-ish regex pre-tokenizer (the unit a
     byte-pair encoder would merge within). Pure codegen: one
     regexp_extract_all per class, no Python."""
-    t = F.col(text_col)
+    t = F.col(TEXT_COL)
     # idx=0: whole-match extraction (the patterns have no capture groups)
     return (
         df.withColumn("n_bpe_pieces", F.size(F.regexp_extract_all(t, F.lit(BPE_SPLIT_PATTERN), 0)))
@@ -86,9 +91,7 @@ RH_MOD = 1_000_000_007
 RH_WINDOW = 8
 
 
-def rolling_hash_signature(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", w: int = RH_WINDOW
-) -> DataFrame:
+def rolling_hash_signature(df: DataFrame) -> DataFrame:
     """Document fingerprint via Rabin-Karp rolling hash (winnowing-lite).
 
     h_k = Σ_j cp(t[k+j])·B^(w-1-j) mod M over every length-w character
@@ -97,7 +100,10 @@ def rolling_hash_signature(
     sliding dot product vectorized; nothing about it is sequential
     Python per character.
     """
-    pows = np.array([pow(RH_BASE, w - 1 - j, RH_MOD) for j in range(w)], dtype=np.int64)
+    pows = np.array(
+        [pow(RH_BASE, RH_WINDOW - 1 - j, RH_MOD) for j in range(RH_WINDOW)],
+        dtype=np.int64,
+    )
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from numpy.lib.stride_tricks import sliding_window_view
@@ -109,10 +115,11 @@ def rolling_hash_signature(
                 cps = np.frombuffer(
                     text.encode("utf-32-le"), dtype=np.uint32
                 ).astype(np.int64)
-                if cps.size < w:
+                if cps.size < RH_WINDOW:
                     continue
                 # windows·pows < 1114112·131^7·8 — compute mod M per term
-                terms = (sliding_window_view(cps, w) * (pows % RH_MOD)) % RH_MOD
+                windows = sliding_window_view(cps, RH_WINDOW)
+                terms = (windows * (pows % RH_MOD)) % RH_MOD
                 hashes = terms.sum(axis=1) % RH_MOD
                 ids.append(vid)
                 mins.append(int(hashes.min()))
@@ -120,40 +127,33 @@ def rolling_hash_signature(
             yield pd.DataFrame({"doc_id": ids, "min_hash": mins, "n_windows": counts})
 
     return df.select(
-        F.col(id_col).cast("long").alias("__id"), F.col(text_col).alias("__text")
+        F.col(ID_COL).cast("long").alias("__id"), F.col(TEXT_COL).alias("__text")
     ).mapInPandas(kernel, "doc_id long, min_hash long, n_windows long")
 
 
-def rolling_hash_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = RH_WINDOW,
-) -> str:
+def rolling_hash_sql(table: str = "documents") -> str:
     """DuckDB oracle for :func:`rolling_hash_signature` — the naive
     O(n·w) expansion of the same polynomial, exact BIGINT arithmetic."""
     terms = " + ".join(
-        f"CAST(ord(substring({text_col}, k + {j + 1}, 1)) AS BIGINT) * "
-        f"{pow(RH_BASE, w - 1 - j, RH_MOD)} % {RH_MOD}"
-        for j in range(w)
+        f"CAST(ord(substring(text, k + {j + 1}, 1)) AS BIGINT) * "
+        f"{pow(RH_BASE, RH_WINDOW - 1 - j, RH_MOD)} % {RH_MOD}"
+        for j in range(RH_WINDOW)
     )
     return f"""
 WITH ks AS (
-  SELECT {id_col}, {text_col},
-         unnest(range(0, length({text_col}) - {w} + 1)) AS k
-  FROM {table} WHERE length({text_col}) >= {w}
+  SELECT doc_id, text,
+         unnest(range(0, length(text) - {RH_WINDOW} + 1)) AS k
+  FROM {table} WHERE length(text) >= {RH_WINDOW}
 ),
 hashes AS (
-  SELECT {id_col}, ({terms}) % {RH_MOD} AS h FROM ks
+  SELECT doc_id, ({terms}) % {RH_MOD} AS h FROM ks
 )
-SELECT {id_col}, min(h) AS min_hash, count(*) AS n_windows
-FROM hashes GROUP BY {id_col}
+SELECT doc_id, min(h) AS min_hash, count(*) AS n_windows
+FROM hashes GROUP BY doc_id
 """
 
 
-def rolling_hash_windows(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", w: int = RH_WINDOW
-) -> DataFrame:
+def rolling_hash_windows(df: DataFrame, w: int = RH_WINDOW) -> DataFrame:
     """ALL Rabin-Karp window hashes per doc, pre-aggregated to
     (doc_id, h, c) inside the Arrow kernel (np.unique), so the Arrow
     transfer carries one row per DISTINCT hash per doc, not one per
@@ -193,32 +193,27 @@ def rolling_hash_windows(
                 )
 
     return df.select(
-        F.col(id_col).cast("long").alias("__id"), F.col(text_col).alias("__text")
+        F.col(ID_COL).cast("long").alias("__id"), F.col(TEXT_COL).alias("__text")
     ).mapInPandas(kernel, "doc_id long, h long, c long")
 
 
-def rolling_hash_windows_sql(
-    table: str = "documents",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    w: int = RH_WINDOW,
-) -> str:
+def rolling_hash_windows_sql(w: int = RH_WINDOW) -> str:
     """DuckDB CTE body matching :func:`rolling_hash_windows` — yields
     rows (doc_id, h, c): per-doc distinct window hash + occurrence
     count, via the same naive O(n·w) polynomial expansion as
     :func:`rolling_hash_sql`."""
     terms = " + ".join(
-        f"CAST(ord(substring({text_col}, k + {j + 1}, 1)) AS BIGINT) * "
+        f"CAST(ord(substring(text, k + {j + 1}, 1)) AS BIGINT) * "
         f"{pow(RH_BASE, w - 1 - j, RH_MOD)} % {RH_MOD}"
         for j in range(w)
     )
     return f"""
-  SELECT {id_col}, h, count(*) AS c FROM (
-    SELECT {id_col}, ({terms}) % {RH_MOD} AS h
+  SELECT doc_id, h, count(*) AS c FROM (
+    SELECT doc_id, ({terms}) % {RH_MOD} AS h
     FROM (
-      SELECT {id_col}, {text_col},
-             unnest(range(0, length({text_col}) - {w} + 1)) AS k
-      FROM {table} WHERE length({text_col}) >= {w}
+      SELECT doc_id, text,
+             unnest(range(0, length(text) - {w} + 1)) AS k
+      FROM documents WHERE length(text) >= {w}
     )
   ) GROUP BY 1, 2
 """
@@ -260,9 +255,7 @@ def hash_sign_sql(dialect: str, col: str) -> str:
     return f"(1 - 2 * ({digit} % 2))"
 
 
-def repetition_features(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id", n: int = 2
-) -> DataFrame:
+def repetition_features(df: DataFrame, n: int = 2) -> DataFrame:
     """Within-document repetition scores (Gopher/C4-style quality rule):
     per doc, the fraction of duplicated word n-grams and the share of
     the single most-repeated n-gram. High values mark boilerplate,
@@ -278,7 +271,7 @@ def repetition_features(
     """
     from .partitioning import fanout
 
-    toks = fanout(df.select(F.col(id_col), tokens(text_col).alias("__tokens")))
+    toks = fanout(df.select(F.col(ID_COL), tokens(TEXT_COL).alias("__tokens")))
     t = F.col("__tokens")
     grams = F.transform(
         F.sequence(F.lit(1), F.size(t) - (n - 1)),
@@ -286,20 +279,20 @@ def repetition_features(
     )
     ex = (
         toks.filter(F.size(t) >= n)
-        .select(F.col(id_col), F.explode_outer(grams).alias("gram"))
+        .select(F.col(ID_COL), F.explode_outer(grams).alias("gram"))
     )
-    per_gram = ex.groupBy(id_col, "gram").agg(F.count("*").alias("cnt"))
-    return per_gram.groupBy(id_col).agg(
+    per_gram = ex.groupBy(ID_COL, "gram").agg(F.count("*").alias("cnt"))
+    return per_gram.groupBy(ID_COL).agg(
         F.sum("cnt").alias("n_grams"),
         F.round(F.lit(1) - F.count("*") / F.sum("cnt"), 6).alias("dup_gram_frac"),
         F.round(F.max("cnt") / F.sum("cnt"), 6).alias("top_gram_frac"),
     )
 
 
-def quality_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_features(df: DataFrame) -> DataFrame:
     """Quality-scoring feature block: length, token stats, lexical
     diversity, stopword density. Downstream filters compose on these."""
-    t = F.col(text_col)
+    t = F.col(TEXT_COL)
     n_tok = token_count(t)
     return (
         df.withColumn("n_chars_q", F.length(t))
@@ -428,13 +421,7 @@ def bpe_train(df: DataFrame, *, n_merges: int = 20) -> DataFrame:
     )
 
 
-def bpe_word_tokens(
-    words_df: DataFrame,
-    merges: list[tuple[str, str]],
-    *,
-    word_col: str = "w",
-    out_col: str = "w_tokens",
-) -> DataFrame:
+def bpe_word_tokens(words_df: DataFrame, merges: list[tuple[str, str]]) -> DataFrame:
     """Apply a trained BPE merge list (rank order) to a word column and
     attach the resulting token count — the ENCODE side of
     :func:`bpe_train`, with byte-identical merge semantics: the same
@@ -444,7 +431,7 @@ def bpe_word_tokens(
     back: encoding cost is vocab-sized, not corpus-sized.
     """
     s = F.concat(
-        F.lit(BPE_SEP), F.regexp_replace(word_col, "(.)", "$1" + BPE_SEP)
+        F.lit(BPE_SEP), F.regexp_replace("w", "(.)", "$1" + BPE_SEP)
     )
     for x, y in merges:
         s = F.replace(
@@ -453,12 +440,10 @@ def bpe_word_tokens(
             F.lit(BPE_SEP + x + y + BPE_SEP),
         )
     n_seps = F.length(s) - F.length(F.replace(s, F.lit(BPE_SEP), F.lit("")))
-    return words_df.withColumn(out_col, (n_seps - 1).cast("long"))
+    return words_df.withColumn("w_tokens", (n_seps - 1).cast("long"))
 
 
-def bpe_pair_counts(
-    df: DataFrame, *, text_col: str = "text", top_k: int = 20
-) -> DataFrame:
+def bpe_pair_counts(df: DataFrame, *, top_k: int = 20) -> DataFrame:
     """One merge step of BPE tokenizer training: the top-k most frequent
     adjacent character pairs, corpus-weighted.
 
@@ -472,7 +457,7 @@ def bpe_pair_counts(
     All counting is exact integer arithmetic; ties at the top-k boundary
     break on the pair string, so the selected set is deterministic.
     """
-    t = F.col(text_col)
+    t = F.col(TEXT_COL)
     words = df.select(F.explode(F.split(t, " ")).alias("w")).filter(
         F.length("w") > 0
     )
@@ -493,21 +478,14 @@ def bpe_pair_counts(
     )
 
 
-def bfd_pack(
-    df: DataFrame,
-    *,
-    capacity: int,
-    group_col: str = "source",
-    len_col: str = "cap_len",
-    order_cols: tuple[str, ...] = ("h", "doc_id"),
-) -> DataFrame:
+def bfd_pack(df: DataFrame, *, capacity: int, group_col: str = "source") -> DataFrame:
     """Best-fit-decreasing sequence packing, one packing domain per group.
 
     The real LLM-pretraining layout step q58's concat-and-chunk
     approximates: items sorted by length DESC are placed into the open
     bin with the SMALLEST residual that still fits (ties: lowest bin
     id); no fit opens a new bin. Deterministic by contract — the order
-    inside a length tie is `order_cols` (an md5 column + id, never
+    inside a length tie is (h, doc_id) (an md5 column + id, never
     partition order), so reruns, engines, and partitionings agree
     bin-for-bin.
 
@@ -532,13 +510,13 @@ def bfd_pack(
 
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(
-            [len_col, *order_cols], ascending=[False] + [True] * len(order_cols)
+            ["cap_len", "h", "doc_id"], ascending=[False, True, True]
         )
         group = pdf[group_col].iloc[0]
         residuals: list[int] = []   # by bin_id
         counts: list[int] = []
         open_bins: list[tuple[int, int]] = []  # sorted (residual, bin_id)
-        for ln in pdf[len_col].to_numpy():
+        for ln in pdf["cap_len"].to_numpy():
             ln = int(ln)
             i = bisect_left(open_bins, (ln, -1))
             if i < len(open_bins):

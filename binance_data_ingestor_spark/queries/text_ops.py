@@ -17,6 +17,8 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..operators.dedup import (
+    BANDS,
+    NUM_HASHES,
     _exploded_shingles,
     connected_components,
     contamination,
@@ -308,18 +310,18 @@ def q45_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _lsh_pairs3(spark, sf_dir)
 
 
-def _minhash_pair_ctes(num_hashes: int = 8, bands: int = 4) -> str:
+def _minhash_pair_ctes() -> str:
     """CTE chain ending in ``pairs (id_a, id_b)`` — shared by Q45_SQL
     and Q266_SQL so the oracle pair set is definitionally q45's."""
-    r = num_hashes // bands
+    r = NUM_HASHES // BANDS
     sig_cols = ", ".join(
-        f"min(md5(concat('{k}:', shingle))) AS mh_{k}" for k in range(num_hashes)
+        f"min(md5(concat('{k}:', shingle))) AS mh_{k}" for k in range(NUM_HASHES)
     )
     band_selects = "\n  UNION ALL ".join(
         f"SELECT doc_id, {b} AS band, concat_ws('|', "
         + ", ".join(f"mh_{b * r + i}" for i in range(r))
         + ") AS key FROM sig"
-        for b in range(bands)
+        for b in range(BANDS)
     )
     return f"""tok AS (SELECT doc_id, string_split(text, ' ') AS t FROM documents),
 sh AS (SELECT doc_id,

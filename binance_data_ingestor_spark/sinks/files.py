@@ -28,8 +28,6 @@ from pyspark.sql import types as T
 
 ROTATE_RECORDS = 100_000  # reference FILE_ROTATION_LINE_COUNT
 
-_FORMATS = {"json": "json", "csv": "csv", "parquet": "parquet", "orc": "orc"}
-
 
 def flatten_for_row_sink(df: DataFrame) -> DataFrame:
     """JSON-stringify array/struct columns (flat-record formats only)."""
@@ -40,30 +38,21 @@ def flatten_for_row_sink(df: DataFrame) -> DataFrame:
     return out
 
 
-def _writer_options(fmt: str, max_records: int):
-    opts = {"maxRecordsPerFile": str(max_records)}
-    if fmt == "csv":
-        opts["header"] = "true"
-    return opts
-
-
 def write_batch(
-    df: DataFrame,
-    output_dir: str,
-    fmt: str,
-    *,
-    partition_cols: tuple[str, ...] = ("stream", "symbol"),
-    max_records: int = ROTATE_RECORDS,
-    mode: str = "append",
+    df: DataFrame, output_dir: str, fmt: str, *, max_records: int = ROTATE_RECORDS
 ) -> None:
-    spark_fmt = _FORMATS[fmt]
+    """Append ``df`` to ``{output_dir}/{fmt}`` (fmt: json, csv, parquet
+    or orc), partitioned by whichever of (stream, symbol) it carries."""
     if fmt in ("json", "csv"):
         df = flatten_for_row_sink(df)
-    writer = df.write.format(spark_fmt).mode(mode)
-    for k, v in _writer_options(fmt, max_records).items():
-        writer = writer.option(k, v)
-    existing = set(df.columns)
-    parts = [c for c in partition_cols if c in existing]
+    writer = (
+        df.write.format(fmt)
+        .mode("append")
+        .option("maxRecordsPerFile", str(max_records))
+    )
+    if fmt == "csv":
+        writer = writer.option("header", "true")
+    parts = [c for c in ("stream", "symbol") if c in df.columns]
     if parts:
         writer = writer.partitionBy(*parts)
     writer.save(f"{output_dir}/{fmt}")

@@ -26,6 +26,8 @@ from pyspark.sql import functions as F
 
 from .files import flatten_for_row_sink
 
+PIPELINE_SIZE = 500  # XADDs per round trip
+
 
 def _default_client_factory(host: str, port: int):
     try:
@@ -37,16 +39,16 @@ def _default_client_factory(host: str, port: int):
     return redis.Redis(host=host, port=port, decode_responses=True)
 
 
-def redis_key(stream_col: str = "stream", symbol_col: str = "symbol"):
+def redis_key():
     """binance:{stream_key}:{lower(symbol)} — canonical hyphenated
     'order-book' (producer wins over the tests' 'orderbook' skew;
     SURVEY §7 hard part #5)."""
     return F.concat(
-        F.lit("binance:"), F.col(stream_col), F.lit(":"), F.lower(F.col(symbol_col))
+        F.lit("binance:"), F.col("stream"), F.lit(":"), F.lower(F.col("symbol"))
     )
 
 
-def prepare_for_redis(df: DataFrame, event_ms_col: str = "event_time") -> DataFrame:
+def prepare_for_redis(df: DataFrame) -> DataFrame:
     """Flatten payload to strings + attach redis key and idempotent ID.
 
     The sequence discriminator is a per-(key, event_ms) row_number in
@@ -56,12 +58,12 @@ def prepare_for_redis(df: DataFrame, event_ms_col: str = "event_time") -> DataFr
 
     flat = flatten_for_row_sink(df)
     key = redis_key()
-    w = W.partitionBy("stream", "symbol", event_ms_col).orderBy(*[
+    w = W.partitionBy("stream", "symbol", "event_time").orderBy(*[
         c for c in flat.columns if c not in ("stream", "symbol")
     ])
     return flat.withColumn("__redis_key", key).withColumn(
         "__redis_id",
-        F.concat_ws("-", F.col(event_ms_col).cast("string"),
+        F.concat_ws("-", F.col("event_time").cast("string"),
                     (F.row_number().over(w) - 1).cast("string")),
     )
 
@@ -71,13 +73,12 @@ def redis_writer(
     port: int = 31111,
     *,
     client_factory: Callable | None = None,
-    pipeline_size: int = 500,
 ):
     """Returns a foreachBatch(batch_df, epoch_id) callable.
 
     Scale note: the client is created PER PARTITION on the executor
     (foreachPartition), commands are pipelined — one round trip per
-    `pipeline_size` records, not per record (the reference XADDs one
+    `PIPELINE_SIZE` records, not per record (the reference XADDs one
     record per call; its consumers poll count=1 per round trip)."""
     factory = client_factory or _default_client_factory
 
@@ -101,7 +102,7 @@ def redis_writer(
                 }
                 pipe.xadd(key, fields, id=rid)
                 n += 1
-                if n % pipeline_size == 0:
+                if n % PIPELINE_SIZE == 0:
                     # raise_on_error=False: duplicate/smaller IDs from a
                     # replayed batch are rejected by Redis individually —
                     # exactly the idempotent-redelivery behavior we want.

@@ -71,14 +71,12 @@ def gen_raw_messages(
     return out
 
 
-def write_fixture_dir(
-    root: str, stream_key: str, n: int, *, files: int = 4, seed: int = 42
-) -> str:
+def write_fixture_dir(root: str, stream_key: str, n: int, *, files: int = 4) -> str:
     """Write n messages as `files` JSONL part files (for maxFilesPerTrigger
     replay). Returns the directory path."""
     d = os.path.join(root, stream_key)
     os.makedirs(d, exist_ok=True)
-    msgs = gen_raw_messages(stream_key, n, seed=seed)
+    msgs = gen_raw_messages(stream_key, n)
     per = (n + files - 1) // files
     for fi in range(files):
         chunk = msgs[fi * per:(fi + 1) * per]

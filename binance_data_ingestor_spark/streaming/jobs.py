@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from ..config import Config
 from ..operators.projections import (
     NORMALIZERS,
+    multiplex,
     parse_raw,
     with_envelope_json,
 )
@@ -51,10 +52,7 @@ def normalize_multiplexed(raw: DataFrame, streams: list[str]) -> DataFrame:
         parsed = parse_raw(branch, stream_key)
         norm = NORMALIZERS[stream_key](parsed, keep=["symbol"])
         branches.append(with_envelope_json(norm, stream_key))
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
+    return multiplex(*branches)
 
 
 class SampleLimiter:
@@ -118,12 +116,18 @@ def run_ingest(
     cfg: Config,
     *,
     checkpoint_dir: str,
-    available_now: bool = False,
     console_out=None,
     redis_client_factory=None,
 ):
     """Start the ingestion query (single foreachBatch consumer = the
-    reference's multi-format tee, S11). Returns (query, limiter)."""
+    reference's multi-format tee, S11). Returns (query, limiter).
+
+    The query runs on the default trigger until stopped: with
+    ``cfg.samples`` set the limiter stops it once every (stream, symbol)
+    pair has its cap. A replay is drained with
+    ``query.processAllAvailable()``, which returns once every frame of
+    ``cfg.replay_dir`` is committed, across as many micro-batches of
+    ``maxFramesPerBatch`` frames as that takes; then ``query.stop()``."""
     wire = normalize_multiplexed(build_source(spark, cfg), cfg.streams)
     limiter = SampleLimiter(cfg.samples, len(cfg.streams) * len(cfg.symbols))
     redis_fn = (
@@ -145,14 +149,12 @@ def run_ingest(
             redis_fn(batch_df, epoch_id)
         limiter.check_done()
 
-    writer = (
+    query = (
         wire.writeStream.foreachBatch(_consume)
         .option("checkpointLocation", f"{checkpoint_dir}/ingest")
         .queryName("binance_ingest")
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    query = writer.start()
 
     if cfg.samples is not None:
         def _stop_when_done() -> None:

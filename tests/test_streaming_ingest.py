@@ -6,11 +6,15 @@ from __future__ import annotations
 import glob
 import io
 import json
+import os
 import pickle
+import tempfile
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
 
+from binance_data_ingestor_spark import cli, session
 from binance_data_ingestor_spark.config import Config
 from binance_data_ingestor_spark.sources.binance_ws import (
     BinanceWSStreamReader,
@@ -136,8 +140,7 @@ def test_ingest_end_to_end_with_samples(spark, tmp_path):
     )
     buf = io.StringIO()
     query, limiter = run_ingest(
-        spark, cfg, checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True, console_out=buf,
+        spark, cfg, checkpoint_dir=str(tmp_path / "ckpt"), console_out=buf,
     )
     drain(query, 120)
     # --samples 2 → exactly 2 per (stream, symbol): 2 streams × 3 symbols × 2
@@ -152,6 +155,35 @@ def test_ingest_end_to_end_with_samples(spark, tmp_path):
     back = spark.read.parquet(f"{cfg.output_dir}/parquet")
     assert back.count() == 12
     assert glob.glob(f"{cfg.output_dir}/json/stream=*/symbol=*/*")
+
+
+def test_cli_replay_writes_every_frame_once(spark, tmp_path, monkeypatch):
+    # 12,000 frames: more than one micro-batch (maxFramesPerBatch 10,000),
+    # so a replay that stops after its first batch loses 2,000 of them
+    root = str(tmp_path / "fx")
+    offered = Counter()
+    for sk in ("ticker", "trades"):
+        write_fixture_dir(root, sk, 6_000, files=1)
+        with open(os.path.join(root, sk, "part-0000.jsonl")) as fh:
+            offered.update(
+                (sk, m["s"], m["E"]) for m in map(json.loads, fh)
+            )
+    assert len(offered) == 12_000 and set(offered.values()) == {1}
+    # the CLI's session and checkpoint: the test session and tmp_path
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    out = tmp_path / "out"
+    assert cli.main([
+        "--symbol", "BTCUSDT,ETHUSDT,SOLUSDT", "--load", "ticker,trades",
+        "--output", "parquet", "--output-dir", str(out), "--no-redis",
+        "--replay-dir", root, "--log", str(tmp_path / "ingest.log"),
+    ]) == 0
+    assert not spark.streams.active
+    written = Counter(
+        (r["stream"], r["symbol"], json.loads(r["data_json"])["event_time"])
+        for r in spark.read.parquet(f"{out}/parquet").collect()
+    )
+    assert written == offered
 
 
 def test_normalize_multiplexed_branch_filters(spark, tmp_path):
